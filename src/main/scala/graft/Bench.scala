@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.plans.Json
 
 /** Per-round benchmark (driver contract: ONE JSON line on stdout).
   *
@@ -21,17 +22,6 @@ import org.apache.spark.sql.functions._
   *     SPARK_GRAFT_SKIP_SCALING=1 for quick iteration.
   */
 object Bench {
-
-  /** JSON string escape for embedding error messages. */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
 
   def main(args: Array[String]): Unit = {
     // scaling's fork hunt must never push the whole bench past the
@@ -115,7 +105,7 @@ object Bench {
           Scaling.json(Scaling.pairForked(nConv = nConv, iters = iters))
         } catch { case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          s"""{"error":"${jsonEscape(msg)}"}"""
+          Json.write(Json.obj().put("error", msg))
         }
       }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Csr, CsrDirect, CsrFast, EdgeDeriver}
+import graft.operators.{CsrDirect, EdgeDeriver}
 import graft.sources.Transcripts
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
@@ -116,26 +116,6 @@ object Scaling {
       .config("spark.ui.enabled", "false")
     val s = builder.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // dev-only stage profile: wall vs summed task run/cpu time per stage —
-    // reveals which per-iteration stage stops scaling with threads
-    if (sys.env.get("SPARK_GRAFT_SCALE_PROFILE").contains("1")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val wall = (si.completionTime.getOrElse(0L) -
-            si.submissionTime.getOrElse(0L)) / 1e3
-          val m = si.taskMetrics
-          System.err.println(
-            f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d " +
-            f"wall=$wall%6.2fs run=${m.executorRunTime / 1e3}%7.2fs " +
-            f"cpu=${m.executorCpuTime / 1e9}%7.2fs " +
-            f"sRead=${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1fMB " +
-            f"sWrite=${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.1fMB " +
-            si.name.take(60))
-        }
-      })
-    }
     s
   }
 
@@ -147,12 +127,11 @@ object Scaling {
     */
   def prepEdges(nConv: Long, outDir: String): Unit = {
     // idempotent: the prep output depends only on this key (the synth
-    // params + block layout + kernel flavor), so back-to-back bench runs
+    // params + block layout), so back-to-back bench runs
     // — e.g. the driver's per-round run right after a local confirmation
     // run — reuse several minutes of untimed-but-real prep wall
     val prepKey = s"nConv=$nConv turns=${sys.env.getOrElse(
-      "SPARK_GRAFT_SCALE_TURNS", "600")} blocks=$NumBlocks kernel=${sys.env
-      .getOrElse("SPARK_GRAFT_SCALE_KERNEL", "direct")}"
+      "SPARK_GRAFT_SCALE_TURNS", "600")} blocks=$NumBlocks"
     val keyPath = java.nio.file.Paths.get(s"$outDir/prep-key.txt")
     if (java.nio.file.Files.exists(keyPath) &&
         java.nio.file.Files.readString(keyPath).trim == prepKey) {
@@ -187,21 +166,19 @@ object Scaling {
           .parquet(s"$outDir/vids")
         java.nio.file.Files.writeString(edgesKeyPath, edgesKey + "\n")
       }
-      // "direct" kernel legs load the PREPARED per-block state instead of
+      // the measured legs load the PREPARED per-block state instead of
       // rebuilding it: the routing build + tiled counting sort cost ~10
       // min at 4 threads (untimed, but it is wall-clock the whole bench
       // pays per leg), and the state is thread-count-independent because
       // the block layout is pinned across parallelism levels
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE_KERNEL", "direct") == "direct") {
-        val edges = spark.read.parquet(s"$outDir/edges")
-        val nE = edges.count()
-        val st = CsrDirect.prepareRows(spark, edges,
-          spark.read.parquet(s"$outDir/vids"), NumBlocks)
-        CsrDirect.saveState(st, s"$outDir/direct-state")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/nedges.txt"), s"$nE\n")
-        st.unpersistAll()
-      }
+      val edges = spark.read.parquet(s"$outDir/edges")
+      val nE = edges.count()
+      val st = CsrDirect.prepareRows(spark, edges,
+        spark.read.parquet(s"$outDir/vids"), NumBlocks)
+      CsrDirect.saveState(st, s"$outDir/direct-state")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/nedges.txt"), s"$nE\n")
+      st.unpersistAll()
       // written LAST: a crashed prep leaves no key, so the next run redoes
       java.nio.file.Files.writeString(keyPath, prepKey + "\n")
     } finally spark.stop()
@@ -209,9 +186,8 @@ object Scaling {
 
   /** One measured run at `cpus` threads: read-or-derive edges, build the
     * co-partitioned adjacency (all untimed prep), then time exactly `iters`
-    * power iterations — dense-array exchanges only (one per iteration on
-    * the default "direct" kernel), the irreducible communication of
-    * distributed PR.
+    * power iterations — one dense-array exchange per iteration, the
+    * irreducible communication of distributed PR.
     */
   def run(cpus: Int, nConv: Long, iters: Int, warmupIters: Int = -1): RunResult = {
     val spark = session(cpus)
@@ -229,11 +205,6 @@ object Scaling {
       // is dead, so the driver GC below lets the ContextCleaner delete the
       // prep shuffle files — tens of GB that would otherwise pin the tmpfs
       // shuffle dir (and with it, RAM) for the whole session
-      // kernel choice: "direct" (default) = CsrDirect, ONE all-to-all per
-      // iteration (rank state co-located with the out-edge owner blocks) —
-      // half the stage-barrier fixed cost of the two-exchange "fast" path,
-      // which is exactly the term the 8→32 efficiency ratio is sensitive to
-      val kernel = sys.env.getOrElse("SPARK_GRAFT_SCALE_KERNEL", "direct")
       def prep(): (Int => org.apache.spark.rdd.RDD[(Int, Array[Double])],
                    () => Unit, Long, Long) = {
         // Plans.checkpoint, not raw localCheckpoint: the edges feed a Union
@@ -243,7 +214,7 @@ object Scaling {
         // independent per-block state — load it (seconds) instead of
         // re-running the routing/sort build at this leg's thread count
         // (~10 min at local[4])
-        val preBuilt = edgesDir.filter(dir => kernel == "direct" &&
+        val preBuilt = edgesDir.filter(dir =>
           java.nio.file.Files.exists(
             java.nio.file.Paths.get(s"$dir/direct-state/meta.txt")))
         preBuilt match {
@@ -274,21 +245,12 @@ object Scaling {
         val nE = edges.count()
         // the headline operator: PR over edge-granular balanced CSR blocks —
         // hub adjacency split across blocks, so no straggler task (P15).
-        // "direct" assembles tiled PreBlocks straight from the edge rows
+        // Tiled PreBlocks are assembled straight from the edge rows
         // (prepareRows — the full Csr.Block's long adjacency/weights never
-        // materialize, which is what let assembly OOM at high density);
-        // "fast" is the two-exchange CsrFast loop. PageRankSpec asserts all
-        // kernel paths agree to 1e-12
-        if (kernel == "direct") {
-          val st = CsrDirect.prepareRows(spark, edges, dictVids, NumBlocks)
-          ((it: Int) => CsrDirect.iterate(st, 0.85, it),
-            () => st.unpersistAll(), st.n, nE)
-        } else {
-          val blocks = Csr.buildBalanced(spark, edges, numBlocks = NumBlocks)
-          val st = CsrFast.prepare(spark, blocks, dictVids, numParts = NumParts)
-          ((it: Int) => CsrFast.iterate(st, 0.85, it),
-            () => st.unpersistAll(), st.n, nE)
-        }
+        // materialize, which is what let assembly OOM at high density)
+        val st = CsrDirect.prepareRows(spark, edges, dictVids, NumBlocks)
+        ((it: Int) => CsrDirect.iterate(st, 0.85, it),
+          () => st.unpersistAll(), st.n, nE)
       }
       val tPrep0 = System.nanoTime()
       val (iterate, unpersist, nV, nE) = prep()
@@ -432,24 +394,11 @@ object Scaling {
     } finally spark.stop()
   }
 
-  /** Run the pair (cpusLo, cpusHi=4x) IN ONE JVM and report efficiency =
-    * (thrHi/thrLo) / (cpusHi/cpusLo). Quick-iteration only: NOTES.md
-    * measured a second SparkSession in the same JVM up to 4x slower —
-    * headline evidence must come from [[pairForked]].
-    */
-  def pair(cpusLo: Int = 8, cpusHi: Int = 32, nConv: Long = 400000L,
-           iters: Int = 8): (RunResult, RunResult, Double) = {
-    val lo = run(cpusLo, nConv, iters)
-    val hi = run(cpusHi, nConv, iters)
-    val eff = (lo.seconds / hi.seconds) / (cpusHi.toDouble / cpusLo)
-    (lo, hi, eff)
-  }
-
   /** One measured run in a FRESH JVM (the clean-measurement path): spawn
     * `java -cp <this classpath> graft.Scaling` with
     * SPARK_GRAFT_SCALE_CPUS set, inherit this JVM's flags (add-opens, heap),
     * parse the single-run JSON line. Each parallelism level gets its own
-    * heap/JIT — the in-JVM pair() contaminated the second run by up to 4x.
+    * heap/JIT — a second SparkSession in one JVM measured up to 4x slower.
     */
   private def fork(env: Map[String, String],
                    gcArgs: Option[Seq[String]] = None): String = {
@@ -592,15 +541,8 @@ object Scaling {
     }
     def medLoMs: Double = levelMedMs(loForks)
     def medHiMs: Double = levelMedMs(hiForks)
-    /** best-two fork-median agreement gap per level (the convergence
-      * statistic the redraw hunt stops on); +inf below 2 finite medians */
-    private def gap(rs: Seq[RunResult]): Double = {
-      val meds = rs.map(_.iterMedianMs).filterNot(_.isNaN).sorted
-      if (meds.size < 2) Double.PositiveInfinity
-      else meds(1) / meds(0) - 1.0
-    }
-    def gapLo: Double = gap(loForks)
-    def gapHi: Double = gap(hiForks)
+    def gapLo: Double = convGap(loForks)
+    def gapHi: Double = convGap(hiForks)
     def effRobust: Double = (medLoMs / medHiMs) / (cpusHi.toDouble / cpusLo)
     def effWall: Double =
       // per-ITERATION walls: with equal-wall trials the legs run different
@@ -618,6 +560,15 @@ object Scaling {
       * LOWERS the reported number; the raw ratio is emitted alongside.
       */
     def effCapped: Double = math.min(eff, 1.0)
+  }
+
+  /** Best-two fork-median agreement gap of one level (the convergence
+    * statistic the redraw hunt stops on); +inf below 2 finite medians.
+    */
+  private[graft] def convGap(rs: Seq[RunResult]): Double = {
+    val meds = rs.map(_.iterMedianMs).filterNot(_.isNaN).sorted
+    if (meds.size < 2) Double.PositiveInfinity
+    else meds(1) / meds(0) - 1.0
   }
 
   def pairForked(cpusLo: Int = 4, cpusHi: Int = 16, nConv: Long,
@@ -750,12 +701,6 @@ object Scaling {
         else Some(PairResult(loF, hiF, cpusLo, cpusHi).eff)
       val convTol =
         sys.env.getOrElse("SPARK_GRAFT_SCALE_CONV_TOL", "0.05").toDouble
-      // best-two agreement gap, +inf while a level has <2 finite medians
-      def convGap(rs: Seq[RunResult]): Double = {
-        val meds = rs.map(_.iterMedianMs).filterNot(_.isNaN).sorted
-        if (meds.size < 2) Double.PositiveInfinity
-        else meds(1) / meds(0) - 1.0
-      }
       def converged(rs: Seq[RunResult]): Boolean = convGap(rs) <= convTol
       // redraw priority: a level with NO data, then the level further
       // from converging (its min-median is the less trustworthy one)
@@ -854,9 +799,10 @@ object Scaling {
       s""""fork_trials_lo":${pr.loForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
       s""""fork_trials_hi":${pr.hiForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
       s""""forks_lo":${pr.loForks.size},"forks_hi":${pr.hiForks.size},""" +
-      // null when a level has <2 finite fork medians (gap is undefined)
-      s""""conv_gap_lo":${if (pr.gapLo.isInfinite) "null" else f"${pr.gapLo}%.4f"},""" +
-      s""""conv_gap_hi":${if (pr.gapHi.isInfinite) "null" else f"${pr.gapHi}%.4f"},""" +
+      // null when the gap is undefined: a level with <2 finite fork
+      // medians (+inf) or two zero medians (0/0 = NaN)
+      s""""conv_gap_lo":${if (!pr.gapLo.isFinite) "null" else f"${pr.gapLo}%.4f"},""" +
+      s""""conv_gap_hi":${if (!pr.gapHi.isFinite) "null" else f"${pr.gapHi}%.4f"},""" +
       s""""wall_scaling_efficiency":${f"${pr.effWall}%.3f"},""" +
       s""""protocol":"equal-wall trials (per-trial iters scaled by parallelism); median per-iteration stage time per fork, min of fork medians per level; redraws stop on best-two fork-median convergence (tol 5%), band-blind; wall = min trial normalized per iteration; headline capped at 1.0 (super-unit = lo-leg noise)",""" +
       s""""scaling_efficiency_raw":${f"${pr.eff}%.3f"},""" +
@@ -1004,13 +950,10 @@ object Scaling {
           s""""trial_secs":${jsonArr(r.trialSecs)},""" +
           s""""trial_iter_meds":${jsonArr(r.trialIterMeds, "%.1f")},""" +
           s""""iter_ms":${jsonArr(r.iterMs, "%.1f")}}""")
-      case None if sys.env.get("SPARK_GRAFT_SCALE_FORKED").contains("1") =>
+      case None =>
         val cpusLo = sys.env.getOrElse("SPARK_GRAFT_SCALE_LO", "4").toInt
         println(json(pairForked(cpusLo = cpusLo, cpusHi = 4 * cpusLo,
           nConv = nConv, iters = iters)))
-      case None =>
-        val (lo, hi, _) = pair(nConv = nConv, iters = iters)
-        println(json(PairResult(Seq(lo), Seq(hi), lo.cpus, hi.cpus)))
     }
   }
 }

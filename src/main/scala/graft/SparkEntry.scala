@@ -147,27 +147,10 @@ object SparkEntry {
       PageRank.fixedIterations(EventsGraph.edges(s, d),
           EventsGraph.vertices(s, d), 0.85, 5)
         .select(col("vid"), round(col("rank"), 9).as("rank"))),
-    "q_pagerank_csr" -> { (s, d) =>
-      // edge-granular balanced blocks (hub-splitting, P15): identical PR
-      // result as the vid-range layout, same oracle
-      val e = EventsGraph.edges(s, d)
-      Csr.pageRank(s, Csr.buildBalancedCached(s, e, NumRanges, d),
-          EventsGraph.vertices(s, d), 0.85, 5)
-        .select(col("vid"), round(col("rank"), 6).as("rank"))
-    },
-    "q_pagerank_fast" -> { (s, d) =>
-      // block-exchange RDD loop (CsrFast): zero Catalyst inside the
-      // iteration, dense-array messages over precomputed routing — must
-      // compute the exact same function as the DataFrame paths
-      val e = EventsGraph.edges(s, d)
-      graft.operators.CsrFast.pageRank(s, Csr.buildBalancedCached(s, e, NumRanges, d),
-          EventsGraph.vertices(s, d), 0.85, 5, numParts = NumRanges)
-        .select(col("vid"), round(col("rank"), 6).as("rank"))
-    },
     "q_pagerank_direct" -> { (s, d) =>
-      // single-exchange block loop (CsrDirect): rank state co-located with
-      // the out-edge owner, ONE all-to-all per iteration — must compute the
-      // exact same function as the two-exchange CsrFast path
+      // single-exchange block loop (CsrDirect) over edge-granular balanced
+      // blocks (hub-splitting, P15): rank state co-located with the
+      // out-edge owner, ONE all-to-all per iteration
       val e = EventsGraph.edges(s, d)
       graft.operators.CsrDirect.pageRank(s, Csr.buildBalancedCached(s, e, NumRanges, d),
           EventsGraph.vertices(s, d), 0.85, 5)
@@ -586,8 +569,6 @@ object SparkEntry {
          |FROM sym s JOIN rng r ON s.src = r.vid
          |GROUP BY r.range_id ORDER BY block_id""".stripMargin,
     "q_pagerank" -> PageRank.oracleSql(EC, VC, 0.85, 5, 9),
-    "q_pagerank_csr" -> PageRank.oracleSql(EC, VC, 0.85, 5, 6),
-    "q_pagerank_fast" -> PageRank.oracleSql(EC, VC, 0.85, 5, 6),
     "q_pagerank_direct" -> PageRank.oracleSql(EC, VC, 0.85, 5, 6),
     "q_csr_edge_stats" ->
       s"""WITH e_canon AS ($EC),

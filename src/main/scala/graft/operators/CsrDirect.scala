@@ -5,16 +5,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Single-exchange-per-iteration PageRank over CSR blocks — the owner-
-  * computes variant of [[CsrFast]].
-  *
-  * [[CsrFast]] is the classic row/column decomposition: ranks live in hash
-  * partitions, every iteration pays TWO exchanges (rank shares rp→block,
-  * contributions block→rp). This kernel co-locates rank state with the
-  * block that owns the vertex's out-edges (the reference's own layout: each
-  * thread owns its vertices' rank slots AND their adjacency slice,
-  * reference src/graph.c:1369-1454), so one iteration is exactly ONE
-  * exchange:
+/** Single-exchange-per-iteration PageRank over CSR blocks, in the
+  * reference's owner-computes layout: each thread owns its vertices' rank
+  * slots AND their adjacency slice (reference src/graph.c:1369-1454). Rank
+  * state lives with the block that owns the vertex's out-edges, so one
+  * iteration is exactly ONE exchange:
   *
   *   kernel+update (one stage): merge incoming contribution arrays
   *   (producer-block order — deterministic double sums), apply the damping
@@ -23,17 +18,20 @@ import org.apache.spark.sql.functions._
   *   arrays, and emit one dense double[] per consumer block via
   *   precomputed index routing.
   *
-  * Halving the stage-barrier count halves the per-iteration fixed cost —
-  * on a 1000-executor cluster that is one all-to-all per iteration instead
-  * of two, the textbook distributed PR communication lower bound for a
-  * 1-D edge partitioning. Message volume is unchanged vs [[CsrFast]]
-  * (Σ|block dst dictionaries| partial sums either way; a split vertex —
-  * hub adjacency divided across blocks, [[Csr.buildBalanced]] — receives
-  * every producer's partial at EVERY owning block, and each owner merges
-  * the identical sorted stream, so split copies agree bit-for-bit).
+  * A row/column decomposition (ranks in hash partitions) pays TWO
+  * exchanges per iteration — rank shares to the blocks, contributions
+  * back — and so twice the stage-barrier fixed cost; on a 1000-executor
+  * cluster this is one all-to-all per iteration instead of two, the
+  * textbook distributed PR communication lower bound for a 1-D edge
+  * partitioning. Message volume is Σ|block dst dictionaries| partial sums
+  * either way; a split vertex — hub adjacency divided across blocks,
+  * [[Csr.buildBalanced]] — receives every producer's partial at EVERY
+  * owning block, and each owner merges the identical sorted stream, so
+  * split copies agree bit-for-bit.
   *
-  * PageRankSpec gates all kernel paths against the same dense in-JVM
-  * oracle; q_pagerank_direct gates this one against the DuckDB oracle.
+  * PageRankSpec gates this kernel against the dense in-JVM oracle and
+  * [[PageRank.fixedIterations]]; q_pagerank_direct gates it against the
+  * DuckDB oracle.
   */
 object CsrDirect {
 
@@ -78,36 +76,49 @@ object CsrDirect {
     def nvtxs: Int = vids.length
   }
 
-  private def toPre(b: Csr.Block): PreBlock = {
-    val nE = b.adjLocal.length
-    val nTiles = (b.dstVids.length >> TileBits) + 1
+  @inline private def intWeight(w: Long): Int = {
+    require(w >= Int.MinValue && w <= Int.MaxValue,
+      s"edge weight $w exceeds Int range (CsrDirect packs weights as 4-byte ints)")
+    w.toInt
+  }
+
+  private def toPre(b: Csr.Block): PreBlock =
+    tiled(b.blockId, b.vids, b.dstVids, b.xadj, b.adjLocal, b.wgts.map(intWeight))
+
+  /** The PreBlock of one CSR slice: a stable counting sort of its edges by
+    * destination tile `adjLocal(j) >> TileBits`, walked in CSR order, plus
+    * the local weighted degrees. `wgt` is indexed like `adjLocal`.
+    */
+  private def tiled(blockId: Int, vids: Array[Long], dstVids: Array[Long],
+                    xadj: Array[Int], adjLocal: Array[Int],
+                    wgt: Array[Int]): PreBlock = {
+    val nE = adjLocal.length
+    val nTiles = (dstVids.length >> TileBits) + 1
     val pos = new Array[Int](nTiles)
     var j = 0
-    while (j < nE) { pos(b.adjLocal(j) >> TileBits) += 1; j += 1 }
+    while (j < nE) { pos(adjLocal(j) >> TileBits) += 1; j += 1 }
     var run = 0
     var t = 0
     while (t < nTiles) { val c = pos(t); pos(t) = run; run += c; t += 1 }
     val srcT = new Array[Int](nE)
     val dstT = new Array[Int](nE)
     val wT = new Array[Int](nE)
-    val wdegLoc = new Array[Long](b.nvtxs)
+    val wdegLoc = new Array[Long](vids.length)
     var i = 0
-    while (i < b.nvtxs) {
-      j = b.xadj(i)
-      while (j < b.xadj(i + 1)) {
-        val d = b.adjLocal(j)
-        val w = b.wgts(j)
-        require(w >= Int.MinValue && w <= Int.MaxValue,
-          s"edge weight $w exceeds Int range (CsrDirect packs weights as 4-byte ints)")
+    while (i < vids.length) {
+      j = xadj(i)
+      while (j < xadj(i + 1)) {
+        val d = adjLocal(j)
+        val w = wgt(j)
         wdegLoc(i) += w
         val p = pos(d >> TileBits)
         pos(d >> TileBits) = p + 1
-        srcT(p) = i; dstT(p) = d; wT(p) = w.toInt
+        srcT(p) = i; dstT(p) = d; wT(p) = w
         j += 1
       }
       i += 1
     }
-    PreBlock(b.blockId, b.vids, b.dstVids, srcT, dstT, wT, wdegLoc)
+    PreBlock(blockId, vids, dstVids, srcT, dstT, wT, wdegLoc)
   }
 
   /** PreBlock + routing:
@@ -285,52 +296,9 @@ object CsrDirect {
         val xadj = new Array[Int](degsA.length + 1)
         var i = 0
         while (i < degsA.length) { xadj(i + 1) = xadj(i) + degsA(i); i += 1 }
-        // dstVids dictionary: sorted distinct destinations
-        val sortedAdj = java.util.Arrays.copyOf(adj, nE)
-        java.util.Arrays.sort(sortedAdj)
-        var n = 0
-        i = 0
-        while (i < nE) {
-          if (n == 0 || sortedAdj(i) != sortedAdj(n - 1)) {
-            sortedAdj(n) = sortedAdj(i); n += 1
-          }
-          i += 1
-        }
-        val dstVids = java.util.Arrays.copyOf(sortedAdj, n)
-        val adjLocal = new Array[Int](nE)
-        i = 0
-        while (i < nE) {
-          adjLocal(i) = java.util.Arrays.binarySearch(dstVids, adj(i))
-          i += 1
-        }
-        // destination-tiled arrays (stable counting sort — see PreBlock)
-        val nTiles = (n >> TileBits) + 1
-        val pos = new Array[Int](nTiles)
-        var j = 0
-        while (j < nE) { pos(adjLocal(j) >> TileBits) += 1; j += 1 }
-        var run = 0
-        var t = 0
-        while (t < nTiles) { val c = pos(t); pos(t) = run; run += c; t += 1 }
-        val srcT = new Array[Int](nE)
-        val dstT = new Array[Int](nE)
-        val wT = new Array[Int](nE)
-        val wdegLoc = new Array[Long](vidsA.length)
-        i = 0
-        while (i < vidsA.length) {
-          j = xadj(i)
-          while (j < xadj(i + 1)) {
-            val d = adjLocal(j)
-            val w = wgtI(j)
-            wdegLoc(i) += w
-            val p = pos(d >> TileBits)
-            pos(d >> TileBits) = p + 1
-            srcT(p) = i; dstT(p) = d; wT(p) = w
-            j += 1
-          }
-          i += 1
-        }
+        val (dstVids, adjLocal) = Csr.localDict(adj, nE)
         out += ((curBlock,
-          PreBlock(curBlock, vidsA, dstVids, srcT, dstT, wT, wdegLoc)))
+          tiled(curBlock, vidsA, dstVids, xadj, adjLocal, wgtI)))
         curSrc = Long.MinValue
         curDeg = 0
         nE = 0
@@ -343,9 +311,7 @@ object CsrDirect {
         val b = r.getInt(0)
         val s = r.getLong(1)
         val d = r.getLong(2)
-        val w = r.getLong(3)
-        require(w >= Int.MinValue && w <= Int.MaxValue,
-          s"edge weight $w exceeds Int range (CsrDirect packs weights as 4-byte ints)")
+        val w = intWeight(r.getLong(3))
         if (b != curBlock) { closeBlock(); curBlock = b }
         if (s != curSrc) {
           if (curSrc != Long.MinValue) degs += curDeg
@@ -357,7 +323,7 @@ object CsrDirect {
           wgtI = java.util.Arrays.copyOf(wgtI, adj.length)
         }
         adj(nE) = d
-        wgtI(nE) = w.toInt
+        wgtI(nE) = w
         nE += 1
       }
       closeBlock()
@@ -375,7 +341,7 @@ object CsrDirect {
       vertices, numBlocks)
 
   /** `vertices` supplies the FULL vertex set (isolated vertices included):
-    * the damping base (1-d)/n counts them, exactly as [[Csr.prepare]] does.
+    * the damping base (1-d)/n counts them.
     * `numBlocksHint`: pass the builder's block count to skip an extra
     * assembly pass just to find max(blockId).
     */
@@ -593,8 +559,8 @@ object CsrDirect {
         }
     }
 
-  /** (vid, rank) DataFrame over ALL vertices — same contract as
-    * [[CsrFast.toRanksDf]]: isolated vertices get the damping base.
+  /** (vid, rank) DataFrame over ALL vertices: isolated vertices get the
+    * damping base.
     */
   def toRanksDf(spark: SparkSession, st: DirectState, damping: Double,
                 blockRanks: RDD[(Int, Array[Double])],
@@ -607,7 +573,9 @@ object CsrDirect {
         coalesce(col("rank"), lit((1.0 - damping) / st.n)).as("rank"))
   }
 
-  /** End-to-end wrapper, same contract as [[CsrFast.pageRank]]. */
+  /** End-to-end wrapper: blocks → `iters` iterations → (vid, rank) rows
+    * over all of `vertices`.
+    */
   def pageRank(spark: SparkSession, blocks: Dataset[Csr.Block],
                vertices: DataFrame, damping: Double = 0.85,
                iters: Int = 10): DataFrame = {

@@ -57,14 +57,17 @@ final class Checkpointer(spark: SparkSession, root: String,
     df.groupBy(spark_partition_id().as("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sortBy(_._1)
 
+  /** One compact ledger line per snapshot, keys in the order step, iter,
+    * rows, residual, wall_ms, partitions; a non-finite residual (the
+    * `write` default, and CC's) is null.
+    */
   def logMetrics(step: String, iter: Int, rows: Long,
                  residual: Double, partCounts: Seq[(Int, Long)]): Unit = {
-    val parts = partCounts.map { case (p, n) => s"""{"pid":$p,"rows":$n}""" }
-      .mkString("[", ",", "]")
-    val line = s"""{"step":"$step","iter":$iter,"rows":$rows,""" +
-      s""""residual":$residual,"wall_ms":${System.currentTimeMillis()},""" +
-      s""""partitions":$parts}""" + "\n"
-    Files.writeString(ledger, line, StandardOpenOption.CREATE,
+    val o = Json.obj().put("step", step).put("iter", iter).put("rows", rows)
+    Json.num(o, "residual", residual).put("wall_ms", System.currentTimeMillis())
+    val parts = o.putArray("partitions")
+    partCounts.foreach { case (p, n) => parts.addObject().put("pid", p).put("rows", n) }
+    Files.writeString(ledger, Json.write(o) + "\n", StandardOpenOption.CREATE,
       StandardOpenOption.APPEND)
   }
 

@@ -75,10 +75,19 @@ class CheckpointerSpec extends SparkSpec {
       hashMinBody(GraphOps.symmetrize(edgesDf(Fixtures.path8))))
     val lines = Files.readAllLines(Path.of(root, "metrics.jsonl")).asScala
     assert(lines.size == 3, "init + 2 iterations")
+    // strict parse: Jackson rejects bare NaN/Infinity and trailing tokens
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
     for (l <- lines) {
       assert(l.contains("\"step\":\"hm\"") && l.contains("\"rows\":8"))
       assert(l.contains("\"partitions\":[{"), "per-partition lineage present")
+      val node = strict.readTree(l)
+      assert(node.fieldNames().asScala.toSeq ==
+        Seq("step", "iter", "rows", "residual", "wall_ms", "partitions"), l)
     }
+    // the init snapshot carries write()'s default NaN residual: null, not NaN
+    assert(strict.readTree(lines.head).get("residual").isNull, lines.head)
+    assert(strict.readTree(lines(1)).get("residual").isNumber, lines(1))
     // early-stop on residual: converged path stops before maxIter
     val c2 = new Checkpointer(spark, tmp())
     val out = c2.iterate("hm", labels0, maxIter = 50, tol = 0.0)(

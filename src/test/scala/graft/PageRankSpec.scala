@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Csr, GraphOps, PageRank}
+import graft.operators.{Csr, CsrDirect, GraphOps, PageRank}
 
 /** PageRank vs the dense in-JVM power-iteration oracle — the north-rule bar
   * is allclose 1e-6 per vertex (BASELINE.json).
@@ -55,65 +55,37 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("CSR-kernel PageRank matches the dense oracle on both block layouts") {
-    val e = Fixtures.zipf(200)
-    val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-    val want = Oracles.pageRank(e, verts, 0.85, 8)
-    val bounds = GraphOps.edgeBalancedRanges(edgesDf(e), 4)
-    assertClose(collectRanks(
-      Csr.pageRank(spark, Csr.build(spark, edgesDf(e), bounds),
-        vertsDf(verts), 0.85, 8)), want)
-    // edge-granular layout splits hubs but must compute the same function
-    assertClose(collectRanks(
-      Csr.pageRank(spark, Csr.buildBalanced(spark, edgesDf(e), 4),
-        vertsDf(verts), 0.85, 8)), want)
-  }
-
-  test("block-exchange fast path (CsrFast) computes the same ranks") {
-    val e = Fixtures.zipf(200)
-    val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-    val want = Oracles.pageRank(e, verts, 0.85, 8)
-    val got = collectRanks(
-      graft.operators.CsrFast.pageRank(spark,
-        Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8,
-        numParts = 3))
-    assertClose(got, want)
-    // bit-exact agreement with the DataFrame CSR path (same kernel, same
-    // merge order)
-    val df = collectRanks(
-      Csr.pageRank(spark, Csr.buildBalanced(spark, edgesDf(e), 4),
-        vertsDf(verts), 0.85, 8))
-    assert(got.keySet == df.keySet)
-    got.foreach { case (v, r) =>
-      assert(math.abs(r - df(v)) <= 1e-12, s"vid $v: fast $r vs df ${df(v)}")
+    for ((name, e) <- cases) {
+      val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
+      val want = Oracles.pageRank(e, verts, 0.85, 8)
+      val bounds = GraphOps.edgeBalancedRanges(edgesDf(e), 4)
+      withClue(s"$name vid ranges: ")(assertClose(collectRanks(
+        CsrDirect.pageRank(spark, Csr.build(spark, edgesDf(e), bounds),
+          vertsDf(verts), 0.85, 8)), want))
+      // edge-granular layout splits hubs but must compute the same function
+      withClue(s"$name balanced: ")(assertClose(collectRanks(
+        CsrDirect.pageRank(spark, Csr.buildBalanced(spark, edgesDf(e), 4),
+          vertsDf(verts), 0.85, 8)), want))
     }
   }
 
   test("single-exchange path (CsrDirect) computes the same ranks") {
     for ((name, e) <- cases) {
       val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-      val want = Oracles.pageRank(e, verts, 0.85, 8)
       val got = collectRanks(
-        graft.operators.CsrDirect.pageRank(spark,
+        CsrDirect.pageRank(spark,
           Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8))
-      assertClose(got, want)
-      // bit-exact agreement with CsrFast (same kernel arithmetic, both merge
-      // contributions in producer-block order)
-      val fast = collectRanks(
-        graft.operators.CsrFast.pageRank(spark,
-          Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8,
-          numParts = 3))
-      assert(got.keySet == fast.keySet, s"$name vertex sets differ")
-      got.foreach { case (v, r) =>
-        assert(math.abs(r - fast(v)) <= 1e-12,
-          s"$name vid $v: direct $r vs fast ${fast(v)}")
-      }
+      // the DataFrame semantic reference: no dangling redistribution, so an
+      // isolated vertex holds the damping base in both engines
+      withClue(s"$name vs fixedIterations: ")(assertClose(got, collectRanks(
+        PageRank.fixedIterations(edgesDf(e), vertsDf(verts), 0.85, 8))))
       // the large-graph row-assembly path (prepareRows — no intermediate
       // Csr.Block) must produce bit-identical state, hence identical ranks
-      val st = graft.operators.CsrDirect.prepareRows(spark, edgesDf(e),
+      val st = CsrDirect.prepareRows(spark, edgesDf(e),
         vertsDf(verts), numBlocks = 4)
       val rows = collectRanks(
-        graft.operators.CsrDirect.toRanksDf(spark, st, 0.85,
-          graft.operators.CsrDirect.iterate(st, 0.85, 8), vertsDf(verts)))
+        CsrDirect.toRanksDf(spark, st, 0.85,
+          CsrDirect.iterate(st, 0.85, 8), vertsDf(verts)))
       st.unpersistAll()
       assert(rows.keySet == got.keySet, s"$name prepareRows vertex sets differ")
       rows.foreach { case (v, r) =>
@@ -126,20 +98,20 @@ class PageRankSpec extends SparkSpec {
   test("CsrDirect state save/load round-trip is bit-exact") {
     val e = Fixtures.zipf(300)
     val verts = Fixtures.vertsOf(e)
-    val st = graft.operators.CsrDirect.prepareRows(spark, edgesDf(e),
+    val st = CsrDirect.prepareRows(spark, edgesDf(e),
       vertsDf(verts), numBlocks = 4)
     val want = collectRanks(
-      graft.operators.CsrDirect.toRanksDf(spark, st, 0.85,
-        graft.operators.CsrDirect.iterate(st, 0.85, 6), vertsDf(verts)))
+      CsrDirect.toRanksDf(spark, st, 0.85,
+        CsrDirect.iterate(st, 0.85, 6), vertsDf(verts)))
     val dir = java.nio.file.Files.createTempDirectory("graft-dstate")
       .toString
-    graft.operators.CsrDirect.saveState(st, dir)
+    CsrDirect.saveState(st, dir)
     st.unpersistAll()
-    val st2 = graft.operators.CsrDirect.loadState(spark, dir)
+    val st2 = CsrDirect.loadState(spark, dir)
     assert(st2.n == st.n && st2.nBlocks == st.nBlocks)
     val got = collectRanks(
-      graft.operators.CsrDirect.toRanksDf(spark, st2, 0.85,
-        graft.operators.CsrDirect.iterate(st2, 0.85, 6), vertsDf(verts)))
+      CsrDirect.toRanksDf(spark, st2, 0.85,
+        CsrDirect.iterate(st2, 0.85, 6), vertsDf(verts)))
     st2.unpersistAll()
     assert(got == want, "loaded state must reproduce ranks bit-exactly")
   }

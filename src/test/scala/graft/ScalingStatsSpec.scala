@@ -123,5 +123,12 @@ class ScalingStatsSpec extends AnyFunSuite {
     // per-fork trial counts are emitted (short redraws auditable)
     assert(j.contains("\"fork_trials_lo\":[1,1,1]"), j)
     assert(j.contains("\"fork_trials_hi\":[1]"), j)
+    // two zero medians: 0/0 - 1 is NaN, which is null too, never bare NaN
+    val zero = PairResult(
+      loForks = Seq(fork(4, 3, Seq(0, 0, 0), 1.2), fork(4, 3, Seq(0, 0, 0), 1.2)),
+      hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3)),
+      cpusLo = 4, cpusHi = 16)
+    assert(pr.gapLo.isFinite && zero.gapLo.isNaN)
+    assert(Scaling.json(zero).contains("\"conv_gap_lo\":null"), Scaling.json(zero))
   }
 }
