@@ -130,58 +130,68 @@ object Scaling {
     // params + block layout), so back-to-back bench runs
     // — e.g. the driver's per-round run right after a local confirmation
     // run — reuse several minutes of untimed-but-real prep wall
-    val prepKey = s"nConv=$nConv turns=${sys.env.getOrElse(
-      "SPARK_GRAFT_SCALE_TURNS", "600")} blocks=$NumBlocks"
-    val keyPath = java.nio.file.Paths.get(s"$outDir/prep-key.txt")
-    if (java.nio.file.Files.exists(keyPath) &&
-        java.nio.file.Files.readString(keyPath).trim == prepKey) {
-      System.err.println(s"[scaling] prep reused ($prepKey)")
-      return
+    val maxTurns = sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
+    val prepKey = s"nConv=$nConv turns=$maxTurns blocks=$NumBlocks"
+    val reused = prepStage(java.nio.file.Paths.get(s"$outDir/prep-key.txt"),
+        prepKey) {
+      // cores override for the prep session: the per-block CSR state build
+      // runs one multi-GB assembly task per block, so at 10^9-directed-edge
+      // scale full parallelism can put 16 concurrent multi-GB tasks on the
+      // heap at once — fewer cores trade untimed prep wall for peak memory
+      val prepCpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_PREP_CPUS",
+        Runtime.getRuntime.availableProcessors().toString).toInt
+      val spark = session(prepCpus)
+      try {
+        // stage-level resume: the synth+derive of the edge/vid tables is the
+        // long half of prep (~25 min at 6M convs) and depends only on the
+        // synth params — if a previous prep crashed AFTER writing them (e.g.
+        // OOM in the state build), reuse them instead of re-deriving
+        val edgesKey = s"nConv=$nConv turns=$maxTurns"
+        val edgesReused = prepStage(
+            java.nio.file.Paths.get(s"$outDir/edges-key.txt"), edgesKey) {
+          val ts = Transcripts.synthesize(spark, nConv, maxTurns = maxTurns)
+          val dict = EdgeDeriver.vertices(ts)
+          EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))
+            .write.mode("overwrite").parquet(s"$outDir/edges")
+          dict.select(col("vid")).write.mode("overwrite")
+            .parquet(s"$outDir/vids")
+        }
+        if (edgesReused)
+          System.err.println(s"[scaling] edge tables reused ($edgesKey)")
+        // the measured legs load the PREPARED per-block state instead of
+        // rebuilding it: the routing build + tiled counting sort cost ~10
+        // min at 4 threads (untimed, but it is wall-clock the whole bench
+        // pays per leg), and the state is thread-count-independent because
+        // the block layout is pinned across parallelism levels
+        val edges = spark.read.parquet(s"$outDir/edges")
+        val nE = edges.count()
+        val st = CsrDirect.prepareRows(spark, edges,
+          spark.read.parquet(s"$outDir/vids"), NumBlocks)
+        CsrDirect.saveState(st, s"$outDir/direct-state")
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/nedges.txt"), s"$nE\n")
+        st.unpersistAll()
+      } finally spark.stop()
     }
-    // cores override for the prep session: the per-block CSR state build
-    // runs one multi-GB assembly task per block, so at 10^9-directed-edge
-    // scale full parallelism can put 16 concurrent multi-GB tasks on the
-    // heap at once — fewer cores trade untimed prep wall for peak memory
-    val prepCpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_PREP_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = session(prepCpus)
-    try {
-      val maxTurns = sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
-      // stage-level resume: the synth+derive of the edge/vid tables is the
-      // long half of prep (~25 min at 6M convs) and depends only on the
-      // synth params — if a previous prep crashed AFTER writing them (e.g.
-      // OOM in the state build), reuse them instead of re-deriving
-      val edgesKey = s"nConv=$nConv turns=$maxTurns"
-      val edgesKeyPath = java.nio.file.Paths.get(s"$outDir/edges-key.txt")
-      val haveEdges = java.nio.file.Files.exists(edgesKeyPath) &&
-        java.nio.file.Files.readString(edgesKeyPath).trim == edgesKey
-      if (haveEdges)
-        System.err.println(s"[scaling] edge tables reused ($edgesKey)")
-      else {
-        val ts = Transcripts.synthesize(spark, nConv, maxTurns = maxTurns)
-        val dict = EdgeDeriver.vertices(ts)
-        EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))
-          .write.mode("overwrite").parquet(s"$outDir/edges")
-        dict.select(col("vid")).write.mode("overwrite")
-          .parquet(s"$outDir/vids")
-        java.nio.file.Files.writeString(edgesKeyPath, edgesKey + "\n")
-      }
-      // the measured legs load the PREPARED per-block state instead of
-      // rebuilding it: the routing build + tiled counting sort cost ~10
-      // min at 4 threads (untimed, but it is wall-clock the whole bench
-      // pays per leg), and the state is thread-count-independent because
-      // the block layout is pinned across parallelism levels
-      val edges = spark.read.parquet(s"$outDir/edges")
-      val nE = edges.count()
-      val st = CsrDirect.prepareRows(spark, edges,
-        spark.read.parquet(s"$outDir/vids"), NumBlocks)
-      CsrDirect.saveState(st, s"$outDir/direct-state")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/nedges.txt"), s"$nE\n")
-      st.unpersistAll()
-      // written LAST: a crashed prep leaves no key, so the next run redoes
-      java.nio.file.Files.writeString(keyPath, prepKey + "\n")
-    } finally spark.stop()
+    if (reused) System.err.println(s"[scaling] prep reused ($prepKey)")
+  }
+
+  /** One resumable prep stage: reused (returns true, `build` not run) when
+    * `keyFile` holds `key`. Otherwise the key file is deleted BEFORE
+    * `build` starts overwriting the stage's tables and written only after
+    * `build` returns, so a crash mid-rebuild leaves no key that validates
+    * half-overwritten tables.
+    */
+  private[graft] def prepStage(keyFile: java.nio.file.Path, key: String)(
+      build: => Unit): Boolean = {
+    if (java.nio.file.Files.exists(keyFile) &&
+        java.nio.file.Files.readString(keyFile).trim == key) true
+    else {
+      java.nio.file.Files.deleteIfExists(keyFile)
+      build
+      java.nio.file.Files.writeString(keyFile, key + "\n")
+      false
+    }
   }
 
   /** One measured run at `cpus` threads: read-or-derive edges, build the

@@ -24,8 +24,12 @@ import graft.operators.GraphOps
   *   - the shared-memory mutual-match cleanup (S_cleanup_match,
   *     src/aggregate.c:282-392) becomes the J2 handshake self-join: a
   *     proposal survives only if it is reciprocated;
-  *   - after `rounds` proposal rounds, still-unmatched vertices self-match
-  *     (match_SHEM's fallback, src/aggregate.c:1582-1588).
+  *   - handshake rounds repeat until the level is unstalled (fewer than
+  *     ⅓ of its vertices unmatched, [[stalled]]), a round pairs nobody, or
+  *     `rounds` rounds have run (the reference's SHEM is one greedy pass
+  *     that matches nearly every vertex); then the still-unmatched
+  *     vertices self-match (match_SHEM's fallback,
+  *     src/aggregate.c:1582-1588).
   *
   * Output: cmap(vid, coarse) where coarse = min(vid, partner) — the fine→
   * coarse lineage join key (reference `cmap[t]`, src/graph.h:67).
@@ -36,9 +40,14 @@ object Matching {
   case object SHEM extends Scheme
   case object RM extends Scheme
 
+  /** P4 stall bound (src/aggregate.c:2049-2087): a level whose matching
+    * leaves at least ⅓ of its `nvtxs` vertices unmatched has stalled.
+    */
+  def stalled(unmatched: Long, nvtxs: Long): Boolean = unmatched >= nvtxs / 3
+
   /** Scalar-weight entry point: vertices(vid, vwgt), single cap. */
   def cmap(edges: DataFrame, vertices: DataFrame, maxVwgt: Long,
-           rounds: Int = 2): DataFrame =
+           rounds: Int = 8): DataFrame =
     cmapMC(edges, vertices.select(col("vid"), array(col("vwgt")).as("vwgts")),
       Array(maxVwgt), rounds)
 
@@ -51,11 +60,23 @@ object Matching {
     * (SHEM → RM → 2-hop → FC); without sharing, every attempt re-shuffles
     * and re-persists the full E-sized adjacency and re-aggregates degrees
     * (measured: ~30–40% of a stalled level's matching wall).
+    *
+    * `rounds` caps the handshake rounds; a run that hits the cap with the
+    * level still stalled is counted as `<scheme>_round_cap`.
     */
   def cmapMC(edges: DataFrame, vertices: DataFrame, caps: Array[Long],
-             rounds: Int = 2, scheme: Scheme = SHEM,
+             rounds: Int = 8, scheme: Scheme = SHEM,
              seed: Long = 42L, nVerts: Long = -1L,
-             symIn: DataFrame = null, degIn: DataFrame = null): DataFrame = {
+             symIn: DataFrame = null, degIn: DataFrame = null): DataFrame =
+    cmapRounds(edges, vertices, caps, rounds, scheme, seed, nVerts, symIn,
+      degIn)._1
+
+  /** [[cmapMC]] that also returns the number of handshake rounds it ran. */
+  private[graft] def cmapRounds(
+      edges: DataFrame, vertices: DataFrame, caps: Array[Long],
+      rounds: Int = 8, scheme: Scheme = SHEM, seed: Long = 42L,
+      nVerts: Long = -1L, symIn: DataFrame = null,
+      degIn: DataFrame = null): (DataFrame, Int) = {
     val ncon = caps.length
     // V-sized state (unmatched set, proposals, matched vids) broadcasts
     // against the E-sized adjacency when |V| is under the dimSide
@@ -82,7 +103,14 @@ object Matching {
       element_at(col("sw"), c + 1) + element_at(col("dw"), c + 1) <= caps(c)
     }.reduce(_ && _)
 
-    for (_ <- 1 to rounds) {
+    // rounds run while the level is stalled and the last round paired
+    // someone, up to the `rounds` cap
+    val n = if (nVerts >= 0) nVerts else unmatched.count()
+    var left = n
+    var ran = 0
+    var progress = true
+    while (ran < rounds && progress && stalled(left, n)) {
+      ran += 1
       val um = unmatched.select(col("vid"), col("vwgts"), col("deg"))
       val elig = sym
         .join(dim(um.select(col("vid").as("src"), col("vwgts").as("sw"))),
@@ -122,10 +150,15 @@ object Matching {
       val nextUnmatched = unmatched
         .join(dim(matchedVids), Seq("vid"), "left_anti")
         .persist()
-      nextUnmatched.count()
+      val nextLeft = nextUnmatched.count()
+      progress = nextLeft < left
+      left = nextLeft
       unmatched.unpersist()
       unmatched = nextUnmatched
     }
+    if (progress && stalled(left, n))
+      graft.plans.Metrics.event(s"${scheme.toString.toLowerCase}_round_cap",
+        s"$left/$n vertices unmatched after the $rounds-round cap")
     val matchedMap = pairs.select(col("u").as("vid"), col("u").as("coarse"))
       .unionByName(pairs.select(col("v").as("vid"), col("u").as("coarse")))
     val selfMap = unmatched.select(col("vid"), col("vid").as("coarse"))
@@ -135,7 +168,7 @@ object Matching {
     if (ownSym) sym.unpersist()
     unmatched.unpersist()
     graft.plans.Plans.unpersist(pairs)
-    out
+    (out, ran)
   }
 
   /** Leaf matching (M4; reference S_coarsen_match_leaves,

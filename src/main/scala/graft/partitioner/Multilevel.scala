@@ -152,13 +152,14 @@ object Multilevel {
       val symL = GraphOps.symmetrize(edges).repartition(col("src")).persist()
       val degL = symL.groupBy(col("src").as("vid"))
         .agg(count(lit(1)).as("deg"), sum(col("wgt")).as("wdeg")).persist()
-      var cmap = Matching.cmapMC(edges, vertices, caps, nVerts = nvtxs,
-        symIn = symL, degIn = degL)
+      val (shem, shemRounds) = Matching.cmapRounds(edges, vertices, caps,
+        nVerts = nvtxs, symIn = symL, degIn = degL)
+      var cmap = shem
       // P4: SHEM ineffective (self-matched ratio >= 1/3) -> rerun with RM
       val paired = cmap.filter(col("vid") =!= col("coarse")).count()
       val tShem = lap()
       var tRm = 0.0; var tHop = 0.0; var tFc = 0.0
-      if (nvtxs - 2 * paired >= nvtxs / 3) {
+      if (Matching.stalled(nvtxs - 2 * paired, nvtxs)) {
         val rm = Matching.cmapMC(edges, vertices, caps,
           scheme = Matching.RM, seed = levelSeed, nVerts = nvtxs,
           symIn = symL, degIn = degL)
@@ -171,7 +172,7 @@ object Multilevel {
         // still stalled after RM -> 2-hop augmentation (leaf/twin pairs,
         // the star/hub shape neither edge-matching scheme can coarsen)
         val best = math.max(paired, rmPaired)
-        if (nvtxs - 2 * best >= nvtxs / 3) {
+        if (Matching.stalled(nvtxs - 2 * best, nvtxs)) {
           val pre2hop = cmap
           cmap = Matching.augment2Hop(edges, vertices, cmap, caps(0),
             symIn = symL, degIn = degL)
@@ -184,7 +185,7 @@ object Multilevel {
           val selfAfter = cmap.groupBy(col("coarse"))
             .agg(count(lit(1)).as("n")).filter(col("n") === 1).count()
           tHop = lap()
-          if (selfAfter >= nvtxs / 3) {
+          if (Matching.stalled(selfAfter, nvtxs)) {
             graft.plans.Metrics.event("m3_clustering_dispatch",
               s"level ${levels.size}: $selfAfter/$nvtxs self-matched after " +
                 "SHEM+RM+2hop — falling through to FC clustering")
@@ -209,8 +210,8 @@ object Multilevel {
       symL.unpersist(); degL.unpersist() // level-shared state is dead
       val tContract = lap()
       System.err.println(f"[mlevel-prof] level=${levels.size} nvtxs=$nvtxs " +
-        f"shem=$tShem%.1fs rm=$tRm%.1fs hop2=$tHop%.1fs fc=$tFc%.1fs " +
-        f"contract=$tContract%.1fs")
+        f"shem=$tShem%.1fs shem_rounds=$shemRounds rm=$tRm%.1fs " +
+        f"hop2=$tHop%.1fs fc=$tFc%.1fs contract=$tContract%.1fs")
       ckpt.foreach(c => c.write(s"mlevel_cmap_l${levels.size}", 0, cmap))
       shrinking = cn.toDouble / nvtxs <= stopRatio
       if (cn < nvtxs) {
@@ -307,14 +308,13 @@ object Multilevel {
     // F4 restore: islands fill the parts' remaining weight headroom
     // (reference round-robins them into underweight parts,
     // src/graph.c:3271-3382) — deterministic deficit-proportional fill over
-    // the vid-ordered island sequence, no global window
-    val fullAssign = restoreIslands(spark, bestAssign, connected0, islands,
+    // the vid-ordered island sequence, no global window. Islands have no
+    // edges, so the finest level's cut is already the final cut
+    val fullAssign = restoreIslands(spark, bestAssign, finestVerts, islands,
       k, tgt, tv)
-
-    val cut = GraphOps.edgeCut(finestEdges, fullAssign)
     val scalarVerts = allVerts.select(col("vid"), wc(0).as("vwgt"))
     val imb = imbalanceTargets(fullAssign, scalarVerts, tgt, tv(0))
-    PartitionResult(fullAssign.ckpt(), cut, imb, levels.size + tailLevels)
+    PartitionResult(fullAssign, bestCut, imb, levels.size + tailLevels)
   }
 
   /** Whole-graph serial dispatch: gather the (small) graph, run the entire
@@ -431,16 +431,22 @@ object Multilevel {
 
   /** Deficit-proportional island placement: islands (vid-ordered, exact
     * bucketed cumulative weight) are cut into k contiguous runs sized by
-    * each part's weight deficit vs its target.
+    * each part's weight deficit vs its target. Returns a checkpoint
+    * (`coreAssign` itself when there are no islands).
     */
   private def restoreIslands(spark: SparkSession, coreAssign: DataFrame,
                              connected: DataFrame, islands: DataFrame,
                              k: Int, tgt: Array[Double],
                              tv: Array[Long]): DataFrame = {
-    if (islands.isEmpty) return coreAssign
+    // `islands` is an anti-join against the edge table: scan it once
     val iw = islands.select(col("vid"),
-      element_at(col("vwgts"), 1).as("deg"))
-    val totalIsland = iw.agg(sum(col("deg"))).head().getLong(0)
+      element_at(col("vwgts"), 1).as("deg")).ckpt()
+    val agg = iw.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L))).head()
+    if (agg.getLong(0) == 0L) {
+      graft.plans.Plans.unpersist(iw)
+      return coreAssign
+    }
+    val totalIsland = agg.getLong(1)
     // per-part deficit vs target on the core assignment
     val pw = coreAssign
       .join(connected.select(col("vid"),
@@ -462,7 +468,9 @@ object Multilevel {
     val islandAssign = GraphOps.cumDegByVid(iw)
       .select(col("vid"),
         GraphOps.rangeIdFor(col("cum"), cumBounds).cast("int").as("part"))
-    coreAssign.select(col("vid"), col("part").cast("int").as("part"))
-      .unionByName(islandAssign)
+    val full = coreAssign.select(col("vid"), col("part").cast("int").as("part"))
+      .unionByName(islandAssign).ckpt()
+    graft.plans.Plans.unpersist(iw)
+    full
   }
 }

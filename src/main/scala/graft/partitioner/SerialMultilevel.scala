@@ -245,12 +245,12 @@ object SerialMultilevel {
       var m = shemMatch(cur, caps, lvlSeed, random = false)
       // P4: SHEM ineffective (self-matched ≥ ⅓) → try RM, keep the better
       var paired = m.indices.count(v => m(v) != v) / 2
-      var stalled = cur.nvtxs - 2 * paired >= cur.nvtxs / 3
+      var stalled = Matching.stalled(cur.nvtxs - 2 * paired, cur.nvtxs)
       if (stalled) {
         val rm = shemMatch(cur, caps, lvlSeed + 101, random = true)
         val rmPaired = rm.indices.count(v => rm(v) != v) / 2
         if (rmPaired > paired) { m = rm; paired = rmPaired }
-        stalled = cur.nvtxs - 2 * paired >= cur.nvtxs / 3
+        stalled = Matching.stalled(cur.nvtxs - 2 * paired, cur.nvtxs)
       }
       lvlSeed += 1
       // M3 fall-through, mirroring [[Multilevel]]'s dispatch: still-stalled

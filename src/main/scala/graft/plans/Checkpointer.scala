@@ -88,7 +88,9 @@ final class Checkpointer(spark: SparkSession, root: String,
         df.write.mode("overwrite").parquet(dir(step, iter))
         spark.read.parquet(dir(step, iter))
       }
-    logMetrics(step, iter, back.count(), residual, partitionCounts(back))
+    // one job: the row count is the sum of the per-partition lineage
+    val parts = partitionCounts(back)
+    logMetrics(step, iter, parts.map(_._2).sum, residual, parts)
     back
   }
 

@@ -84,6 +84,11 @@ class CheckpointerSpec extends SparkSpec {
       val node = strict.readTree(l)
       assert(node.fieldNames().asScala.toSeq ==
         Seq("step", "iter", "rows", "residual", "wall_ms", "partitions"), l)
+      // rows is the snapshot's row count AND the sum of its partition rows
+      val frameRows = c.read("hm", node.get("iter").asInt).count()
+      val partRows = node.get("partitions").elements().asScala
+        .map(_.get("rows").asLong).sum
+      assert(node.get("rows").asLong == frameRows && partRows == frameRows, l)
     }
     // the init snapshot carries write()'s default NaN residual: null, not NaN
     assert(strict.readTree(lines.head).get("residual").isNull, lines.head)

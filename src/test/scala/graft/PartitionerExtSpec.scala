@@ -78,6 +78,24 @@ class PartitionerExtSpec extends SparkSpec {
       s"imbalance ${r.imbalance} after island restore")
   }
 
+  test("distributed result path: reported cut and imbalance recompute (F4)") {
+    // serialGraphVertices = 0 skips the whole-graph serial dispatch, so
+    // the islands go through restoreIslands and the finest-level cut is
+    // reported as the final cut
+    val (e, vids) = Fixtures.withIslands(120)
+    val k = 4
+    val v = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
+    val r = Multilevel.partitionMC(spark, edgesDf(e), v, k, ncon = 1,
+      coarsenTo0 = 40, serialGraphVertices = 0L, serialGraphEdges = 0L)
+    val parts = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
+    assert(parts.keySet == vids.toSet, "islands must be assigned too")
+    assert(r.cut == GraphOps.edgeCut(edgesDf(e), r.assign))
+    assert(r.cut == Oracles.cut(e, parts))
+    val imb = Oracles.imbalance(parts, vids.map(_ -> 1L).toMap, k)
+    assert(math.abs(r.imbalance - imb) < 1e-12,
+      s"reported ${r.imbalance}, recomputed $imb")
+  }
+
   test("refinement respects the min-weight floor") {
     val e = Fixtures.grid4x4
     val vids = Fixtures.vertsOf(e)

@@ -44,6 +44,38 @@ class PartitionerSpec extends SparkSpec {
     assert(cmap(1L) != cmap(2L), "over-cap pair must not merge")
   }
 
+  test("SHEM handshakes until the level is unstalled, then stops (P4)") {
+    // increasing weights: every vertex proposes up the path, so each round
+    // leaves exactly one mutual pair, at the heavy end — (10,11), (8,9), ...
+    val e = (0L until 11L).map(i => (i, i + 1, i + 1))
+    val vids = Fixtures.vertsOf(e)
+    def unmatched(cm: Map[Long, Long]) =
+      cm.groupBy(_._2).count(_._2.size == 1).toLong
+    val caps = Array(2L) // unit weights: only pairs fit
+    val vw = spark.createDataFrame(vids.map(v => (v, Seq(1L))))
+      .toDF("vid", "vwgts")
+    val capped0 = graft.plans.Metrics.count("shem_round_cap")
+    val two = Matching.cmapMC(edgesDf(e), vw, caps, rounds = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Matching.stalled(unmatched(two), 12L),
+      s"2 rounds leave ${unmatched(two)}/12 unmatched")
+    assert(graft.plans.Metrics.count("shem_round_cap") == capped0 + 1,
+      "a stalled level that hits the round cap is counted")
+    val (cmDf, ran) = Matching.cmapRounds(edgesDf(e), vw, caps)
+    val cm = cmDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ran == 5, s"expected 5 rounds, ran $ran")
+    assert(unmatched(cm) == 2L && !Matching.stalled(unmatched(cm), 12L))
+    assert(graft.plans.Metrics.count("shem_round_cap") == capped0 + 1)
+    // still a valid capped matching: total, pairs of 2 across real edges,
+    // coarse id = min of the pair
+    assert(cm.keySet == vids.toSet)
+    val groups = cm.groupBy(_._2).values.map(_.keys.toSeq.sorted)
+    assert(groups.forall(_.size <= 2))
+    val edgeSet = e.map(t => (t._1, t._2)).toSet
+    assert(groups.filter(_.size == 2).forall(g => edgeSet((g(0), g(1)))))
+    assert(cm.groupBy(_._2).forall { case (c, g) => g.keys.min == c })
+  }
+
   test("contraction conserves weights and drops only internal edges (A1)") {
     val e = Fixtures.zipf(150)
     val vids = Fixtures.vertsOf(e)

@@ -131,4 +131,27 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(pr.gapLo.isFinite && zero.gapLo.isNaN)
     assert(Scaling.json(zero).contains("\"conv_gap_lo\":null"), Scaling.json(zero))
   }
+
+  test("prepStage: reuse on a matching key; a rebuild drops the key first") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-prep")
+    val key = dir.resolve("edges-key.txt")
+    var builds = 0
+    assert(!Scaling.prepStage(key, "a") { builds += 1 })
+    assert(Files.readString(key).trim == "a" && builds == 1)
+    assert(Scaling.prepStage(key, "a") { builds += 1 }, "same key: reused")
+    assert(builds == 1)
+    // a rebuild for another key must not leave the old key valid while it
+    // overwrites the tables, nor a key at all if it crashes part-way
+    val crash = intercept[IllegalStateException] {
+      Scaling.prepStage(key, "b") {
+        assert(!Files.exists(key), "stale key still present mid-rebuild")
+        throw new IllegalStateException("killed mid-rebuild")
+      }
+    }
+    assert(crash.getMessage == "killed mid-rebuild")
+    assert(!Files.exists(key), "a crashed rebuild leaves no key")
+    assert(!Scaling.prepStage(key, "a") { builds += 1 })
+    assert(builds == 2 && Files.readString(key).trim == "a")
+  }
 }

@@ -197,7 +197,7 @@ object Oracles {
     edges.collect { case (s, d, w) if assign(s) != assign(d) => w }.sum
 
   def imbalance(assign: Map[Long, Int], vwgt: Map[Long, Long], k: Int): Double = {
-    val pw = assign.groupBy(_._2).map { case (p, g) => p -> g.keys.map(vwgt).sum }
+    val pw = assign.groupBy(_._2).map { case (p, g) => p -> g.keys.toSeq.map(vwgt).sum }
     pw.values.max.toDouble * k / vwgt.values.sum.toDouble
   }
 }
