@@ -48,39 +48,35 @@ object ConnectedComponents {
   }
 
   /** Full CC: returns (vid, component) with component = min vid reachable.
-    * `vertices` supplies isolated vertices (own component).
+    * `vertices` supplies isolated vertices (own component). Rounds run
+    * until the pair set repeats (residual 0.0, else 1.0) or `maxRounds`;
+    * with `ckpt`, each round is a `"cc_pairs"` snapshot and a run resumes
+    * after the newest one ([[Checkpointer.iterate]]).
     */
   def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
           maxRounds: Int = 50, ckpt: Option[Checkpointer] = None): DataFrame = {
-    var pairs = edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v")).distinct().persist()
-    var converged = false
-    var round = 0
-    var sig = signature(pairs)
-    while (!converged && round < maxRounds) {
-      val next0 = largeStar(pairs)
-      // localCheckpoint truncates the per-round lineage — without it the
-      // plan (and driver heap) grows superlinearly with rounds
-      val next = smallStar(next0).ckpt()
-      val nextSig = signature(next)
-      ckpt.foreach { c => c.write("cc_pairs", round + 1, next, Double.NaN) }
-      converged = nextSig == sig
-      sig = nextSig
-      pairs.unpersist()
-      pairs = next
-      round += 1
-    }
+    val init = edges.select(col("src").as("u"), col("dst").as("v"))
+      .filter(col("u") =!= col("v")).distinct().ckpt()
+    // the previous round's signature; recomputed from the state on resume
+    var sig = Option.empty[(Long, Long)]
+    val (pairs, _, _) =
+      Checkpointer.iterate(ckpt, "cc_pairs", init, maxRounds, tol = 0.0) { (pairs, _) =>
+        // the checkpoint truncates the per-round lineage — without it the
+        // plan (and driver heap) grows superlinearly with rounds
+        val next = smallStar(largeStar(pairs)).ckpt()
+        val prev = sig.getOrElse(signature(pairs))
+        sig = Some(signature(next))
+        (next, if (sig.contains(prev)) 0.0 else 1.0)
+      }
     // at convergence, pairs are star edges (u -> center v = min of component)
     val members = pairs.select(col("u").as("vid"), col("v").as("component"))
     val centers = pairs.select(col("v").as("vid")).distinct()
       .withColumn("component", col("vid"))
     val labeled = members.unionByName(centers)
       .groupBy(col("vid")).agg(min(col("component")).as("component"))
-    val out = vertices.select(col("vid")).distinct()
+    vertices.select(col("vid")).distinct()
       .join(labeled, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("component"), col("vid")).as("component"))
-    pairs.unpersist()
-    out
   }
 
   private def signature(pairs: DataFrame): (Long, Long) = {

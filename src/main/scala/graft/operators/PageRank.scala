@@ -15,13 +15,16 @@ import graft.plans.Checkpointer
   * hash-partitioned on `src` ONCE and cached; each iteration only shuffles
   * the small rank table to meet it, then shuffles contributions by `dst`
   * (the irreducible shuffle of distributed PR). Residual = L1 delta, logged
-  * per iteration; every iteration durably checkpointed via [[Checkpointer]].
+  * per iteration; with a [[Checkpointer]] every iteration is durable.
   */
 object PageRank {
 
   case class Result(ranks: DataFrame, iterations: Int, residual: Double)
 
-  /** Fixed-point (or fixed-iteration when tol=0 semantics not needed) PR.
+  /** Power iteration until the L1 residual is `<= tol` or `maxIter`
+    * iterations have run (`tol = 0` runs all of them). With `ckpt`, every
+    * iteration is a `"pagerank"` snapshot and a run on a root that already
+    * holds some resumes after the newest one ([[Checkpointer.iterate]]).
     * `vertices` = (vid) — the full vertex set incl. isolated vertices.
     */
   def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
@@ -42,46 +45,32 @@ object PageRank {
     adj.count() // materialize
 
     val init = verts.withColumn("rank", lit(1.0 / n))
-    var ranks = init.repartition(numParts, col("vid")).persist()
-    ranks.count()
-
-    var iter = 0
-    var residual = Double.MaxValue
-    while (iter < maxIter && residual > tol) {
-      val contribs = adj
-        .join(ranks.withColumnRenamed("vid", "src"), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(sum(col("rank") * col("share")).as("contrib"))
-      // dangling mass: vertices with no out-edges (isolated in an
-      // undirected graph) redistribute uniformly
-      val dangling = ranks.join(wdeg.withColumnRenamed("src", "vid"),
-          Seq("vid"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
-      val next = verts
-        .join(contribs, Seq("vid"), "left")
-        .select(col("vid"),
-          (lit((1 - damping) / n) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dangling / n))
-          ).as("rank"))
-        .repartition(numParts, col("vid"))
-      val nextP = next.persist()
-      residual = nextP.join(ranks.withColumnRenamed("rank", "prev"), "vid")
-        .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0)
-      ranks.unpersist()
-      ranks = ckpt match {
-        case Some(c) => val d = c.write("pagerank", iter + 1, nextP, residual)
-                        nextP.unpersist(); d.persist()
-        // truncate lineage even without a durable checkpointer: left to
-        // persist alone, the plan tree grows one join layer per iteration
-        // and every action re-renders/re-optimizes the whole stack (AQE
-        // renders explainString per replan — measured as pure driver-side
-        // string/optimizer CPU in the round-3 test-suite thread dump)
-        case None    => val d = nextP.ckpt(); nextP.unpersist(); d
+      .repartition(numParts, col("vid")).ckpt()
+    val (ranks, iters, residual) =
+      Checkpointer.iterate(ckpt, "pagerank", init, maxIter, tol) { (ranks, _) =>
+        val contribs = adj
+          .join(ranks.withColumnRenamed("vid", "src"), "src")
+          .groupBy(col("dst").as("vid"))
+          .agg(sum(col("rank") * col("share")).as("contrib"))
+        // dangling mass: vertices with no out-edges (isolated in an
+        // undirected graph) redistribute uniformly
+        val dangling = ranks.join(wdeg.withColumnRenamed("src", "vid"),
+            Seq("vid"), "left_anti")
+          .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
+        // checkpointed: left lazy, the plan grows one join layer per
+        // iteration and AQE re-renders the whole stack on every replan
+        val next = verts
+          .join(contribs, Seq("vid"), "left")
+          .select(col("vid"),
+            (lit((1 - damping) / n) +
+              lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dangling / n))
+            ).as("rank"))
+          .repartition(numParts, col("vid")).ckpt()
+        (next, next.join(ranks.withColumnRenamed("rank", "prev"), "vid")
+          .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0))
       }
-      iter += 1
-    }
     adj.unpersist(); verts.unpersist()
-    Result(ranks.select(col("vid"), col("rank")), iter, residual)
+    Result(ranks.select(col("vid"), col("rank")), iters, residual)
   }
 
   /** Fixed-iteration PR used for the DuckDB-oracle parity queries: exactly

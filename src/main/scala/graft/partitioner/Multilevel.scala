@@ -4,7 +4,6 @@ import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.GraphOps
-import graft.plans.Checkpointer
 
 /** The multilevel k-way partitioner V-cycle re-expressed as iterative
   * DataFrame joins (north rule item 3; reference S_par_partition_mlevel,
@@ -32,9 +31,9 @@ import graft.plans.Checkpointer
   * Vertex weights are multi-constraint (`ncon` weights per vertex,
   * reference src/graph.h:44); `targets` carries per-part fractions
   * (reference tpwgts) so recursive bisection can ask for uneven halves.
-  * Every level's cmap + assignment is checkpointed (the durable analogue of
-  * the reference's out-of-core level dumps, src/asyncio.c) so the V-cycle
-  * is resumable; cut/imbalance metrics are recorded per level.
+  * Level state lives in local checkpoints for one call only: unlike the
+  * reference's out-of-core level dumps (src/asyncio.c), nothing is written
+  * durably and an interrupted V-cycle starts again from the finest level.
   */
 object Multilevel {
 
@@ -48,12 +47,11 @@ object Multilevel {
   def partition(spark: SparkSession, edges0: DataFrame, vertices0: DataFrame,
                 k: Int, ubFactor: Double = 1.03, coarsenTo0: Int = 0,
                 stopRatio: Double = 0.85, seed: Long = 42L,
-                nRuns: Int = 1,
-                ckpt: Option[Checkpointer] = None): PartitionResult =
+                nRuns: Int = 1): PartitionResult =
     partitionMC(spark, edges0,
       vertices0.select(col("vid"), array(col("vwgt")).as("vwgts")),
       k, ncon = 1, ubFactor = ubFactor, coarsenTo0 = coarsenTo0,
-      stopRatio = stopRatio, seed = seed, nRuns = nRuns, ckpt = ckpt)
+      stopRatio = stopRatio, seed = seed, nRuns = nRuns)
 
   /** Multi-constraint entry point (vertices(vid, vwgts array<bigint>)).
     *
@@ -74,8 +72,7 @@ object Multilevel {
                   serialGraphVertices: Long = 50000L,
                   serialGraphEdges: Long = 2000000L,
                   serialTailVertices: Long = 200000L,
-                  serialTailEdges: Long = 8000000L,
-                  ckpt: Option[Checkpointer] = None): PartitionResult = {
+                  serialTailEdges: Long = 8000000L): PartitionResult = {
     val tgt = if (targets != null) targets else Array.fill(k)(1.0 / k)
     val coarsenTo = if (coarsenTo0 > 0) coarsenTo0 else math.max(30 * k, 200)
     // materialize both inputs ONCE (stats-free checkpoint), so the dispatch
@@ -101,7 +98,7 @@ object Multilevel {
     val eAll = allEdges.count()
     if (nAll <= serialGraphVertices && eAll <= serialGraphEdges)
       return partitionSerialWhole(spark, allEdges, allVerts, k, ncon, ubFactor,
-        coarsenTo, stopRatio, seed, nRuns, tgt, ckpt)
+        coarsenTo, stopRatio, seed, nRuns, tgt)
     // F4: degree-0 islands skip the V-cycle entirely
     val (connected0, islands) = GraphOps.splitIslands(allVerts, allEdges)
     var edges = allEdges
@@ -212,7 +209,6 @@ object Multilevel {
       System.err.println(f"[mlevel-prof] level=${levels.size} nvtxs=$nvtxs " +
         f"shem=$tShem%.1fs shem_rounds=$shemRounds rm=$tRm%.1fs " +
         f"hop2=$tHop%.1fs fc=$tFc%.1fs contract=$tContract%.1fs")
-      ckpt.foreach(c => c.write(s"mlevel_cmap_l${levels.size}", 0, cmap))
       shrinking = cn.toDouble / nvtxs <= stopRatio
       if (cn < nvtxs) {
         levels = Level(edges, vertices, cmap, nvtxs) :: levels
@@ -294,8 +290,6 @@ object Multilevel {
         System.err.println(f"[mlevel-prof] uncoarsen run=$run " +
           f"level=$levelIdx nvtxs=${lvl.nvtxs} " +
           f"refine=${(System.nanoTime() - tLvl) / 1e9}%.1fs")
-        ckpt.foreach(c => c.write(s"mlevel_assign_r${run}_l$levelIdx", 0,
-          assign, GraphOps.edgeCut(lvl.edges, assign, lvl.nvtxs).toDouble))
       }
       val cut = GraphOps.edgeCut(finestEdges, assign,
         if (levels.nonEmpty) levels.last.nvtxs else nvtxs)
@@ -327,8 +321,7 @@ object Multilevel {
                                    vertices0: DataFrame, k: Int, ncon: Int,
                                    ubFactor: Double, coarsenTo: Int,
                                    stopRatio: Double, seed: Long, nRuns: Int,
-                                   tgt: Array[Double],
-                                   ckpt: Option[Checkpointer]): PartitionResult = {
+                                   tgt: Array[Double]): PartitionResult = {
     val vArr = vertices0.select(col("vid"), col("vwgts")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
     val eArr = edges0.select(col("src"), col("dst"), col("wgt")).collect()
@@ -353,19 +346,10 @@ object Multilevel {
     val connVids = conn.map(_._1)
     val pwgt = new Array[Long](k)
     conn.indices.foreach(i => pwgt(whereConn(i)) += conn(i)._2(0))
-    // F4 restore, serial mirror of [[restoreIslands]]: islands (vid order,
-    // cumulative primary weight) cut into k contiguous runs sized by each
-    // part's weight deficit vs target
+    // F4 restore, serial mirror of [[restoreIslands]] ([[islandBounds]])
     val islWhere = new Array[Int](isl.length)
     if (isl.nonEmpty) {
-      val totalIsland = isl.map(_._2(0)).sum
-      val deficits = (0 until k).map(p =>
-        math.max(0.0, tgt(p) * tv(0) - pwgt(p)))
-      val defSum = deficits.sum
-      val shares =
-        if (defSum > 0) deficits.map(_ / defSum) else tgt.toIndexedSeq
-      val cumBounds = shares.scanLeft(0.0)(_ + _).tail
-        .map(f => math.ceil(f * totalIsland).toLong).toArray
+      val cumBounds = islandBounds(pwgt, tgt, tv(0), isl.map(_._2(0)).sum)
       var cum = 0L
       isl.indices.foreach { i =>
         cum += isl(i)._2(0)
@@ -388,7 +372,6 @@ object Multilevel {
     val assign = graft.plans.Plans.checkpoint(
       spark.createDataFrame(rows).toDF("vid", "part")
         .select(col("vid"), col("part").cast("int").as("part")))
-    ckpt.foreach(c => c.write("mlevel_serial_assign", 0, assign, cut.toDouble))
     PartitionResult(assign, cut, imb, nLevels)
   }
 
@@ -429,10 +412,24 @@ object Multilevel {
       (tgt(r.get(0).toString.toInt) * tv)).max
   }
 
+  /** The island-placement rule shared by both F4 restores: cumulative
+    * island-weight bounds that cut the vid-ordered islands into k
+    * contiguous runs, run p sized by part p's primary-weight deficit vs its
+    * target (by the targets themselves when no part is short).
+    */
+  private def islandBounds(pw: Array[Long], tgt: Array[Double], tv0: Long,
+                           totalIsland: Long): Array[Long] = {
+    val deficits = pw.indices.map(p => math.max(0.0, tgt(p) * tv0 - pw(p)))
+    val defSum = deficits.sum
+    val shares =
+      if (defSum > 0) deficits.map(_ / defSum) else tgt.toIndexedSeq
+    shares.scanLeft(0.0)(_ + _).tail
+      .map(f => math.ceil(f * totalIsland).toLong).toArray
+  }
+
   /** Deficit-proportional island placement: islands (vid-ordered, exact
-    * bucketed cumulative weight) are cut into k contiguous runs sized by
-    * each part's weight deficit vs its target. Returns a checkpoint
-    * (`coreAssign` itself when there are no islands).
+    * bucketed cumulative weight) are cut by [[islandBounds]]. Returns a
+    * checkpoint (`coreAssign` itself when there are no islands).
     */
   private def restoreIslands(spark: SparkSession, coreAssign: DataFrame,
                              connected: DataFrame, islands: DataFrame,
@@ -447,21 +444,14 @@ object Multilevel {
       return coreAssign
     }
     val totalIsland = agg.getLong(1)
-    // per-part deficit vs target on the core assignment
-    val pw = coreAssign
+    // per-part weight of the core assignment
+    val pw = new Array[Long](k)
+    coreAssign
       .join(connected.select(col("vid"),
         element_at(col("vwgts"), 1).as("w")), "vid")
       .groupBy(col("part")).agg(sum(col("w")).as("pw")).collect()
-      .map(r => (r.get(0).toString.toInt, r.getLong(1))).toMap
-    val deficits = (0 until k).map { p =>
-      math.max(0.0, tgt(p) * tv(0) - pw.getOrElse(p, 0L).toDouble)
-    }
-    val defSum = deficits.sum
-    // contiguous cumulative-weight boundaries per part (fallback: uniform)
-    val shares =
-      if (defSum > 0) deficits.map(_ / defSum) else tgt.toIndexedSeq
-    val cumBounds = shares.scanLeft(0.0)(_ + _).tail
-      .map(f => math.ceil(f * totalIsland).toLong).toArray
+      .foreach(r => pw(r.get(0).toString.toInt) = r.getLong(1))
+    val cumBounds = islandBounds(pw, tgt, tv(0), totalIsland)
     // FULL cumBounds (cum ≤ cumBounds.last == ceil(totalIsland) always
     // holds): passing .init made rangeIdFor's fallback index k-2, so part
     // k-1 never received islands (for k=2, part 1 got none)

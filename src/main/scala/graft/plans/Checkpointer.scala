@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -23,7 +22,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * The reference's analogue is the out-of-core level dump/restore
   * (reference src/asyncio.c:5-139 and graph dump src/graph.c:3774-3860):
   * spill a whole level, reload it later. Here every iteration is durable and
-  * the lineage (which partition produced how many rows) rides along.
+  * the lineage (which partition produced how many rows) rides along;
+  * [[Checkpointer.iterate]] is the loop that writes and resumes them.
   */
 final class Checkpointer(spark: SparkSession, root: String,
                          icebergTable: Option[String] = None) {
@@ -59,9 +59,9 @@ final class Checkpointer(spark: SparkSession, root: String,
 
   /** One compact ledger line per snapshot, keys in the order step, iter,
     * rows, residual, wall_ms, partitions; a non-finite residual (the
-    * `write` default, and CC's) is null.
+    * `write` default) is null.
     */
-  def logMetrics(step: String, iter: Int, rows: Long,
+  private def logMetrics(step: String, iter: Int, rows: Long,
                  residual: Double, partCounts: Seq[(Int, Long)]): Unit = {
     val o = Json.obj().put("step", step).put("iter", iter).put("rows", rows)
     Json.num(o, "residual", residual).put("wall_ms", System.currentTimeMillis())
@@ -123,30 +123,39 @@ final class Checkpointer(spark: SparkSession, root: String,
     if (useIceberg)
       spark.table(tableFor(step)).filter(col("_iter") === iter).drop("_iter")
     else spark.read.parquet(dir(step, iter))
+}
 
-  /** Run an iterative fixed point with durable per-iteration checkpoints.
-    * If iterations [0..k] already exist under `step`, computation resumes
-    * from k (kill-resume test relies on this). `body(state, i)` returns
-    * (next state, residual); iteration stops when `residual <= tol` or
-    * `maxIter` reached. Checkpoint every `every` iterations (last always).
+object Checkpointer {
+
+  /** The one iteration-checkpoint loop. `body(state, i)` returns iteration
+    * `i`'s state, already materialized (a [[Plans.checkpoint]]), and its
+    * residual; the loop stops after iteration `maxIter` or at the first
+    * residual `<= tol`.
+    *
+    * With a checkpointer, every iteration is written durably and a run
+    * resumes after the newest completed snapshot of `step` (`init` is then
+    * never evaluated); without one, the body's checkpoint is the state.
+    * Either way each superseded state is released with [[Plans.unpersist]].
+    * Returns the final state, its iteration index and the last residual
+    * (`Double.MaxValue` when no iteration ran).
     */
-  def iterate(step: String, init: => DataFrame, maxIter: Int, tol: Double,
-              every: Int = 1)(body: (DataFrame, Int) => (DataFrame, Double)): DataFrame = {
-    var (state, start) = latest(step) match {
-      case Some(k) => (read(step, k), k + 1)
-      case None    => (write(step, 0, init), 1)
-    }
-    var i = start
+  def iterate(ckpt: Option[Checkpointer], step: String, init: => DataFrame,
+              maxIter: Int, tol: Double)(
+      body: (DataFrame, Int) => (DataFrame, Double)): (DataFrame, Int, Double) = {
+    var (state, i) = ckpt.flatMap(c => c.latest(step).map(k => (c.read(step, k), k)))
+      .getOrElse((init, 0))
     var residual = Double.MaxValue
-    while (i <= maxIter && residual > tol) {
+    while (i < maxIter && residual > tol) {
+      i += 1
       val (next, res) = body(state, i)
       residual = res
-      state =
-        if (i % every == 0 || i == maxIter || residual <= tol)
-          write(step, i, next, residual)
-        else { val c = next.ckpt(); c }
-      i += 1
+      Plans.unpersist(state)
+      state = ckpt.fold(next) { c =>
+        val durable = c.write(step, i, next, res)
+        Plans.unpersist(next)
+        durable
+      }
     }
-    state
+    (state, i, residual)
   }
 }

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.Checkpointer
-import graft.operators.{ConnectedComponents, GraphOps}
+import graft.plans.Plans.CheckpointOps
+import graft.operators.{ConnectedComponents, GraphOps, PageRank}
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -25,7 +26,7 @@ class CheckpointerSpec extends SparkSpec {
     val next = labels.join(nbrMin, Seq("vid"), "left")
       .select(col("vid"),
         least(col("component"), coalesce(col("nbr_min"), col("component")))
-          .as("component"))
+          .as("component")).ckpt()
     val changed = next.join(
         labels.withColumnRenamed("component", "prev"), "vid")
       .filter(col("component") =!= col("prev")).count()
@@ -39,15 +40,17 @@ class CheckpointerSpec extends SparkSpec {
     val sym = GraphOps.symmetrize(edgesDf(Fixtures.path8))
     val rootA = tmp()
     // run 1: "killed" after 3 iterations
-    new Checkpointer(spark, rootA)
-      .iterate("hm", labels0, maxIter = 3, tol = -1.0)(hashMinBody(sym))
+    Checkpointer.iterate(Some(new Checkpointer(spark, rootA)), "hm", labels0,
+      maxIter = 3, tol = -1.0)(hashMinBody(sym))
     // run 2 on the same root resumes from iter 3 and finishes to 7
-    val resumed = new Checkpointer(spark, rootA)
-      .iterate("hm", sys.error("init must not be re-evaluated on resume"),
-        maxIter = 7, tol = -1.0)(hashMinBody(sym))
+    val (resumed, last, _) = Checkpointer.iterate(
+      Some(new Checkpointer(spark, rootA)), "hm",
+      sys.error("init must not be re-evaluated on resume"),
+      maxIter = 7, tol = -1.0)(hashMinBody(sym))
+    assert(last == 7)
     // fresh full run
-    val full = new Checkpointer(spark, tmp())
-      .iterate("hm", labels0, maxIter = 7, tol = -1.0)(hashMinBody(sym))
+    val (full, _, _) = Checkpointer.iterate(Some(new Checkpointer(spark, tmp())),
+      "hm", labels0, maxIter = 7, tol = -1.0)(hashMinBody(sym))
     val a = resumed.orderBy("vid").collect().toSeq
     val b = full.orderBy("vid").collect().toSeq
     assert(a == b, "resumed state must equal uninterrupted state")
@@ -62,6 +65,10 @@ class CheckpointerSpec extends SparkSpec {
     c.write("s", 0, labels0)
     c.write("s", 3, labels0)
     assert(c.latest("s").contains(3))
+    // write()'s default NaN residual is ledgered as null, not a bare NaN
+    val first = Files.readAllLines(Path.of(root, "metrics.jsonl")).get(0)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(first)
+      .get("residual").isNull, first)
     // a snapshot without _SUCCESS is ignored
     val broken = Path.of(root, "s", "iter=9")
     Files.createDirectories(broken)
@@ -71,10 +78,10 @@ class CheckpointerSpec extends SparkSpec {
   test("metrics ledger records rows, residual and per-partition lineage") {
     val root = tmp()
     val c = new Checkpointer(spark, root)
-    c.iterate("hm", labels0, maxIter = 2, tol = -1.0)(
+    Checkpointer.iterate(Some(c), "hm", labels0, maxIter = 2, tol = -1.0)(
       hashMinBody(GraphOps.symmetrize(edgesDf(Fixtures.path8))))
     val lines = Files.readAllLines(Path.of(root, "metrics.jsonl")).asScala
-    assert(lines.size == 3, "init + 2 iterations")
+    assert(lines.size == 2, "one line per iteration, no init snapshot")
     // strict parse: Jackson rejects bare NaN/Infinity and trailing tokens
     val strict = new com.fasterxml.jackson.databind.ObjectMapper()
       .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
@@ -89,15 +96,39 @@ class CheckpointerSpec extends SparkSpec {
       val partRows = node.get("partitions").elements().asScala
         .map(_.get("rows").asLong).sum
       assert(node.get("rows").asLong == frameRows && partRows == frameRows, l)
+      assert(node.get("residual").isNumber, l)
     }
-    // the init snapshot carries write()'s default NaN residual: null, not NaN
-    assert(strict.readTree(lines.head).get("residual").isNull, lines.head)
-    assert(strict.readTree(lines(1)).get("residual").isNumber, lines(1))
     // early-stop on residual: converged path stops before maxIter
-    val c2 = new Checkpointer(spark, tmp())
-    val out = c2.iterate("hm", labels0, maxIter = 50, tol = 0.0)(
-      hashMinBody(GraphOps.symmetrize(edgesDf(Fixtures.path8))))
+    val (out, last, residual) = Checkpointer.iterate(
+      Some(new Checkpointer(spark, tmp())), "hm", labels0, maxIter = 50,
+      tol = 0.0)(hashMinBody(GraphOps.symmetrize(edgesDf(Fixtures.path8))))
     assert(out.filter(col("component") =!= 0L).count() == 0)
+    // path8 needs 7 changing rounds, the 8th changes nothing
+    assert(last == 8 && residual == 0.0)
+  }
+
+  test("superseded iteration state is released: persisted RDDs don't grow with maxIter") {
+    val sc = spark.sparkContext
+    // new RDD ids a call leaves persisted, its result held meanwhile (the
+    // persistent-RDD map holds weak values; ids only grow, so older RDDs
+    // collected meanwhile cannot disturb the count)
+    def leftPersisted(f: => AnyRef): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val result = f
+      val n = sc.getPersistentRDDs.keys.count(id => !before(id))
+      java.lang.ref.Reference.reachabilityFence(result)
+      n
+    }
+    val (e, verts) = Fixtures.withIslands(60)
+    val path = (0L until 63L).map(i => (i, i + 1, 1L))
+    val iters = Seq(2, 10)
+    // only the result's own checkpoint stays, whatever the iteration count
+    assert(iters.map(i => leftPersisted(PageRank.run(spark, edgesDf(e),
+      vertsDf(verts), maxIter = i, tol = 0.0, numParts = 4))) == Seq(1, 1),
+      "PageRank")
+    assert(iters.map(i => leftPersisted(ConnectedComponents.run(spark,
+      edgesDf(path), vertsDf(Fixtures.vertsOf(path)), maxRounds = i))) ==
+      Seq(1, 1), "ConnectedComponents")
   }
 
   test("Iceberg backend selection: catalog-configured gates writeTo path") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.ConnectedComponents
+import graft.plans.Checkpointer
 
 /** Exact component labels (min-vid) vs a union-find oracle — exact match is
   * the north-rule bar. Exercises islands (reference F4) and the long-chain
@@ -41,6 +42,22 @@ class ConnectedComponentsSpec extends SparkSpec {
     val got = collect(
       ConnectedComponents.run(spark, edgesDf(e), vertsDf(verts), maxRounds = 15))
     assert(got.values.forall(_ == 0L))
+  }
+
+  test("kill-resume: a run stopped after round 1 resumes to exact labels") {
+    val n = 256
+    val e = (0L until n - 1L).map(i => (i, i + 1, 1L))
+    val verts = (0L until n.toLong)
+    val root = java.nio.file.Files.createTempDirectory("graft-cc").toString
+    def run(maxRounds: Int) = ConnectedComponents.run(spark, edgesDf(e),
+      vertsDf(verts), maxRounds, Some(new Checkpointer(spark, root)))
+    run(1) // "killed" after round 1
+    assert(collect(run(50)) == Oracles.components(e, verts))
+    val lines = ledger(root, "cc_pairs")
+    assert(lines.map(_.get("iter").asInt) == (1 to lines.size),
+      "one ledger line per round, none rewritten")
+    assert(lines.forall(_.get("residual").isNumber))
+    assert(lines.last.get("residual").asDouble == 0.0, "stopped on a repeat")
   }
 
   test("fixed-round Hash-Min matches the synchronous oracle recurrence") {

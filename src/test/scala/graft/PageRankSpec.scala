@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Csr, CsrDirect, GraphOps, PageRank}
+import graft.plans.Checkpointer
 
 /** PageRank vs the dense in-JVM power-iteration oracle — the north-rule bar
   * is allclose 1e-6 per vertex (BASELINE.json).
@@ -52,6 +53,21 @@ class PageRankSpec extends SparkSpec {
       maxIter = 100, tol = 1e-10)
     assert(res.residual <= 1e-10)
     assert(res.iterations < 100, "should converge well before maxIter")
+  }
+
+  test("kill-resume: run() stopped after 3 iterations resumes to a fresh 8-iteration run") {
+    val (e, verts) = Fixtures.withIslands(100)
+    val root = java.nio.file.Files.createTempDirectory("graft-pr").toString
+    def run(maxIter: Int, ckpt: Option[Checkpointer]) =
+      PageRank.run(spark, edgesDf(e), vertsDf(verts), maxIter = maxIter,
+        tol = 0.0, ckpt = ckpt, numParts = 4)
+    run(3, Some(new Checkpointer(spark, root))) // "killed" after iteration 3
+    val resumed = run(8, Some(new Checkpointer(spark, root)))
+    assert(resumed.iterations == 8)
+    assertClose(collectRanks(resumed.ranks), collectRanks(run(8, None).ranks),
+      tol = 1e-12)
+    // iterations 1..3 were not recomputed: one ledger line per iteration
+    assert(ledger(root, "pagerank").map(_.get("iter").asInt) == (1 to 8))
   }
 
   test("CSR-kernel PageRank matches the dense oracle on both block layouts") {

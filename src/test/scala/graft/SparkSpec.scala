@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession + fixture graphs + in-JVM oracles for every
   * operator spec (SURVEY §5, FIXTURES.md §3-4). One session per test JVM.
@@ -17,6 +18,14 @@ trait SparkSpec extends AnyFunSuite {
 
   def assignDf(assign: Map[Long, Int]): DataFrame =
     spark.createDataFrame(assign.toSeq).toDF("vid", "part")
+
+  /** The `Checkpointer` ledger lines of `step` under `root`, parsed. */
+  def ledger(root: String, step: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    java.nio.file.Files.readAllLines(java.nio.file.Path.of(root, "metrics.jsonl"))
+      .asScala.toSeq.map(json.readTree(_))
+      .filter(_.get("step").asText == step)
+  }
 }
 
 object SparkSpec {
