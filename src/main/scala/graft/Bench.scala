@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.NullNode
 import graft.plans.Json
 
 /** Per-round benchmark (driver contract: ONE JSON line on stdout).
@@ -14,9 +16,8 @@ import graft.plans.Json
   *     the work (NOTES.md);
   *   - `scaling`: the north-rule two-parallelism evidence — the identical
   *     PageRank job over a deterministically synthesized transcript graph at
-  *     local[N] vs local[4N] (headline N=4; the 8→32 pair reported as
-  *     `secondary_8_to_32` — see [[Scaling.pairForked]] for why one shared
-  *     DRAM bus caps that pair on this box), each leg in a FRESH JVM
+  *     local[N] vs local[4N], N and the graph sized from the host
+  *     ([[Scaling.plan]]; 4→16 on 16+ cores), each leg in a FRESH JVM
   *     (a second SparkSession in one JVM measured up to 4x slower), with
   *     throughput at both and the efficiency (target >= 0.8). Skippable via
   *     SPARK_GRAFT_SKIP_SCALING=1 for quick iteration.
@@ -33,7 +34,8 @@ object Bench {
     sys.props("graft.scale.deadline.ms") =
       (System.currentTimeMillis() + 3250L * 1000).toString
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -83,33 +85,22 @@ object Bench {
       System.err.flush()
       name -> sec
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val qs = Json.obj()
+    results.foreach { case (k, v) => Json.num(qs, k, v, 3) }
     val total = results.map(_._2).sum
     spark.stop()
 
-    val scaling =
-      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")) "null"
-      else {
-        // 6M convs × 600 turns ≈ 522M canonical / ~1.04 × 10^9 DIRECTED
-        // edges — the north rule's literal "10^9 edges" scale. Bigger is
-        // also better for the efficiency bar: per-iteration parallel work
-        // W/c must dominate the ~25-30 ms/iter stage fixed cost, and each
-        // doubling (130M → 261M edges moved the protocol from 0.798 to
-        // ~0.85-0.9) halves the hi leg's fixed-cost share while the lo leg
-        // scales cleanly; density (not vertex count) raises W per heap
-        // byte, keeping the persisted CSR state inside the 30g child heap
-        val nConv = sys.env.getOrElse("SPARK_GRAFT_SCALE_CONVS", "6000000").toLong
-        val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
-        try {
-          Scaling.json(Scaling.pairForked(nConv = nConv, iters = iters))
-        } catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          Json.write(Json.obj().put("error", msg))
-        }
+    val scaling: JsonNode =
+      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")) NullNode.instance
+      else try Scaling.pair() catch { case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        Json.obj().put("error", msg)
       }
 
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","scaling":$scaling}""")
+    val out = Json.obj().put("metric", "total")
+    Json.num(out, "value", total, 3).put("unit", "sec")
+    out.set[JsonNode]("queries", qs)
+    out.put("sf", sfDir).set[JsonNode]("scaling", scaling)
+    println(Json.write(out))
   }
 }

@@ -9,7 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * protocol").
   */
 class ScalingStatsSpec extends AnyFunSuite {
-  import Scaling.{RunResult, PairResult}
+  import Scaling.{Host, RunResult, PairResult}
+  import graft.plans.Json
+
+  private val host = Host(nproc = 4, memMb = 15 * 1024, shmFreeMb = 15 * 1024)
+
+  /** The pair line as a strict consumer sees it: written, then re-read. */
+  private def line(pr: PairResult) = Json.read(Json.write(Scaling.json(pr, host)))
+
+  private def near(n: com.fasterxml.jackson.databind.JsonNode, k: String,
+                   v: Double, tol: Double = 1e-3): Unit =
+    assert(n.get(k).isNumber && math.abs(n.get(k).asDouble - v) < tol,
+      s"$k: want $v in $n")
 
   test("median: odd, even, empty") {
     assert(Scaling.median(Seq(3.0, 1.0, 2.0)) == 2.0)
@@ -94,16 +105,16 @@ class ScalingStatsSpec extends AnyFunSuite {
       loForks = Seq(fork(4, 3, Seq(400, 400, 400), 1.2)),
       hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3)),
       cpusLo = 4, cpusHi = 16)
-    val j = Scaling.json(pr)
+    val j = line(pr)
     for (k <- Seq("scaling_efficiency", "scaling_efficiency_raw",
         "wall_scaling_efficiency", "fork_iter_med_lo", "fork_iter_med_hi",
         "trials_lo", "trials_hi", "iters_per_sec_lo", "iters_per_sec_hi",
         "teps_lo", "teps_hi", "protocol"))
-      assert(j.contains("\"" + k + "\""), s"missing $k in $j")
+      assert(j.has(k), s"missing $k in $j")
     // throughput must derive from the robust per-iteration estimate
-    assert(j.contains("\"iters_per_sec_lo\":2.500")) // 1000/400
-    assert(j.contains("\"iters_per_sec_hi\":10.000")) // 1000/100
-    assert(j.contains("\"scaling_efficiency\":1.000")) // raw 1.0 uncapped
+    near(j, "iters_per_sec_lo", 2.5) // 1000/400
+    near(j, "iters_per_sec_hi", 10.0) // 1000/100
+    near(j, "scaling_efficiency", 1.0) // raw 1.0 uncapped
   }
 
   test("convergence gap: best-two fork medians per level; undefined -> null") {
@@ -117,19 +128,19 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(math.abs(pr.gapLo - (400.0 / 380.0 - 1.0)) < 1e-12)
     // one hi fork -> gap undefined -> +inf in code, null in the JSON
     assert(pr.gapHi.isInfinite)
-    val j = Scaling.json(pr)
-    assert(j.contains("\"conv_gap_lo\":0.0526"), j)
-    assert(j.contains("\"conv_gap_hi\":null"), j)
+    val j = line(pr)
+    near(j, "conv_gap_lo", 0.0526, 1e-4)
+    assert(j.get("conv_gap_hi").isNull, j)
     // per-fork trial counts are emitted (short redraws auditable)
-    assert(j.contains("\"fork_trials_lo\":[1,1,1]"), j)
-    assert(j.contains("\"fork_trials_hi\":[1]"), j)
+    assert(j.get("fork_trials_lo").toString == "[1,1,1]", j)
+    assert(j.get("fork_trials_hi").toString == "[1]", j)
     // two zero medians: 0/0 - 1 is NaN, which is null too, never bare NaN
     val zero = PairResult(
       loForks = Seq(fork(4, 3, Seq(0, 0, 0), 1.2), fork(4, 3, Seq(0, 0, 0), 1.2)),
       hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3)),
       cpusLo = 4, cpusHi = 16)
     assert(pr.gapLo.isFinite && zero.gapLo.isNaN)
-    assert(Scaling.json(zero).contains("\"conv_gap_lo\":null"), Scaling.json(zero))
+    assert(line(zero).get("conv_gap_lo").isNull, line(zero))
   }
 
   test("prepStage: reuse on a matching key; a rebuild drops the key first") {
@@ -137,10 +148,10 @@ class ScalingStatsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-prep")
     val key = dir.resolve("edges-key.txt")
     var builds = 0
-    assert(!Scaling.prepStage(key, "a") { builds += 1 })
+    Scaling.prepStage(key, "a") { builds += 1 }
     assert(Files.readString(key).trim == "a" && builds == 1)
-    assert(Scaling.prepStage(key, "a") { builds += 1 }, "same key: reused")
-    assert(builds == 1)
+    Scaling.prepStage(key, "a") { builds += 1 }
+    assert(builds == 1, "same key: reused")
     // a rebuild for another key must not leave the old key valid while it
     // overwrites the tables, nor a key at all if it crashes part-way
     val crash = intercept[IllegalStateException] {
@@ -151,7 +162,55 @@ class ScalingStatsSpec extends AnyFunSuite {
     }
     assert(crash.getMessage == "killed mid-rebuild")
     assert(!Files.exists(key), "a crashed rebuild leaves no key")
-    assert(!Scaling.prepStage(key, "a") { builds += 1 })
+    Scaling.prepStage(key, "a") { builds += 1 }
     assert(builds == 2 && Files.readString(key).trim == "a")
+  }
+
+  test("plan: a 4-cpu/15 GB box runs 1->4 with heaps that fit") {
+    val p = Scaling.plan(Host(nproc = 4, memMb = 15 * 1024, shmFreeMb = 15 * 1024))
+    assert(p.cpusLo == 1 && p.cpusHi == 4 && p.prepCpus == 4)
+    // the leg and prep heaps, never both at once, stay inside RAM
+    assert(p.legHeapMb == 15 * 1024 / 4 && p.prepHeapMb == 15 * 1024 / 2)
+    assert(p.nConv == 6000000L * p.legHeapMb / (30 * 1024) && p.nConv < 6000000L)
+    assert(p.legTmpfs)
+    // no room in /dev/shm: the legs shuffle on disk
+    assert(!Scaling.plan(Host(4, 15 * 1024, shmFreeMb = 1024)).legTmpfs)
+  }
+
+  test("plan: a 32-cpu/128 GB host gets the 4->16/30g/64g/6M/tmpfs defaults") {
+    val p = Scaling.plan(Host(nproc = 32, memMb = 128 * 1024, shmFreeMb = 64 * 1024))
+    assert(p.cpusLo == 4 && p.cpusHi == 16 && p.prepCpus == 32)
+    assert(p.legHeapMb == 30 * 1024 && p.prepHeapMb == 64 * 1024)
+    assert(p.nConv == 6000000L && p.legTmpfs)
+  }
+
+  test("a leg line round-trips through write and strict read into an equal RunResult") {
+    for (r <- Seq(
+        RunResult(4, 20996, 1958753, 40, 12.345678901234,
+          trialSecs = Seq(12.345678901234, 13.1, 14.000000000001),
+          iterMs = Seq(301.0, 299.5, 0.1 + 0.2), trialIterMeds = Seq(300.25, 310.0)),
+        // a leg whose every drain came back empty: no per-trial medians
+        RunResult(1, 10, 20, 3, 2.0, trialSecs = Seq(2.0), trialIterMeds = Nil))) {
+      val text = Json.write(Scaling.runJson(r))
+      assert(!text.contains("NaN"), text)
+      assert(Scaling.runResult(Json.read(text)) == r, text)
+    }
+    // strict: a bare NaN is refused, never read as a number
+    intercept[Exception](Json.read("""{"seconds":NaN}"""))
+  }
+
+  test("a pair line parses strictly, carries host, and has no secondary pair") {
+    val pr = PairResult(
+      loForks = Seq(fork(4, 3, Seq(400, 400, 400), 1.2), RunResult(4, 10, 10, 3, 1.5)),
+      hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3)),
+      cpusLo = 4, cpusHi = 16)
+    val text = Json.write(Scaling.json(pr, host))
+    assert(!text.contains("NaN") && !text.contains("Infinity"), text)
+    val j = Json.read(text)
+    assert(j.get("host").get("nproc").asInt == 4, j)
+    assert(!j.has("secondary_8_to_32"), j)
+    // a fork with no samples has an undefined median: null, not bare NaN
+    assert(j.get("fork_iter_med_lo").get(1).isNull, j)
+    assert(j.get("protocol").asText.contains("tol 5%"), j)
   }
 }
