@@ -143,6 +143,9 @@ object Scaling {
                   nConv: Long, legTmpfs: Boolean) {
     def cpusHi: Int = 4 * cpusLo
     def prepCpus: Int = host.nproc
+    def json: ObjectNode = Json.obj().put("leg_heap_mb", legHeapMb)
+      .put("prep_heap_mb", prepHeapMb).put("n_conv", nConv)
+      .put("leg_shuffle", if (legTmpfs) "tmpfs" else "disk")
   }
 
   /** Size the harness from the host, the way the mt-metis fork sizes its
@@ -158,11 +161,11 @@ object Scaling {
     // a 40g+ commit overflows vm.max_map_count (fatal map failure). A
     // quarter of RAM leaves room for the parent, the page cache and the
     // tmpfs shuffle, which counts against the same RAM (NOTES.md round 4)
-    val legHeapMb = math.min(30L * 1024, h.memMb / 4)
+    val legHeapMb = budget(h.memMb / 4, 30L * 1024)
     // prep child: at 6M convs the 16 concurrent per-block assembly tasks
     // OOM'd a 40g heap; 64g cleared it
     Plan(h, cpusLo = if (h.nproc >= 16) 4 else math.max(1, h.nproc / 4),
-      legHeapMb = legHeapMb, prepHeapMb = math.min(64L * 1024, h.memMb / 2),
+      legHeapMb = legHeapMb, prepHeapMb = budget(h.memMb / 2, 64L * 1024),
       // the graph scales with the leg heap that must hold its CSR state:
       // 6M convs at 30g (legHeapMb ≤ 30g, so this is ≤ 6M), the north
       // rule's literal 10^9 directed edges. Bigger is also better for the
@@ -175,6 +178,11 @@ object Scaling {
       // per iteration), so tmpfs fits when it has a heap's worth free
       legTmpfs = h.shmFreeMb >= legHeapMb)
   }
+
+  // MemTotal reads a few percent under the installed RAM (16 GiB reads
+  // 16070 MB), so a budget within 5% of its cap takes the cap: a 128 GB
+  // host still gets the full 64g prep heap
+  private def budget(mb: Long, capMb: Long): Long = if (mb >= capMb * 0.95) capMb else mb
 
   private def withSession[A](cpus: Int)(body: SparkSession => A): A = {
     val spark = SparkSession.builder()
@@ -214,29 +222,40 @@ object Scaling {
     * canonical edge/vertex tables as parquet — the measured children then
     * pay only a columnar scan instead of re-deriving 10^8 turn rows at their
     * own (possibly low) thread count. Also makes "same input at both
-    * cluster sizes" literal: both legs read identical bytes.
+    * cluster sizes" literal: both legs read identical bytes. `withState`
+    * adds the per-block CSR state only the PageRank legs read.
     */
-  def prepEdges(nConv: Long, outDir: String, cpus: Int): Unit = {
+  private def prepEdges(nConv: Long, outDir: String, cpus: Int,
+                        withState: Boolean): Unit = {
+    // stage-level resume: the synth+derive of the edge/vid tables is the
+    // long half of prep (~25 min at 6M convs) and depends only on the
+    // synth params — if a previous prep crashed AFTER writing them (e.g.
+    // OOM in the state build), reuse them instead of re-deriving
+    val edgesFile = Paths.get(s"$outDir/edges-key.txt")
+    val edgesKey = s"nConv=$nConv turns=$MaxTurns"
+    val prepFile = Paths.get(s"$outDir/prep-key.txt")
+    def edgeTables(spark: SparkSession): Unit = {
+      // a state built over the old tables no longer validates
+      Files.deleteIfExists(prepFile)
+      val ts = Transcripts.synthesize(spark, nConv, maxTurns = MaxTurns)
+      val dict = EdgeDeriver.vertices(ts)
+      EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))
+        .write.mode("overwrite").parquet(s"$outDir/edges")
+      dict.select(col("vid")).write.mode("overwrite")
+        .parquet(s"$outDir/vids")
+    }
     // idempotent: the prep output depends only on this key (the synth
     // params + block layout), so back-to-back bench runs
     // — e.g. the driver's per-round run right after a local confirmation
     // run — reuse several minutes of untimed-but-real prep wall
     val prepKey = s"nConv=$nConv turns=$MaxTurns blocks=$NumBlocks"
-    prepStage(Paths.get(s"$outDir/prep-key.txt"), prepKey) {
+    // partition and ND read only the edge/vid tables: they never pay for
+    // (or size their heap to) the state build, the stage that OOM'd a 40g
+    // heap at 6M; a later pair prep over the same dir adds it on top
+    if (!withState) prepStage(edgesFile, edgesKey)(withSession(cpus)(edgeTables))
+    else prepStage(prepFile, prepKey) {
       withSession(cpus) { spark =>
-        // stage-level resume: the synth+derive of the edge/vid tables is the
-        // long half of prep (~25 min at 6M convs) and depends only on the
-        // synth params — if a previous prep crashed AFTER writing them (e.g.
-        // OOM in the state build), reuse them instead of re-deriving
-        val edgesKey = s"nConv=$nConv turns=$MaxTurns"
-        prepStage(Paths.get(s"$outDir/edges-key.txt"), edgesKey) {
-          val ts = Transcripts.synthesize(spark, nConv, maxTurns = MaxTurns)
-          val dict = EdgeDeriver.vertices(ts)
-          EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))
-            .write.mode("overwrite").parquet(s"$outDir/edges")
-          dict.select(col("vid")).write.mode("overwrite")
-            .parquet(s"$outDir/vids")
-        }
+        prepStage(edgesFile, edgesKey)(edgeTables(spark))
         // the measured legs load the PREPARED per-block state instead of
         // rebuilding it: the routing build + tiled counting sort cost ~10
         // min at 4 threads (untimed, but it is wall-clock the whole bench
@@ -407,9 +426,9 @@ object Scaling {
   }
 
   /** The one child launcher: a FRESH JVM running `graft.Scaling` in `role`
-    * (`prep`, `leg`, `partition` or `nd`) over the prepped graph in
-    * `edgesDir`, with this JVM's flags (add-opens) and a heap, GC and
-    * Spark local dir sized by the plan. Returns the child's JSON line.
+    * (`prep`, `prep-edges`, `leg`, `partition` or `nd`) over the prepped
+    * graph in `edgesDir`, with this JVM's flags (add-opens) and a heap, GC
+    * and Spark local dir sized by the plan. Returns the child's JSON line.
     * Each measured level gets its own heap/JIT — a second SparkSession in
     * one JVM measured up to 4x slower.
     */
@@ -478,13 +497,9 @@ object Scaling {
       // deadline-aware wait: when Bench set graft.scale.deadline.ms, give
       // the child until deadline + 120 s grace, then kill it — a wedged
       // fork must cost its own wall, never the whole bench JSON
-      val finished = sys.props.get("graft.scale.deadline.ms").map(_.toLong) match {
-        case Some(d) =>
-          val waitMs = math.max(10000L, d + 120000L - System.currentTimeMillis())
-          p.waitFor(waitMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-        case None => p.waitFor(); true
-      }
-      if (!finished) {
+      val waitMs = sys.props.get("graft.scale.deadline.ms").fold(Long.MaxValue)(d =>
+        math.max(10000L, d.toLong + 120000L - System.currentTimeMillis()))
+      if (!p.waitFor(waitMs, java.util.concurrent.TimeUnit.MILLISECONDS)) {
         p.destroyForcibly().waitFor()
         sys.error(s"forked scaling $role child $env overran the bench deadline — killed")
       }
@@ -576,15 +591,19 @@ object Scaling {
     * `SPARK_GRAFT_SCALE_CONVS`/`_ITERS` once, preps the graph, measures.
     */
   def pair(): ObjectNode = {
-    val (plan, dir) = prepare()
+    val (plan, dir) = prepare(withState = true)
+    // one disk serializes the legs' shuffle at every parallelism (see fork)
+    if (!plan.legTmpfs) System.err.println(s"[scaling] WARNING: /dev/shm has " +
+      s"${plan.host.shmFreeMb} MB free, under the ${plan.legHeapMb} MB leg heap: disk legs")
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
-    json(pairForked(plan, dir, iters), plan.host)
+    json(pairForked(plan, dir, iters), plan)
   }
 
   /** The host's plan (at `SPARK_GRAFT_SCALE_CONVS` when set) and the prep
-    * dir, with the graph written there by the key-cached prep child.
+    * dir, with the graph written there by the key-cached prep child — and
+    * the legs' per-block state when `withState`.
     */
-  private def prepare(): (Plan, String) = {
+  private def prepare(withState: Boolean): (Plan, String) = {
     val p0 = plan(readHost())
     val plan1 = sys.env.get("SPARK_GRAFT_SCALE_CONVS")
       .fold(p0)(c => p0.copy(nConv = c.toLong))
@@ -603,7 +622,7 @@ object Scaling {
       new java.io.File(s".bench-cache/scaling-edges-${plan1.nConv}")
         .getAbsolutePath)
     // no-op (seconds) when the prep-key already matches
-    fork(plan1, "prep", dir, Map(
+    fork(plan1, if (withState) "prep" else "prep-edges", dir, Map(
       "SPARK_GRAFT_SCALE_CONVS" -> plan1.nConv.toString,
       "SPARK_GRAFT_SCALE_CPUS" -> plan1.prepCpus.toString))
     (plan1, dir)
@@ -701,9 +720,9 @@ object Scaling {
     // ConvTol; extras go to whichever level is not yet converged (no-data
     // levels first), and the hunt stops the moment BOTH levels converge —
     // wherever the ratio then lands.
-    def effOpt: Option[Double] =
-      if (loF.isEmpty || hiF.isEmpty) None
-      else Some(PairResult(loF, hiF, cpusLo, cpusHi).eff)
+    def state: String = f"eff=${if (loF.isEmpty || hiF.isEmpty) Double.NaN
+      else PairResult(loF, hiF, cpusLo, cpusHi).eff}%.3f " +
+      f"gap(lo)=${convGap(loF)}%.3f gap(hi)=${convGap(hiF)}%.3f"
     def converged(rs: Seq[RunResult]): Boolean = convGap(rs) <= ConvTol
     // redraw priority: a level with NO data, then the level further
     // from converging (its min-median is the less trustworthy one)
@@ -727,26 +746,20 @@ object Scaling {
       else {
         extra += 1
         k += 1
-        System.err.println(
-          f"[scaling] eff=${effOpt.getOrElse(Double.NaN)}%.3f " +
-          f"gap(lo)=${convGap(loF)}%.3f gap(hi)=${convGap(hiF)}%.3f " +
-          f"(tol $ConvTol%.2f) — extra cpus=$c " +
-          s"${if (full) "leg" else "SHORT (1-trial) leg"}, fork $k")
+        System.err.println(f"[scaling] $state (tol $ConvTol%.2f) — extra " +
+          s"cpus=$c ${if (full) "leg" else "SHORT (1-trial) leg"}, fork $k")
         runLeg(k, c, trials = if (full) None else Some(1))
       }
     }
     if (!allConverged)
-      System.err.println(f"[scaling] emitting UNCONVERGED " +
-        f"eff=${effOpt.getOrElse(Double.NaN)}%.3f " +
-        f"gap(lo)=${convGap(loF)}%.3f gap(hi)=${convGap(hiF)}%.3f " +
-        s"(budget: extra=$extra/$MaxExtra, " +
-        s"fits=${fits(shortLegCost(retryCpus))})")
+      System.err.println(s"[scaling] emitting UNCONVERGED $state (budget: " +
+        s"extra=$extra/$MaxExtra, fits=${fits(shortLegCost(retryCpus))})")
     require(loF.nonEmpty && hiF.nonEmpty, "every scaling fork at " +
       s"${if (loF.isEmpty) cpusLo else cpusHi} cpus failed — no data to emit")
     PairResult(loF, hiF, cpusLo, cpusHi)
   }
 
-  def json(pr: PairResult, host: Host): ObjectNode = {
+  def json(pr: PairResult, plan: Plan): ObjectNode = {
     val lo = pr.lo; val hi = pr.hi
     // throughput numbers (iters/sec, TEPS) derive from the ROBUST per-
     // iteration estimate so they are consistent with the headline
@@ -790,7 +803,8 @@ object Scaling {
       "lo-leg noise)")
     Json.num(o, "scaling_efficiency_raw", pr.eff, 3)
     Json.num(o, "scaling_efficiency", pr.effCapped, 3)
-    o.set[ObjectNode]("host", host.json)
+    o.set[ObjectNode]("host", plan.host.json)
+    o.set[ObjectNode]("plan", plan.json)
   }
 
   /** A child's measurement in `role` over the graph in `dir`; every line
@@ -799,8 +813,9 @@ object Scaling {
   private def child(role: String, dir: String): ObjectNode = {
     val cpus = sys.env("SPARK_GRAFT_SCALE_CPUS").toInt
     val o = role match {
-      case "prep" =>
-        prepEdges(sys.env("SPARK_GRAFT_SCALE_CONVS").toLong, dir, cpus)
+      case "prep" | "prep-edges" =>
+        prepEdges(sys.env("SPARK_GRAFT_SCALE_CONVS").toLong, dir, cpus,
+          withState = role == "prep")
         Json.obj().put("prep", "done")
       case "leg" =>
         // failure-injection hook (harness testing only): kill this child
@@ -879,7 +894,7 @@ object Scaling {
       case None =>
         require(mode == "partition" || mode == "nd",
           s"SPARK_GRAFT_SCALE_MODE=$mode: expected pair, partition or nd")
-        val (plan, dir) = prepare()
+        val (plan, dir) = prepare(withState = false)
         fork(plan, mode, dir,
           Map("SPARK_GRAFT_SCALE_CPUS" -> plan.host.nproc.toString))
     }

@@ -15,7 +15,8 @@ class ScalingStatsSpec extends AnyFunSuite {
   private val host = Host(nproc = 4, memMb = 15 * 1024, shmFreeMb = 15 * 1024)
 
   /** The pair line as a strict consumer sees it: written, then re-read. */
-  private def line(pr: PairResult) = Json.read(Json.write(Scaling.json(pr, host)))
+  private val plan = Scaling.plan(host)
+  private def line(pr: PairResult) = Json.read(Json.write(Scaling.json(pr, plan)))
 
   private def near(n: com.fasterxml.jackson.databind.JsonNode, k: String,
                    v: Double, tol: Double = 1e-3): Unit =
@@ -178,10 +179,15 @@ class ScalingStatsSpec extends AnyFunSuite {
   }
 
   test("plan: a 32-cpu/128 GB host gets the 4->16/30g/64g/6M/tmpfs defaults") {
-    val p = Scaling.plan(Host(nproc = 32, memMb = 128 * 1024, shmFreeMb = 64 * 1024))
-    assert(p.cpusLo == 4 && p.cpusHi == 16 && p.prepCpus == 32)
-    assert(p.legHeapMb == 30 * 1024 && p.prepHeapMb == 64 * 1024)
-    assert(p.nConv == 6000000L && p.legTmpfs)
+    // MemTotal reads ~98% of the installed RAM (16 GiB reads 16070 MB)
+    for (memMb <- Seq(128L * 1024, 128L * 1024 * 98 / 100, 128L * 1024 * 96 / 100)) {
+      val p = Scaling.plan(Host(nproc = 32, memMb = memMb, shmFreeMb = 64 * 1024))
+      assert(p.cpusLo == 4 && p.cpusHi == 16 && p.prepCpus == 32, p)
+      assert(p.legHeapMb == 30 * 1024 && p.prepHeapMb == 64 * 1024, p)
+      assert(p.nConv == 6000000L && p.legTmpfs, p)
+    }
+    // well under the cap, RAM/2 is the prep heap
+    assert(Scaling.plan(Host(32, 96 * 1024, 48 * 1024)).prepHeapMb == 48 * 1024)
   }
 
   test("a leg line round-trips through write and strict read into an equal RunResult") {
@@ -204,11 +210,16 @@ class ScalingStatsSpec extends AnyFunSuite {
       loForks = Seq(fork(4, 3, Seq(400, 400, 400), 1.2), RunResult(4, 10, 10, 3, 1.5)),
       hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3)),
       cpusLo = 4, cpusHi = 16)
-    val text = Json.write(Scaling.json(pr, host))
+    val text = Json.write(Scaling.json(pr, plan))
     assert(!text.contains("NaN") && !text.contains("Infinity"), text)
     val j = Json.read(text)
     assert(j.get("host").get("nproc").asInt == 4, j)
     assert(!j.has("secondary_8_to_32"), j)
+    // the derived plan rides along: a disk-shuffle leg is visible
+    assert(j.get("plan").get("leg_heap_mb").asLong == 15 * 1024 / 4, j)
+    assert(j.get("plan").get("leg_shuffle").asText == "tmpfs", j)
+    val disk = Json.read(Json.write(Scaling.json(pr, plan.copy(legTmpfs = false))))
+    assert(disk.get("plan").get("leg_shuffle").asText == "disk", disk)
     // a fork with no samples has an undefined median: null, not bare NaN
     assert(j.get("fork_iter_med_lo").get(1).isNull, j)
     assert(j.get("protocol").asText.contains("tol 5%"), j)
