@@ -213,8 +213,10 @@ object Scaling {
       // scheduler's wait-and-see delay on the per-iteration stages
       .config("spark.locality.wait", "0ms")
       .config("spark.ui.enabled", "false")
+      // a config, so it holds while the context starts: its ~40 INFO
+      // lines per child would bury the [scaling] lines on shared stderr
+      .config("spark.log.level", "ERROR")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     try body(spark) finally spark.stop()
   }
 

@@ -35,14 +35,20 @@ object GraphOps {
   val BcastMaxVerts: Long =
     sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX_VERTS", "8000000").toLong
 
-  /** Broadcast `df` when its (caller-known) row count is within
-    * [[BcastMaxVerts]]; `nRows < 0` = unknown = never broadcast. The
-    * explicit hint matters because partitioner state is checkpointed
-    * stats-free (Plans.statlessLocalCheckpoint), so Catalyst never
-    * auto-broadcasts it.
+  /** Whether V-sized state of a caller-known `nRows` rows may pass
+    * through the driver: within [[BcastMaxVerts]]; `nRows < 0` = unknown =
+    * never. The one rule behind [[dimSide]] and the matching's
+    * driver-resident handshake.
+    */
+  def broadcastable(nRows: Long): Boolean =
+    nRows >= 0 && nRows <= BcastMaxVerts
+
+  /** Broadcast `df` when it is [[broadcastable]]. The explicit hint
+    * matters because partitioner state is checkpointed stats-free
+    * (Plans.statlessLocalCheckpoint), so Catalyst never auto-broadcasts it.
     */
   def dimSide(df: DataFrame, nRows: Long): DataFrame =
-    if (nRows >= 0 && nRows <= BcastMaxVerts) broadcast(df) else df
+    if (broadcastable(nRows)) broadcast(df) else df
 
   /** Per-vertex degree and weighted degree (A8/F3 analogue).
     *

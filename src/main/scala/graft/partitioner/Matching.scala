@@ -1,11 +1,13 @@
 package graft.partitioner
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlInternals}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.operators.GraphOps
 
-/** Matching for coarsening as iterative DataFrame joins — the Spark
-  * re-expression of the reference's matching schemes
+/** Matching for coarsening — the Spark re-expression of the reference's matching schemes
   * (par_aggregate_graph, reference src/aggregate.c:2018-2135):
   *
   *   - SHEM (sorted heavy-edge matching, the default ctype src/ctrl.c:49;
@@ -22,14 +24,20 @@ import graft.operators.GraphOps
   *     under `caps` for EVERY constraint (the P7 cap per constraint,
   *     src/coarsen.c:78-88);
   *   - the shared-memory mutual-match cleanup (S_cleanup_match,
-  *     src/aggregate.c:282-392) becomes the J2 handshake self-join: a
-  *     proposal survives only if it is reciprocated;
+  *     src/aggregate.c:282-392) becomes the J2 handshake: a proposal
+  *     survives only if it is reciprocated;
   *   - handshake rounds repeat until the level is unstalled (fewer than
   *     ⅓ of its vertices unmatched, [[stalled]]), a round pairs nobody, or
   *     `rounds` rounds have run (the reference's SHEM is one greedy pass
   *     that matches nearly every vertex); then the still-unmatched
   *     vertices self-match (match_SHEM's fallback,
   *     src/aggregate.c:1582-1588).
+  *
+  * Where the V-sized handshake state lives: in the driver whenever the
+  * level's vertex count is known and [[GraphOps.broadcastable]] (the
+  * reference's thread-owned vertex arrays, gathered once; a round is one
+  * scan of the adjacency), else in checkpointed frames joined against the
+  * adjacency every round ([[cmapRounds]]).
   *
   * Output: cmap(vid, coarse) where coarse = min(vid, partner) — the fine→
   * coarse lineage join key (reference `cmap[t]`, src/graph.h:67).
@@ -71,46 +79,80 @@ object Matching {
     cmapRounds(edges, vertices, caps, rounds, scheme, seed, nVerts, symIn,
       degIn)._1
 
-  /** [[cmapMC]] that also returns the number of handshake rounds it ran. */
+  /** [[cmapMC]] that also returns the number of handshake rounds it ran
+    * and the number of matched pairs (the cmap rows with vid ≠ coarse).
+    * A [[GraphOps.broadcastable]] `nVerts` (the rule behind every `dimSide`
+    * broadcast) runs [[driverRounds]]; `nVerts < 0` or a level too large
+    * for the driver runs [[joinRounds]]. Both give the same cmap, round
+    * count and pair count.
+    */
   private[graft] def cmapRounds(
       edges: DataFrame, vertices: DataFrame, caps: Array[Long],
       rounds: Int = 8, scheme: Scheme = SHEM, seed: Long = 42L,
       nVerts: Long = -1L, symIn: DataFrame = null,
-      degIn: DataFrame = null): (DataFrame, Int) = {
-    val ncon = caps.length
-    // V-sized state (unmatched set, proposals, matched vids) broadcasts
-    // against the E-sized adjacency when |V| is under the dimSide
-    // threshold — each handshake round is then a map-only edge scan; sym
-    // is partitioned by src so the proposal groupBy needs no exchange
-    def dim(df: DataFrame): DataFrame = GraphOps.dimSide(df, nVerts)
+      degIn: DataFrame = null): (DataFrame, Int, Long) = {
     val deg = (if (degIn != null) degIn else GraphOps.degrees(edges))
       .select(col("vid"), col("deg"))
-    val vw = vertices.select(col("vid"), col("vwgts"))
-    var unmatched = vw.join(deg, Seq("vid"), "left")
+    val state = vertices.select(col("vid"), col("vwgts"))
+      .join(deg, Seq("vid"), "left")
       .select(col("vid"), col("vwgts"), coalesce(col("deg"), lit(0L)).as("deg"))
-      .persist()
-    // typed empty seed (a zero-column emptyDataFrame + withColumn trips
-    // Catalyst's Union constraint rewrite in Spark 4)
-    var pairs = unmatched.sparkSession
-      .createDataFrame(Seq.empty[(Long, Long)]).toDF("u", "v")
     val ownSym = symIn == null
     val sym =
       if (ownSym) GraphOps.symmetrize(edges).repartition(col("src")).persist()
       else symIn
+    val out =
+      if (GraphOps.broadcastable(nVerts))
+        driverRounds(state, sym, caps, rounds, scheme, seed, nVerts)
+      else joinRounds(state, sym, caps, rounds, scheme, seed, nVerts)
+    if (ownSym) sym.unpersist()
+    out
+  }
+
+  /** The stop rule both paths share: `round()` runs one handshake round
+    * and returns the unmatched count after it; rounds run while the level
+    * is stalled and the last round paired someone, up to the `rounds` cap.
+    * Returns the rounds run.
+    */
+  private def handshake(scheme: Scheme, rounds: Int, n: Long)(
+      round: () => Long): Int = {
+    var left = n
+    var ran = 0
+    var progress = true
+    while (ran < rounds && progress && stalled(left, n)) {
+      ran += 1
+      val nextLeft = round()
+      progress = nextLeft < left
+      left = nextLeft
+    }
+    if (progress && stalled(left, n))
+      graft.plans.Metrics.event(s"${scheme.toString.toLowerCase}_round_cap",
+        s"$left/$n vertices unmatched after the $rounds-round cap")
+    ran
+  }
+
+  /** The distributed handshake: the unmatched set and the pairs are
+    * checkpointed frames, and each round joins the adjacency against them
+    * (broadcast when `nVerts` is known and small, [[GraphOps.dimSide]]).
+    */
+  private def joinRounds(state: DataFrame, sym: DataFrame, caps: Array[Long],
+                         rounds: Int, scheme: Scheme, seed: Long,
+                         nVerts: Long): (DataFrame, Int, Long) = {
+    val ncon = caps.length
+    def dim(df: DataFrame): DataFrame = GraphOps.dimSide(df, nVerts)
+    var unmatched = state.persist()
+    // typed empty seed (a zero-column emptyDataFrame + withColumn trips
+    // Catalyst's Union constraint rewrite in Spark 4)
+    var pairs = unmatched.sparkSession
+      .createDataFrame(Seq.empty[(Long, Long)]).toDF("u", "v")
+    var nPairs = 0L
 
     // eligibility: combined weight under the cap for EVERY constraint (P7)
     def capOk: Column = (0 until ncon).map { c =>
       element_at(col("sw"), c + 1) + element_at(col("dw"), c + 1) <= caps(c)
     }.reduce(_ && _)
 
-    // rounds run while the level is stalled and the last round paired
-    // someone, up to the `rounds` cap
     val n = if (nVerts >= 0) nVerts else unmatched.count()
-    var left = n
-    var ran = 0
-    var progress = true
-    while (ran < rounds && progress && stalled(left, n)) {
-      ran += 1
+    val ran = handshake(scheme, rounds, n) { () =>
       val um = unmatched.select(col("vid"), col("vwgts"), col("deg"))
       val elig = sym
         .join(dim(um.select(col("vid").as("src"), col("vwgts").as("sw"))),
@@ -140,7 +182,9 @@ object Matching {
         .filter(col("a.u") < col("a.partner"))
         .select(col("a.u").as("u"), col("a.partner").as("v"))
       val prevPairs = pairs
-      pairs = graft.plans.Plans.checkpoint(pairs.unionByName(mutual))
+      val (next, cnt) = GraftSqlInternals.statlessLocalCheckpointCounted(
+        pairs.unionByName(mutual), StorageLevel.MEMORY_AND_DISK)
+      pairs = next; nPairs = cnt
       // prevPairs is folded into the new checkpoint — release its blocks
       // (checkpoints are never evicted on their own; leaking one per round
       // per level pins O(levels·rounds·|V|) rows for the session)
@@ -151,26 +195,250 @@ object Matching {
         .join(dim(matchedVids), Seq("vid"), "left_anti")
         .persist()
       val nextLeft = nextUnmatched.count()
-      progress = nextLeft < left
-      left = nextLeft
       unmatched.unpersist()
       unmatched = nextUnmatched
+      nextLeft
     }
-    if (progress && stalled(left, n))
-      graft.plans.Metrics.event(s"${scheme.toString.toLowerCase}_round_cap",
-        s"$left/$n vertices unmatched after the $rounds-round cap")
     val matchedMap = pairs.select(col("u").as("vid"), col("u").as("coarse"))
       .unionByName(pairs.select(col("v").as("vid"), col("u").as("coarse")))
     val selfMap = unmatched.select(col("vid"), col("vid").as("coarse"))
     // spill-level: the cmap is LEVEL STATE — held until uncoarsening, read
     // a handful of times; serialized rows keep the level stack small on heap
     val out = graft.plans.Plans.checkpointSpill(matchedMap.unionByName(selfMap))
-    if (ownSym) sym.unpersist()
     unmatched.unpersist()
     graft.plans.Plans.unpersist(pairs)
-    (out, ran)
+    (out, ran, nPairs)
   }
 
+  /** Level-constant vertex state of the driver-resident handshake: vids
+    * sorted ascending (a vertex is its index here, so index order is vid
+    * order), their degrees, and their weights `ncon` to a vertex.
+    *
+    * [[index]] maps a vid to its index through open addressing over int
+    * slots (index + 1, 0 = empty), Fibonacci-hashed at load ≤ ½: one or
+    * two cache misses per lookup. A binary search of the sorted vids takes
+    * ~log2(V) dependent misses, twice per directed edge per round; at 2M
+    * vertices the index cut a SHEM call from 28 s to 20 s (NOTES.md).
+    */
+  private final class VState(val vids: Array[Long], val deg: Array[Long],
+                             val wgts: Array[Long]) extends Serializable {
+    private val bits =
+      64 - java.lang.Long.numberOfLeadingZeros(2L * math.max(vids.length, 1) - 1)
+    private val mask = (1 << bits) - 1
+    private val slots = new Array[Int](1 << bits)
+    private def home(v: Long): Int =
+      ((v * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+    locally {
+      var i = 0
+      while (i < vids.length) {
+        var s = home(vids(i))
+        while (slots(s) != 0) s = (s + 1) & mask
+        slots(s) = i + 1
+        i += 1
+      }
+    }
+
+    /** The index of `v`, or -1 when `v` is not a vertex of the level. */
+    def index(v: Long): Int = {
+      var s = home(v)
+      while (slots(s) != 0) {
+        val i = slots(s) - 1
+        if (vids(i) == v) return i
+        s = (s + 1) & mask
+      }
+      -1
+    }
+  }
+
+  /** The proposal order of both schemes over vertex indices — the join
+    * path's `max(struct(key, -tie, -dst))`: the higher key wins (SHEM: the
+    * edge weight; RM: the seeded edge hash), then the lower `tie` (SHEM:
+    * the partner's degree; RM: none, `tie == null`), then the lower partner.
+    */
+  private final class Rank(tie: Array[Long]) {
+    def better(k1: Long, d1: Int, k2: Long, d2: Int): Boolean =
+      k1 > k2 || k1 == k2 && {
+        val t1 = if (tie == null) 0L else tie(d1)
+        val t2 = if (tie == null) 0L else tie(d2)
+        t1 < t2 || t1 == t2 && d1 < d2
+      }
+  }
+
+  /** One partition's best proposal per src index: open addressing over int
+    * keys with primitive slots — this runs once per edge, where a boxed map
+    * would allocate per edge (NOTES.md, "LongMap boxes its values").
+    */
+  private final class Proposals(rank: Rank) {
+    private var mask = 255
+    private var src = Array.fill(mask + 1)(-1)
+    private var key = new Array[Long](mask + 1)
+    private var dst = new Array[Int](mask + 1)
+    private var size = 0
+
+    private def slot(s: Int): Int = {
+      val h = s * 0x9E3779B9
+      var i = (h ^ (h >>> 16)) & mask
+      while (src(i) >= 0 && src(i) != s) i = (i + 1) & mask
+      i
+    }
+
+    def offer(s: Int, k: Long, d: Int): Unit = {
+      val i = slot(s)
+      if (src(i) < 0) {
+        src(i) = s; key(i) = k; dst(i) = d; size += 1
+        if (2 * size > mask) grow()
+      } else if (rank.better(k, d, key(i), dst(i))) { key(i) = k; dst(i) = d }
+    }
+
+    private def grow(): Unit = {
+      val (os, ok, od) = (src, key, dst)
+      mask = mask * 2 + 1
+      src = Array.fill(mask + 1)(-1)
+      key = new Array[Long](mask + 1)
+      dst = new Array[Int](mask + 1)
+      var j = 0
+      while (j < os.length) {
+        if (os(j) >= 0) {
+          val i = slot(os(j)); src(i) = os(j); key(i) = ok(j); dst(i) = od(j)
+        }
+        j += 1
+      }
+    }
+
+    /** (src, key, dst) of every proposal, as parallel arrays. */
+    def result: (Array[Int], Array[Long], Array[Int]) = {
+      val live = src.indices.filter(src(_) >= 0).toArray
+      (live.map(src), live.map(key), live.map(dst))
+    }
+  }
+
+  /** The driver-resident handshake: the vertex state is gathered once into
+    * sorted primitive arrays and broadcast once; each round broadcasts only
+    * the unmatched bitmap and runs one per-partition kernel over `sym` that
+    * emits each src's best eligible proposal. The driver merges those by
+    * the same rank (so the result does not depend on how `sym` is
+    * partitioned), keeps the mutual pairs, and clears their bits.
+    */
+  private def driverRounds(state: DataFrame, sym: DataFrame,
+                           caps: Array[Long], rounds: Int, scheme: Scheme,
+                           seed: Long, n: Long): (DataFrame, Int, Long) = {
+    val ncon = caps.length
+    val spark = state.sparkSession
+    val sc = spark.sparkContext
+    // one gather, each partition packed into primitive arrays (no Row per
+    // vertex on the driver)
+    val packed = state.select(col("vid").cast("long"), col("vwgts"),
+        col("deg").cast("long"))
+      .queryExecution.toRdd.mapPartitions { it =>
+        val v = new mutable.ArrayBuilder.ofLong
+        val d = new mutable.ArrayBuilder.ofLong
+        val w = new mutable.ArrayBuilder.ofLong
+        it.foreach { r =>
+          v += r.getLong(0)
+          val a = r.getArray(1)
+          var c = 0
+          while (c < ncon) { w += a.getLong(c); c += 1 }
+          d += r.getLong(2)
+        }
+        Iterator.single((v.result(), d.result(), w.result()))
+      }.collect()
+    val rawV = Array.concat(packed.map(_._1).toIndexedSeq: _*)
+    val rawD = Array.concat(packed.map(_._2).toIndexedSeq: _*)
+    val rawW = Array.concat(packed.map(_._3).toIndexedSeq: _*)
+    val vids = rawV.clone()
+    java.util.Arrays.sort(vids)
+    val nv = vids.length
+    val deg = new Array[Long](nv)
+    val vstate = new VState(vids, deg, new Array[Long](nv * ncon))
+    var i = 0
+    while (i < nv) {
+      val j = vstate.index(rawV(i))
+      deg(j) = rawD(i)
+      System.arraycopy(rawW, i * ncon, vstate.wgts, j * ncon, ncon)
+      i += 1
+    }
+    val stB = sc.broadcast(vstate)
+    val rm = scheme == RM
+    val rank = new Rank(if (rm) null else deg)
+    // the adjacency scan, planned once for every round (sym is persisted)
+    val edgeRows = sym.select(col("src").cast("long"), col("dst").cast("long"),
+      col("wgt").cast("long")).queryExecution.toRdd
+
+    val alive = new java.util.BitSet(nv)
+    alive.set(0, nv)
+    // cmap: coarse = min(vid, mate), self for the unmatched
+    val coarse = vids.clone()
+    var nPairs = 0L
+    val ran = handshake(scheme, rounds, n) { () =>
+      val aliveB = sc.broadcast(alive.toLongArray)
+      val props = edgeRows.mapPartitions { it =>
+        val st = stB.value
+        val live = java.util.BitSet.valueOf(aliveB.value)
+        val best = new Proposals(new Rank(if (rm) null else st.deg))
+        it.foreach { r =>
+          val s = r.getLong(0)
+          val si = st.index(s)
+          if (si >= 0 && live.get(si)) {
+            val d = r.getLong(1)
+            val di = st.index(d)
+            // eligibility: combined weight under EVERY constraint's cap (P7)
+            var ok = di >= 0 && live.get(di)
+            var c = 0
+            while (ok && c < ncon) {
+              ok = st.wgts(si * ncon + c) + st.wgts(di * ncon + c) <= caps(c)
+              c += 1
+            }
+            if (ok) {
+              // RM: Spark's xxhash64(least, greatest, seed) — seed-42
+              // chained through each argument, as catalyst's XxHash64 does
+              val k =
+                if (rm) XXH64.hashLong(seed, XXH64.hashLong(math.max(s, d),
+                  XXH64.hashLong(math.min(s, d), 42L)))
+                else r.getLong(2)
+              best.offer(si, k, di)
+            }
+          }
+        }
+        Iterator.single(best.result)
+      }.collect()
+      aliveB.destroy()
+      val bestKey = new Array[Long](nv)
+      val bestDst = Array.fill(nv)(-1)
+      props.foreach { case (ss, ks, ds) =>
+        var j = 0
+        while (j < ss.length) {
+          val s = ss(j)
+          if (bestDst(s) < 0 || rank.better(ks(j), ds(j), bestKey(s), bestDst(s))) {
+            bestKey(s) = ks(j); bestDst(s) = ds(j)
+          }
+          j += 1
+        }
+      }
+      // J2 handshake: mutual proposals pair, the lower vid first
+      var u = 0
+      while (u < nv) {
+        val p = bestDst(u)
+        if (p > u && bestDst(p) == u) {
+          coarse(p) = vids(u)
+          alive.clear(u); alive.clear(p)
+          nPairs += 1
+        }
+        u += 1
+      }
+      nv - 2 * nPairs
+    }
+    val coarseB = sc.broadcast(coarse)
+    // as many partitions as the shuffles that made the level's other frames:
+    // the uncoarsening projection inherits the cmap's partitioning
+    val rows = sc.range(0L, nv.toLong, 1L,
+        spark.sessionState.conf.numShufflePartitions).map { v =>
+      (stB.value.vids(v.toInt), coarseB.value(v.toInt))
+    }
+    val out = graft.plans.Plans.checkpointSpill(
+      spark.createDataFrame(rows).toDF("vid", "coarse"))
+    stB.destroy(); coarseB.destroy()
+    (out, ran, nPairs)
+  }
   /** Leaf matching (M4; reference S_coarsen_match_leaves,
     * src/aggregate.c:847-962 — disabled in the fork, re-expressed here
     * after the Metis 5.1.0 algorithm it cites): degree-1 vertices (leaves)

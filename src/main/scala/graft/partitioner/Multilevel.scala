@@ -34,6 +34,11 @@ import graft.operators.GraphOps
   * Level state lives in local checkpoints for one call only: unlike the
   * reference's out-of-core level dumps (src/asyncio.c), nothing is written
   * durably and an interrupted V-cycle starts again from the finest level.
+  * A level's V-sized state (cmap, weights, assignment) is broadcast against
+  * its E-sized scans whenever its vertex count is
+  * [[GraphOps.broadcastable]]; under the same rule the matching's
+  * handshake state stays in the driver for the whole call
+  * ([[Matching.cmapRounds]]), so a handshake round is one Spark job.
   */
 object Multilevel {
 
@@ -82,11 +87,12 @@ object Multilevel {
     // level stack 3-4x smaller so the active level's sort-merge joins keep
     // their execution memory (at 130M edges the deserialized stack starves
     // the unified pool and matching dies with UNABLE_TO_ACQUIRE_MEMORY)
-    val allVerts = vertices0.select(col("vid"), col("vwgts"))
-      .ckptSpill()
-    val allEdges = edges0.select(col("src"), col("dst"), col("wgt"))
-      .ckptSpill()
-    val nAll = allVerts.count()
+    // (the counted checkpoints hand back the row counts their
+    // materialization took — no separate count jobs)
+    val (allVerts, nAll) = vertices0.select(col("vid"), col("vwgts"))
+      .ckptSpillCounted()
+    val (allEdges, eAll) = edges0.select(col("src"), col("dst"), col("wgt"))
+      .ckptSpillCounted()
     if (nAll == 0)
       return PartitionResult(
         spark.createDataFrame(Seq.empty[(Long, Int)]).toDF("vid", "part"),
@@ -95,16 +101,14 @@ object Multilevel {
     // the graph is small, src/imetis.c:147-223): a distributed V-cycle on a
     // gatherable graph is pure scheduling overhead — collect once, solve in
     // the driver, parallelize only the result
-    val eAll = allEdges.count()
     if (nAll <= serialGraphVertices && eAll <= serialGraphEdges)
       return partitionSerialWhole(spark, allEdges, allVerts, k, ncon, ubFactor,
         coarsenTo, stopRatio, seed, nRuns, tgt)
     // F4: degree-0 islands skip the V-cycle entirely
     val (connected0, islands) = GraphOps.splitIslands(allVerts, allEdges)
     var edges = allEdges
-    var vertices = connected0.select(col("vid"), col("vwgts"))
-      .ckptSpill()
-    var nvtxs = vertices.count()
+    var (vertices, nvtxs) = connected0.select(col("vid"), col("vwgts"))
+      .ckptSpillCounted()
     var nedges = eAll
     // serial-tail dispatch bound (reference: serial FM/METIS below a size
     // threshold, src/eseprefine.c:1060-1097, src/imetis.c:147-223): once a
@@ -149,18 +153,19 @@ object Multilevel {
       val symL = GraphOps.symmetrize(edges).repartition(col("src")).persist()
       val degL = symL.groupBy(col("src").as("vid"))
         .agg(count(lit(1)).as("deg"), sum(col("wgt")).as("wdeg")).persist()
-      val (shem, shemRounds) = Matching.cmapRounds(edges, vertices, caps,
-        nVerts = nvtxs, symIn = symL, degIn = degL)
+      // matching keeps this level's vertex state in the driver whenever
+      // nvtxs is broadcastable (Matching.cmapRounds); the returned pair
+      // counts feed the P4 checks below without a count job
+      val (shem, shemRounds, paired) = Matching.cmapRounds(edges, vertices,
+        caps, nVerts = nvtxs, symIn = symL, degIn = degL)
       var cmap = shem
       // P4: SHEM ineffective (self-matched ratio >= 1/3) -> rerun with RM
-      val paired = cmap.filter(col("vid") =!= col("coarse")).count()
       val tShem = lap()
       var tRm = 0.0; var tHop = 0.0; var tFc = 0.0
       if (Matching.stalled(nvtxs - 2 * paired, nvtxs)) {
-        val rm = Matching.cmapMC(edges, vertices, caps,
+        val (rm, _, rmPaired) = Matching.cmapRounds(edges, vertices, caps,
           scheme = Matching.RM, seed = levelSeed, nVerts = nvtxs,
           symIn = symL, degIn = degL)
-        val rmPaired = rm.filter(col("vid") =!= col("coarse")).count()
         // release the losing cmap — superseded checkpoints never evict
         if (rmPaired > paired) {
           graft.plans.Plans.unpersist(cmap); cmap = rm
@@ -200,10 +205,8 @@ object Multilevel {
       levelSeed += 1
       val (ce, cv) = Contraction.contractMC(edges, vertices, cmap, ncon,
         nVerts = nvtxs)
-      val cEdges = ce.ckptSpill()
-      val cVerts = cv.ckptSpill()
-      val cn = cVerts.count()
-      val cne = cEdges.count()
+      val (cEdges, cne) = ce.ckptSpillCounted()
+      val (cVerts, cn) = cv.ckptSpillCounted()
       symL.unpersist(); degL.unpersist() // level-shared state is dead
       val tContract = lap()
       System.err.println(f"[mlevel-prof] level=${levels.size} nvtxs=$nvtxs " +

@@ -1,5 +1,7 @@
 package graft.plans
 
+import com.fasterxml.jackson.core.JsonFactoryBuilder
+import com.fasterxml.jackson.core.json.JsonWriteFeature
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -8,11 +10,15 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * the library. Strictness is the caller's half of the contract: put a
   * non-finite double through [[num]], which writes null instead of a bare
   * `NaN`. [[read]] is strict too: Jackson's defaults reject bare
-  * NaN/Infinity, and trailing tokens are rejected.
+  * NaN/Infinity, and trailing tokens are rejected. Output is ASCII only:
+  * every non-ASCII character is written as a `\uXXXX` escape, so a line
+  * survives a JVM whose `file.encoding` is POSIX ASCII (which would print
+  * `—` as `?`).
   */
 object Json {
 
-  private val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper(new JsonFactoryBuilder()
+      .enable(JsonWriteFeature.ESCAPE_NON_ASCII).build())
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   def obj(): ObjectNode = mapper.createObjectNode()

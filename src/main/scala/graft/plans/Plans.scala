@@ -51,5 +51,9 @@ object Plans {
   implicit final class CheckpointOps(private val df: DataFrame) extends AnyVal {
     def ckpt(): DataFrame = checkpoint(df)
     def ckptSpill(): DataFrame = checkpointSpill(df)
+    /** [[checkpointSpill]] with the row count its materialization took. */
+    def ckptSpillCounted(): (DataFrame, Long) =
+      GraftSqlInternals.statlessLocalCheckpointCounted(df,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
   }
 }

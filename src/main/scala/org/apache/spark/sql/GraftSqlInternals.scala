@@ -38,7 +38,15 @@ object GraftSqlInternals {
     * doesn't starve concurrent tasks of execution memory.
     */
   def statlessLocalCheckpoint(df: Dataset[Row],
-      level: org.apache.spark.storage.StorageLevel): Dataset[Row] = {
+      level: org.apache.spark.storage.StorageLevel): Dataset[Row] =
+    statlessLocalCheckpointCounted(df, level)._1
+
+  /** As above, also returning the row count that the eager
+    * materialization takes anyway — a caller that needs the count must not
+    * pay a second job for it.
+    */
+  def statlessLocalCheckpointCounted(df: Dataset[Row],
+      level: org.apache.spark.storage.StorageLevel): (Dataset[Row], Long) = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
     val spark = cdf.sparkSession
     // copy: whole-stage codegen reuses its UnsafeRow buffer; caching
@@ -46,8 +54,8 @@ object GraftSqlInternals {
     val rdd = cdf.queryExecution.toRdd.map(_.copy())
     rdd.persist(level) // localCheckpoint upgrades it to include disk
     rdd.localCheckpoint()
-    rdd.count() // eager materialization
-    spark.internalCreateDataFrame(rdd, cdf.schema)
+    val n = rdd.count() // eager materialization
+    (spark.internalCreateDataFrame(rdd, cdf.schema), n)
   }
 
   /** Drop the storage blocks behind a [[statlessLocalCheckpoint]] result

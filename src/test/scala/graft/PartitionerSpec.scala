@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.operators.GraphOps
 import graft.partitioner.{Contraction, InitialPartition, Matching, Multilevel, Refinement}
 
@@ -54,26 +57,116 @@ class PartitionerSpec extends SparkSpec {
     val caps = Array(2L) // unit weights: only pairs fit
     val vw = spark.createDataFrame(vids.map(v => (v, Seq(1L))))
       .toDF("vid", "vwgts")
-    val capped0 = graft.plans.Metrics.count("shem_round_cap")
-    val two = Matching.cmapMC(edgesDf(e), vw, caps, rounds = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Matching.stalled(unmatched(two), 12L),
-      s"2 rounds leave ${unmatched(two)}/12 unmatched")
-    assert(graft.plans.Metrics.count("shem_round_cap") == capped0 + 1,
-      "a stalled level that hits the round cap is counted")
-    val (cmDf, ran) = Matching.cmapRounds(edgesDf(e), vw, caps)
-    val cm = cmDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ran == 5, s"expected 5 rounds, ran $ran")
-    assert(unmatched(cm) == 2L && !Matching.stalled(unmatched(cm), 12L))
-    assert(graft.plans.Metrics.count("shem_round_cap") == capped0 + 1)
-    // still a valid capped matching: total, pairs of 2 across real edges,
-    // coarse id = min of the pair
-    assert(cm.keySet == vids.toSet)
-    val groups = cm.groupBy(_._2).values.map(_.keys.toSeq.sorted)
-    assert(groups.forall(_.size <= 2))
-    val edgeSet = e.map(t => (t._1, t._2)).toSet
-    assert(groups.filter(_.size == 2).forall(g => edgeSet((g(0), g(1)))))
-    assert(cm.groupBy(_._2).forall { case (c, g) => g.keys.min == c })
+    // nVerts -1 runs the join path, a known count the driver-resident one
+    for (nVerts <- Seq(-1L, 12L)) {
+      val capped0 = graft.plans.Metrics.count("shem_round_cap")
+      val two = Matching.cmapMC(edgesDf(e), vw, caps, rounds = 2,
+        nVerts = nVerts)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Matching.stalled(unmatched(two), 12L),
+        s"nVerts=$nVerts: 2 rounds leave ${unmatched(two)}/12 unmatched")
+      assert(graft.plans.Metrics.count("shem_round_cap") == capped0 + 1,
+        "a stalled level that hits the round cap is counted")
+      val (cmDf, ran, paired) = Matching.cmapRounds(edgesDf(e), vw, caps,
+        nVerts = nVerts)
+      val cm = cmDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(ran == 5, s"nVerts=$nVerts: expected 5 rounds, ran $ran")
+      assert(paired == 5L && paired == cm.count(kv => kv._1 != kv._2),
+        s"nVerts=$nVerts: $paired pairs returned")
+      assert(unmatched(cm) == 2L && !Matching.stalled(unmatched(cm), 12L))
+      assert(graft.plans.Metrics.count("shem_round_cap") == capped0 + 1)
+      // still a valid capped matching: total, pairs of 2 across real edges,
+      // coarse id = min of the pair
+      assert(cm.keySet == vids.toSet)
+      val groups = cm.groupBy(_._2).values.map(_.keys.toSeq.sorted)
+      assert(groups.forall(_.size <= 2))
+      val edgeSet = e.map(t => (t._1, t._2)).toSet
+      assert(groups.filter(_.size == 2).forall(g => edgeSet((g(0), g(1)))))
+      assert(cm.groupBy(_._2).forall { case (c, g) => g.keys.min == c })
+    }
+  }
+
+  /** A random level for the handshake property: Zipf-skewed endpoints
+    * (hubs), spread-out vids with a fifth of them islands, two-constraint
+    * weights under caps from 2 to 6 (tight: many edges are ineligible),
+    * and a round cap from 1 to 8.
+    */
+  private val levelGen = for {
+    n <- Gen.choose(20, 80)
+    m <- Gen.choose(n, 4 * n)
+    ends <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0.0, 1.0),
+      Gen.choose(1L, 4L)))
+    wgts <- Gen.listOfN(n + n / 5, Gen.zip(Gen.choose(1L, 3L), Gen.choose(1L, 3L)))
+    caps <- Gen.zip(Gen.choose(2L, 6L), Gen.choose(2L, 6L))
+    rounds <- Gen.choose(1, 8)
+    seed <- Gen.long
+  } yield {
+    def vid(i: Int) = 7L + 3L * i
+    val edges = ends.map { case (a, u, w) =>
+      val b = (math.pow(u, 3) * n).toInt.min(n - 1)
+      (vid(a min b), vid(a max b), w)
+    }.filter(t => t._1 != t._2).groupBy(t => (t._1, t._2)).values
+      .map(_.head).toSeq.sortBy(t => (t._1, t._2))
+    val verts = wgts.zipWithIndex.map { case ((w1, w2), i) => (vid(i), Seq(w1, w2)) }
+    (edges, verts, Array(caps._1, caps._2), rounds, seed)
+  }
+
+  test("driver-resident handshake equals the join path on random levels") {
+    for (i <- 0 until 12) {
+      val (e, verts, caps, rounds, seed) =
+        levelGen.pureApply(Gen.Parameters.default, Seed(20261019L + i))
+      val scheme = if (i % 2 == 0) Matching.SHEM else Matching.RM
+      val name = scheme.toString.toLowerCase
+      val vw = spark.createDataFrame(verts).toDF("vid", "vwgts")
+      def run(nVerts: Long, symIn: DataFrame) = {
+        val capped0 = graft.plans.Metrics.count(s"${name}_round_cap")
+        val (df, ran, paired) = Matching.cmapRounds(edgesDf(e), vw, caps,
+          rounds, scheme, seed, nVerts, symIn)
+        val cm = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(paired == cm.count(kv => kv._1 != kv._2),
+          s"case $i nVerts=$nVerts: returned $paired pairs")
+        (cm, ran, graft.plans.Metrics.count(s"${name}_round_cap") - capped0)
+      }
+      val join = run(-1L, null)
+      // the driver merge must not depend on how the adjacency is split:
+      // half the cases scan a round-robin split instead of the src hash
+      val sym = if (i % 4 < 2) null
+        else GraphOps.symmetrize(edgesDf(e)).repartition(3).persist()
+      val driver = run(verts.size.toLong, sym)
+      if (sym != null) sym.unpersist()
+      assert(driver == join, s"case $i ($scheme, ${e.size} edges, " +
+        s"caps ${caps.mkString("/")}, rounds $rounds): paths differ")
+      assert(join._1.keySet == verts.map(_._1).toSet)
+    }
+  }
+
+  test("driver-resident handshake equals the join path with 300 srcs in one partition") {
+    // a 300-vertex path plus weighted chords, scanned as ONE partition: its
+    // per-partition proposal map starts at 256 slots and rehashes past 128
+    // srcs, so the first round runs the rehash twice
+    val rnd = new scala.util.Random(300L)
+    val n = 300
+    val chords = Seq.fill(600)((rnd.nextInt(n), rnd.nextInt(n), 1L + rnd.nextInt(4)))
+    val e = ((0 until n - 1).map(i => (i, i + 1, 1L + rnd.nextInt(4))) ++ chords)
+      .filter(t => t._1 != t._2)
+      .map { case (a, b, w) => (11L + 5L * (a min b), 11L + 5L * (a max b), w) }
+      .groupBy(t => (t._1, t._2)).values.map(_.head).toSeq
+    val vw = spark.createDataFrame((0 until n).map(i => (11L + 5L * i, Seq(1L, 1L))))
+      .toDF("vid", "vwgts")
+    val sym = GraphOps.symmetrize(edgesDf(e)).repartition(1).persist()
+    for (scheme <- Seq(Matching.SHEM, Matching.RM)) {
+      def run(nVerts: Long, symIn: DataFrame) = {
+        val (df, ran, paired) = Matching.cmapRounds(edgesDf(e), vw,
+          Array(2L, 2L), scheme = scheme, nVerts = nVerts, symIn = symIn)
+        (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, ran, paired)
+      }
+      val join = run(-1L, null)
+      val driver = run(n.toLong, sym)
+      assert(driver == join, s"$scheme: paths differ")
+      assert(join._3 > 100L && join._3 == join._1.count(kv => kv._1 != kv._2),
+        s"$scheme: ${join._3} pairs")
+    }
+    sym.unpersist()
   }
 
   test("contraction conserves weights and drops only internal edges (A1)") {

@@ -205,6 +205,14 @@ class ScalingStatsSpec extends AnyFunSuite {
     intercept[Exception](Json.read("""{"seconds":NaN}"""))
   }
 
+  test("JSON is written as ASCII only and non-ASCII text round-trips") {
+    val o = Json.obj().put("note", "1 \u2014 2, \u00e9")
+    val text = Json.write(o)
+    assert(text.forall(_ < 0x80), text)
+    assert(text.contains("\\u2014"), text)
+    assert(Json.read(text).get("note").asText == "1 \u2014 2, \u00e9", text)
+  }
+
   test("a pair line parses strictly, carries host, and has no secondary pair") {
     val pr = PairResult(
       loForks = Seq(fork(4, 3, Seq(400, 400, 400), 1.2), RunResult(4, 10, 10, 3, 1.5)),
