@@ -262,10 +262,10 @@ object Scaling {
         // rebuilding it: the routing build + tiled counting sort cost ~10
         // min at 4 threads (untimed, but it is wall-clock the whole bench
         // pays per leg), and the state is thread-count-independent because
-        // the block layout is pinned across parallelism levels. Tiled
-        // PreBlocks are assembled straight from the edge rows (prepareRows
-        // — the full Csr.Block's long adjacency/weights never materialize,
-        // which is what let assembly OOM at high density)
+        // the block layout is pinned across parallelism levels. prepareRows
+        // assembles the tiled Csr.Blocks straight from the edge rows, with
+        // 4-byte weights and no 8-byte global adjacency (keeping those is
+        // what let assembly OOM at high density)
         val edges = spark.read.parquet(s"$outDir/edges")
         val nE = edges.count()
         val st = CsrDirect.prepareRows(spark, edges,

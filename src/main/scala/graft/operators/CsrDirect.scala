@@ -2,10 +2,11 @@ package graft.operators
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Single-exchange-per-iteration PageRank over CSR blocks, in the
+/** Single-exchange-per-iteration PageRank over the CSR blocks [[Csr]]
+  * builds ([[Csr.Block]]: destination-tiled edge arrays), in the
   * reference's owner-computes layout: each thread owns its vertices' rank
   * slots AND their adjacency slice (reference src/graph.c:1369-1454). Rank
   * state lives with the block that owns the vertex's out-edges, so one
@@ -46,101 +47,26 @@ object CsrDirect {
     override def hashCode: Int = n
   }
 
-  /** Accumulator tile size (2^16 doubles = 512 KB): the kernel's random
-    * writes land inside one L2-resident tile at a time instead of spraying
-    * an |dstVids|-sized (multi-MB) array — profiled at 130M edges, the
-    * untiled kernel's acc misses were the DRAM traffic that inflated
-    * per-task CPU 1.33x at 32 threads vs 8 (the scaling killer; NOTES.md
-    * round 3).
-    */
-  private val TileBits = 16
-
-  /** The block's compute state, built INLINE from [[Csr.Block]] during
-    * assembly so the full block (8-byte global adjacency + 8-byte weights
-    * = 16 B per directed edge the kernel never reads) is never cached:
-    *
-    *   - `srcT`/`dstT`/`wT`: the edges in destination-TILED order —
-    *     counting-sorted by `dstLocal >> TileBits` (stable, so within a
-    *     tile the CSR src-ascending order is preserved: each accumulator
-    *     slot still receives its partial sums in exactly the CSR order →
-    *     bit-identical results to the untiled walk). `srcT` indexes
-    *     `vids`, `dstT` indexes `dstVids`; weights are 4-byte
-    *     (range-checked at build);
-    *   - `wdegLoc`: this block's weighted out-degree per `vids` slot
-    *     (summed globally across split copies in [[prepare]]).
-    */
-  final case class PreBlock(blockId: Int, vids: Array[Long],
-                            dstVids: Array[Long],
-                            srcT: Array[Int], dstT: Array[Int], wT: Array[Int],
-                            wdegLoc: Array[Long]) {
-    def nvtxs: Int = vids.length
-  }
-
-  @inline private def intWeight(w: Long): Int = {
-    require(w >= Int.MinValue && w <= Int.MaxValue,
-      s"edge weight $w exceeds Int range (CsrDirect packs weights as 4-byte ints)")
-    w.toInt
-  }
-
-  private def toPre(b: Csr.Block): PreBlock =
-    tiled(b.blockId, b.vids, b.dstVids, b.xadj, b.adjLocal, b.wgts.map(intWeight))
-
-  /** The PreBlock of one CSR slice: a stable counting sort of its edges by
-    * destination tile `adjLocal(j) >> TileBits`, walked in CSR order, plus
-    * the local weighted degrees. `wgt` is indexed like `adjLocal`.
-    */
-  private def tiled(blockId: Int, vids: Array[Long], dstVids: Array[Long],
-                    xadj: Array[Int], adjLocal: Array[Int],
-                    wgt: Array[Int]): PreBlock = {
-    val nE = adjLocal.length
-    val nTiles = (dstVids.length >> TileBits) + 1
-    val pos = new Array[Int](nTiles)
-    var j = 0
-    while (j < nE) { pos(adjLocal(j) >> TileBits) += 1; j += 1 }
-    var run = 0
-    var t = 0
-    while (t < nTiles) { val c = pos(t); pos(t) = run; run += c; t += 1 }
-    val srcT = new Array[Int](nE)
-    val dstT = new Array[Int](nE)
-    val wT = new Array[Int](nE)
-    val wdegLoc = new Array[Long](vids.length)
-    var i = 0
-    while (i < vids.length) {
-      j = xadj(i)
-      while (j < xadj(i + 1)) {
-        val d = adjLocal(j)
-        val w = wgt(j)
-        wdegLoc(i) += w
-        val p = pos(d >> TileBits)
-        pos(d >> TileBits) = p + 1
-        srcT(p) = i; dstT(p) = d; wT(p) = w
-        j += 1
-      }
-      i += 1
-    }
-    PreBlock(blockId, vids, dstVids, srcT, dstT, wT, wdegLoc)
-  }
-
-  /** PreBlock + routing:
-    *   - `wdegG`: GLOBAL weighted out-degree aligned to `pre.vids` (a split
+  /** A [[Csr.Block]] + routing:
+    *   - `wdegG`: GLOBAL weighted out-degree aligned to `block.vids` (a split
     *     vertex's slices all carry the full-graph sum);
     *   - send: for consumer block `sendBlocks(k)`, `sendIdx(k)` lists the
-    *     positions in `pre.dstVids` (== the kernel's accumulator) whose
+    *     positions in `block.dstVids` (== the kernel's accumulator) whose
     *     destination vertex that consumer owns, ascending by vid;
     *   - recv: for producer block `recvBlocks(k)`, `recvIdx(k)` lists the
-    *     positions in `pre.vids` each message element adds into — built
+    *     positions in `block.vids` each message element adds into — built
     *     from the SAME vid-ascending order, so alignment is by construction;
-    *   - `primary`: positions in `pre.vids` this block emits in the final
+    *   - `primary`: positions in `block.vids` this block emits in the final
     *     rank output (the lowest-blockId owner of each vertex — split
     *     copies hold identical ranks; exactly one is reported).
     */
-  final case class DirectBlock(pre: PreBlock, wdegG: Array[Double],
+  final case class DirectBlock(block: Csr.Block, wdegG: Array[Double],
                                sendBlocks: Array[Int], sendIdx: Array[Array[Int]],
                                recvBlocks: Array[Int], recvIdx: Array[Array[Int]],
                                primary: Array[Int])
 
   final case class DirectState(blockStates: RDD[DirectBlock], n: Long, nBlocks: Int) {
-    def unpersistAll(): Unit = blockStates.unpersist()
+    def unpersistAll(): Unit = GraftSqlInternals.releaseCheckpoint(blockStates)
   }
 
   // ---- state spill/restore (raw big-endian array dump — ByteBuffer's
@@ -202,18 +128,18 @@ object CsrDirect {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     st.blockStates.foreachPartition { it: Iterator[DirectBlock] =>
       it.foreach { db =>
-        val p = java.nio.file.Paths.get(s"$dir/block-${db.pre.blockId}.bin")
+        val p = java.nio.file.Paths.get(s"$dir/block-${db.block.blockId}.bin")
         val ch = java.nio.channels.FileChannel.open(p,
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.WRITE,
           java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
         try {
           val hdr = java.nio.ByteBuffer.allocate(4)
-          hdr.putInt(db.pre.blockId); hdr.flip()
+          hdr.putInt(db.block.blockId); hdr.flip()
           while (hdr.hasRemaining) ch.write(hdr)
-          putLongs(ch, db.pre.vids); putLongs(ch, db.pre.dstVids)
-          putInts(ch, db.pre.srcT); putInts(ch, db.pre.dstT)
-          putInts(ch, db.pre.wT); putLongs(ch, db.pre.wdegLoc)
+          putLongs(ch, db.block.vids); putLongs(ch, db.block.dstVids)
+          putInts(ch, db.block.srcT); putInts(ch, db.block.dstT)
+          putInts(ch, db.block.wT); putLongs(ch, db.block.wdegLoc)
           putDoubles(ch, db.wdegG)
           putInts(ch, db.sendBlocks)
           db.sendIdx.foreach(putInts(ch, _))
@@ -252,7 +178,7 @@ object CsrDirect {
           val recvBlocks = getInts(bb)
           val recvIdx = recvBlocks.map(_ => getInts(bb))
           val primary = getInts(bb)
-          DirectBlock(PreBlock(blockId, vids, dstVids, srcT, dstT, wT,
+          DirectBlock(Csr.Block(blockId, vids, dstVids, srcT, dstT, wT,
             wdegLoc), wdegG, sendBlocks, sendIdx, recvBlocks, recvIdx,
             primary)
         }
@@ -262,102 +188,20 @@ object CsrDirect {
     DirectState(rdd, n, nBlocks)
   }
 
-  /** PreBlock assembly straight from (blockId, src, dst, wgt) rows — the
-    * memory-lean large-graph path: never materializes [[Csr.Block]]'s
-    * 8-byte global adjacency + 8-byte long weights (building full Blocks
-    * first OOM'd assembly at ~12M directed edges/block × 32 concurrent
-    * tasks in 20g; this path peaks at ~60% of that). Same row walk and
-    * block-run structure as Csr.assemble; weights are range-checked into
-    * ints at read time.
-    */
-  private def assemblePre(spark: SparkSession, symWithBlock: DataFrame,
-                          numBlocks: Int): RDD[(Int, PreBlock)] = {
-    val sorted = symWithBlock
-      .repartition(numBlocks, col("blockId"))
-      .sortWithinPartitions(col("blockId"), col("src"), col("dst"))
-      .select(col("blockId").cast("int"), col("src").cast("bigint"),
-        col("dst").cast("bigint"), col("wgt").cast("bigint"))
-    sorted.queryExecution.toRdd.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, PreBlock)]
-      var curBlock = -1
-      var curSrc = Long.MinValue
-      var curDeg = 0
-      val vids = new scala.collection.mutable.ArrayBuilder.ofLong
-      val degs = new scala.collection.mutable.ArrayBuilder.ofInt
-      // manual growable primitives for the per-edge streams: the backing
-      // array is consumed in place at close (no result() copy)
-      var adj = new Array[Long](1 << 16)
-      var wgtI = new Array[Int](1 << 16)
-      var nE = 0
-      def closeBlock(): Unit = if (curBlock >= 0) {
-        if (curSrc != Long.MinValue) degs += curDeg
-        val vidsA = vids.result(); vids.clear()
-        val degsA = degs.result(); degs.clear()
-        val xadj = new Array[Int](degsA.length + 1)
-        var i = 0
-        while (i < degsA.length) { xadj(i + 1) = xadj(i) + degsA(i); i += 1 }
-        val (dstVids, adjLocal) = Csr.localDict(adj, nE)
-        out += ((curBlock,
-          tiled(curBlock, vidsA, dstVids, xadj, adjLocal, wgtI)))
-        curSrc = Long.MinValue
-        curDeg = 0
-        nE = 0
-        // shrink the growables back so a big block doesn't pin its peak
-        // capacity across the rest of the partition
-        if (adj.length > (1 << 20)) adj = new Array[Long](1 << 16)
-        if (wgtI.length > (1 << 20)) wgtI = new Array[Int](1 << 16)
-      }
-      it.foreach { r =>
-        val b = r.getInt(0)
-        val s = r.getLong(1)
-        val d = r.getLong(2)
-        val w = intWeight(r.getLong(3))
-        if (b != curBlock) { closeBlock(); curBlock = b }
-        if (s != curSrc) {
-          if (curSrc != Long.MinValue) degs += curDeg
-          vids += s; curDeg = 0; curSrc = s
-        }
-        curDeg += 1
-        if (nE == adj.length) {
-          adj = java.util.Arrays.copyOf(adj, adj.length + (adj.length >> 1))
-          wgtI = java.util.Arrays.copyOf(wgtI, adj.length)
-        }
-        adj(nE) = d
-        wgtI(nE) = w
-        nE += 1
-      }
-      closeBlock()
-      out.iterator
-    }
-  }
-
-  /** Large-graph entry point: edge-balanced blocks assembled directly into
-    * tiled PreBlocks (see [[assemblePre]]).
+  /** Large-graph entry point: edge-balanced blocks ([[Csr.buildBalanced]])
+    * prepared for [[iterate]].
     */
   def prepareRows(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                   numBlocks: Int): DirectState =
-    prepareFromPre(spark,
-      assemblePre(spark, GraphOps.edgeBalancedSym(edges, numBlocks), numBlocks),
-      vertices, numBlocks)
+    prepare(Csr.buildBalanced(edges, numBlocks), vertices)
 
-  /** `vertices` supplies the FULL vertex set (isolated vertices included):
-    * the damping base (1-d)/n counts them.
-    * `numBlocksHint`: pass the builder's block count to skip an extra
-    * assembly pass just to find max(blockId).
+  /** Routing state over `blocks` as [[Csr.build]]/[[Csr.buildBalanced]]
+    * return them (one partition per block id). `vertices` supplies the
+    * FULL vertex set (isolated vertices included): the damping base
+    * (1-d)/n counts them.
     */
-  def prepare(spark: SparkSession, blocks: Dataset[Csr.Block],
-              vertices: DataFrame, numBlocksHint: Int = -1): DirectState = {
-    val nBlocks =
-      if (numBlocksHint > 0) numBlocksHint
-      else blocks.select(max(col("blockId"))).head().getInt(0) + 1
-    // tiled pre-state built inline: the full Block is a per-task transient
-    prepareFromPre(spark, blocks.rdd.map(b => (b.blockId, toPre(b))),
-      vertices, nBlocks)
-  }
-
-  private def prepareFromPre(spark: SparkSession,
-                             preRdd: RDD[(Int, PreBlock)],
-                             vertices: DataFrame, nBlocks: Int): DirectState = {
+  def prepare(blocks: RDD[(Int, Csr.Block)], vertices: DataFrame): DirectState = {
+    val nBlocks = blocks.getNumPartitions
     val nTotal = vertices.select(col("vid"))
       .repartition(col("vid")).distinct().count()
     val idB = new IdPartitioner(nBlocks)
@@ -370,7 +214,7 @@ object CsrDirect {
     }
     // one block per partition (identity layout); truncate lineage so the
     // upstream scan/shuffle files are GC-able (tmpfs shuffle dir)
-    val bRdd = preRdd.partitionBy(idB)
+    val bRdd = blocks.partitionBy(idB)
       .mapPartitions(_.map(_._2), preservesPartitioning = true)
       .localCheckpoint()
     bRdd.count()
@@ -420,7 +264,7 @@ object CsrDirect {
       .partitionBy(idB)
 
     // NOTE on memory: the DirectBlock below REFERENCES the cached
-    // PreBlock's arrays (no copy), so checkpointing it does not double the
+    // Block's arrays (no copy), so checkpointing it does not double the
     // edge-array footprint while both RDDs are resident; bRdd is
     // unpersisted once blockStates is materialized.
     val blockStates = bRdd.zipPartitions(sendsTo, recvsFrom, wdegTo) {
@@ -447,8 +291,8 @@ object CsrDirect {
       }
     }.localCheckpoint()
     blockStates.count()
-    bRdd.unpersist()
-    routes.unpersist()
+    GraftSqlInternals.releaseCheckpoint(bRdd)
+    GraftSqlInternals.releaseCheckpoint(routes)
     DirectState(blockStates, nTotal, nBlocks)
   }
 
@@ -458,7 +302,7 @@ object CsrDirect {
   private type Msg = (Int, (Int, Array[Double])) // (consumer, (producer, values))
 
   /** `iters` damped power iterations; ONE lazy lineage, ONE exchange per
-    * iteration. Returns (blockId, ranks aligned to pre.vids) — split
+    * iteration. Returns (blockId, ranks aligned to block.vids) — split
     * copies all carry the full rank; use [[ranks]]/[[toRanksDf]] for the
     * deduplicated per-vertex view.
     */
@@ -469,7 +313,7 @@ object CsrDirect {
 
     // contrib merged in producer-blockId order → deterministic double sums
     def mergedRanks(db: DirectBlock, mIt: Iterator[Msg]): Array[Double] = {
-      val contrib = new Array[Double](db.pre.nvtxs)
+      val contrib = new Array[Double](db.block.nvtxs)
       val rows = mIt.toArray.sortBy(_._2._1)
       val rpos = new java.util.HashMap[Integer, Integer]()
       db.recvBlocks.indices.foreach(k => rpos.put(db.recvBlocks(k), k))
@@ -481,17 +325,17 @@ object CsrDirect {
           while (i < idx.length) { contrib(idx(i)) += arr(i); i += 1 }
         }
       }
-      val rk = new Array[Double](db.pre.nvtxs)
+      val rk = new Array[Double](db.block.nvtxs)
       var i = 0
       while (i < rk.length) { rk(i) = base + damping * contrib(i); i += 1 }
       rk
     }
 
     def kernelOut(db: DirectBlock, rk: Array[Double]): Iterator[Msg] = {
-      val pre = db.pre
+      val blk = db.block
       // share per source vertex (nvtxs doubles — L2-resident; the srcT
       // reads below hit it randomly but cheaply)
-      val s = new Array[Double](pre.nvtxs)
+      val s = new Array[Double](blk.nvtxs)
       var i = 0
       while (i < s.length) {
         val w = db.wdegG(i)
@@ -499,11 +343,11 @@ object CsrDirect {
         i += 1
       }
       // tiled scatter-add: edges arrive sorted by dst tile, so the acc
-      // writes stay inside one 512 KB window at a time (see PreBlock)
-      val srcT = pre.srcT
-      val dstT = pre.dstT
-      val wT = pre.wT
-      val acc = new Array[Double](pre.dstVids.length)
+      // writes stay inside one 512 KB window at a time (see Csr.Block)
+      val srcT = blk.srcT
+      val dstT = blk.dstT
+      val wT = blk.wT
+      val acc = new Array[Double](blk.dstVids.length)
       var e = 0
       while (e < srcT.length) {
         acc(dstT(e)) += s(srcT(e)) * wT(e)
@@ -514,7 +358,7 @@ object CsrDirect {
         val out = new Array[Double](idx.length)
         var q = 0
         while (q < idx.length) { out(q) = acc(idx(q)); q += 1 }
-        (db.sendBlocks(k), (pre.blockId, out))
+        (db.sendBlocks(k), (blk.blockId, out))
       }
     }
 
@@ -523,7 +367,7 @@ object CsrDirect {
       if (!bIt.hasNext) Iterator.empty
       else {
         val db = bIt.next()
-        kernelOut(db, Array.fill(db.pre.nvtxs)(1.0 / n))
+        kernelOut(db, Array.fill(db.block.nvtxs)(1.0 / n))
       }
     }.partitionBy(idB)
     for (_ <- 2 to iters) {
@@ -540,7 +384,7 @@ object CsrDirect {
       if (!bIt.hasNext) { mIt.foreach(_ => ()); Iterator.empty }
       else {
         val db = bIt.next()
-        Iterator((db.pre.blockId, mergedRanks(db, mIt)))
+        Iterator((db.block.blockId, mergedRanks(db, mIt)))
       }
     }
   }
@@ -555,7 +399,7 @@ object CsrDirect {
         else {
           val db = bIt.next()
           val rk = rIt.next()._2
-          db.primary.iterator.map(i => (db.pre.vids(i), rk(i)))
+          db.primary.iterator.map(i => (db.block.vids(i), rk(i)))
         }
     }
 
@@ -576,11 +420,11 @@ object CsrDirect {
   /** End-to-end wrapper: blocks → `iters` iterations → (vid, rank) rows
     * over all of `vertices`.
     */
-  def pageRank(spark: SparkSession, blocks: Dataset[Csr.Block],
+  def pageRank(spark: SparkSession, blocks: RDD[(Int, Csr.Block)],
                vertices: DataFrame, damping: Double = 0.85,
                iters: Int = 10): DataFrame = {
     import graft.plans.Plans.CheckpointOps
-    val st = prepare(spark, blocks, vertices)
+    val st = prepare(blocks, vertices)
     val out = toRanksDf(spark, st, damping, iterate(st, damping, iters),
       vertices).ckpt()
     st.unpersistAll()

@@ -59,7 +59,7 @@ object EventsGraph {
   // materialized rows are tiny (gate-scale); production-scale reads go
   // through EdgeDeriver directly.
   private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+    (SparkSession, String, String), AnyRef]()
 
   /** Drop entries whose session has stopped so checkpointed DataFrames
     * and their RDD blocks don't stay pinned for the JVM lifetime when a
@@ -79,7 +79,7 @@ object EventsGraph {
         EdgeDeriver.simpleGraph(
           EdgeDeriver.edges(ts, vertexDict(ts),
             EdgeDeriver.Config(hubCap = HubCap))))
-    })
+    }).asInstanceOf[DataFrame]
   }
 
   /** Vertex set (vid) incl. both kinds. */
@@ -88,24 +88,27 @@ object EventsGraph {
     memo.computeIfAbsent((spark, sfDir, "verts"), _ =>
       graft.plans.Plans.checkpoint(
         vertexDict(transcripts(spark, sfDir)).select(col("vid"))))
+      .asInstanceOf[DataFrame]
   }
 
   /** Memoize an arbitrary gate derivation per (session, sfDir, key), same
     * lifecycle as the edge/vertex memo (dropped when the session stops).
-    * For gate queries that share an expensive checkpointed intermediate —
-    * e.g. the ND vertex separator consumed by three q_vsep* gates — so a
-    * Verify/Bench session derives it once, not once per query. `f` must
-    * return an already-checkpointed DataFrame. get-then-putIfAbsent (not
+    * For gate queries that share an expensive intermediate — e.g. the ND
+    * vertex separator consumed by three q_vsep* gates, or the balanced CSR
+    * blocks of q_pagerank_direct and q_csr_edge_stats — so a Verify/Bench
+    * session derives it once, not once per query. `f` must return an
+    * already-materialized value (a checkpointed DataFrame, a persisted and
+    * counted RDD); `key` names one type per use. get-then-putIfAbsent (not
     * computeIfAbsent) because `f` itself reads `edges`/`vertices` through
     * this same map and ConcurrentHashMap forbids recursive updates; a
     * lost race recomputes once, harmlessly.
     */
-  def memoized(spark: SparkSession, sfDir: String, key: String)
-              (f: => DataFrame): DataFrame = {
+  def memoized[A <: AnyRef](spark: SparkSession, sfDir: String, key: String)
+                            (f: => A): A = {
     purgeStopped()
     val k = (spark, sfDir, key)
     val cur = memo.get(k)
-    if (cur != null) cur
+    if (cur != null) cur.asInstanceOf[A]
     else {
       // derivation cost to stderr: the FIRST query to need this
       // intermediate pays it inside its own wall (bench timings are
@@ -116,7 +119,7 @@ object EventsGraph {
       System.err.println(
         f"[memo] derived $key ($sfDir) in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       val prev = memo.putIfAbsent(k, v)
-      if (prev != null) prev else v
+      if (prev != null) prev.asInstanceOf[A] else v
     }
   }
 

@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
-/** Minimal `private[sql]`-scope shim (this file lives in the
-  * `org.apache.spark.sql` package for access, nothing else).
+/** Minimal `private[sql]`/`private[spark]`-scope shim (this file lives in
+  * the `org.apache.spark.sql` package for access, nothing else).
   *
   * Why it exists: Spark 4.1's `Dataset.localCheckpoint` produces a
   * `LogicalRDD` that KEEPS the origin plan's `Statistics` and constraints
@@ -70,7 +70,16 @@ object GraftSqlInternals {
   def unpersistCheckpoint(df: Dataset[Row]): Unit =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
+        releaseCheckpoint(l.rdd)
       case _ => ()
     }
+
+  /** Drop the blocks of a dead local-checkpoint RDD. `RDD.unpersist` logs
+    * a WARN for every locally checkpointed RDD ("its lineage has been
+    * truncated…"), which is the intended effect of a release and was a
+    * third of a full test log; the `private[spark]` context call below is
+    * the same release without the warning.
+    */
+  def releaseCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.EventsGraph
 
 /** Gate-derivation memo (`EventsGraph.memoized`): shared intermediates like
-  * the ND vertex separator must be derived once per (session, sfDir, key)
-  * and returned as the SAME DataFrame to every consumer, while distinct
-  * keys/dirs stay independent.
+  * the ND vertex separator or the gate's CSR blocks must be derived once
+  * per (session, sfDir, key) and returned as the SAME value to every
+  * consumer, while distinct keys/dirs stay independent.
   */
 class EventsGraphMemoSpec extends SparkSpec {
 
@@ -36,5 +36,17 @@ class EventsGraphMemoSpec extends SparkSpec {
     }
     assert(!(a eq b) && !(a eq c))
     assert(a.count() == 3 && b.count() == 4 && c.count() == 6)
+  }
+
+  test("memoized holds non-DataFrame values (the gate's CSR block RDD)") {
+    val a = EventsGraph.memoized(spark, "/memo-spec/dirD", "rdd") {
+      val r = spark.sparkContext.parallelize(1 to 3).cache()
+      r.count()
+      r
+    }
+    val b = EventsGraph.memoized[org.apache.spark.rdd.RDD[Int]](
+      spark, "/memo-spec/dirD", "rdd")(fail("a memoized key must not re-derive"))
+    assert(a eq b)
+    assert(b.sum() == 6)
   }
 }

@@ -74,51 +74,66 @@ class GraphOpsSpec extends SparkSpec {
     assert(connected.unionByName(islands).count() == 12)
   }
 
-  test("CSR blocks: disjoint sorted vids, xadj consistent, 2|E| total") {
-    val e = Fixtures.zipf(250)
-    val df = edgesDf(e)
-    val bounds = GraphOps.edgeBalancedRanges(df, 4)
-    val blocks = Csr.build(spark, df, bounds).collect()
-    val totalEdges = blocks.map(_.nedges.toLong).sum
-    assert(totalEdges == 2L * e.size,
+  /** Structure every CSR block layout has: 2|E| directed rows, vids
+    * strictly ascending within a block, in-range tiled edge arrays whose
+    * `(vids(srcT), dstVids(dstT))` pairs are symmetric, local weighted
+    * degrees that sum the block's rows, and every vertex's degree —
+    * summed over its split copies — equal to its graph degree.
+    */
+  private def checkBlocks(e: Seq[(Long, Long, Long)],
+                          keyed: Array[(Int, Csr.Block)]): Array[Csr.Block] = {
+    assert(keyed.forall { case (id, b) => id == b.blockId })
+    val blocks = keyed.map(_._2)
+    assert(blocks.map(_.nedges.toLong).sum == 2L * e.size,
       "every undirected edge appears in exactly two CSR rows")
     for (b <- blocks) {
-      assert(b.xadj.head == 0 && b.xadj.last == b.adjncy.length)
-      assert(b.xadj.sliding(2).forall(p => p(0) <= p(1)), "xadj monotone")
       assert(b.vids.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
         "vids strictly ascending within a block")
-      assert(b.wgts.length == b.adjncy.length)
+      assert(b.dstT.length == b.nedges && b.wT.length == b.nedges)
+      assert(b.srcT.forall(i => i >= 0 && i < b.nvtxs))
+      assert(b.dstT.forall(j => j >= 0 && j < b.dstVids.length))
+      val wdeg = new Array[Long](b.nvtxs)
+      b.srcT.indices.foreach(j => wdeg(b.srcT(j)) += b.wT(j))
+      assert(wdeg.sameElements(b.wdegLoc), "wdegLoc sums the block's rows")
     }
-    val allVids = blocks.flatMap(_.vids)
-    assert(allVids.length == allVids.distinct.length, "blocks are disjoint")
-    assert(allVids.toSet == Fixtures.vertsOf(e).toSet)
-    // symmetry survives the encoding: (u,v) present <=> (v,u) present
     val dir = blocks.flatMap { b =>
-      b.vids.indices.flatMap { i =>
-        (b.xadj(i) until b.xadj(i + 1)).map(j => (b.vids(i), b.adjncy(j)))
-      }
-    }.toSet
-    assert(dir.forall { case (u, v) => dir((v, u)) })
+      b.srcT.indices.map(j => (b.vids(b.srcT(j)), b.dstVids(b.dstT(j))))
+    }
+    assert(dir.sorted.sameElements(dir.map(_.swap).sorted),
+      "symmetry survives the encoding: (u,v) present <=> (v,u) present")
+    val deg = dir.groupBy(_._1).map { case (v, g) => v -> g.length }
+    assert(deg == Oracles.adj(e).map { case (v, ns) => v -> ns.size },
+      "each vertex's degree is conserved across its block copies")
+    blocks
+  }
+
+  test("CSR range blocks: disjoint sorted vids, symmetric tiled edges, 2|E| total") {
+    for (e <- Seq(Fixtures.zipf(250), Fixtures.star17)) {
+      val df = edgesDf(e)
+      val blocks = checkBlocks(e,
+        Csr.build(df, GraphOps.edgeBalancedRanges(df, 4)).collect())
+      val allVids = blocks.flatMap(_.vids)
+      assert(allVids.length == allVids.distinct.length, "blocks are disjoint")
+      assert(allVids.toSet == Fixtures.vertsOf(e).toSet)
+    }
   }
 
   test("edge-granular CSR blocks: quota-bounded, hubs split (P15)") {
-    val e = Fixtures.star17 // hub 0 has degree 16
     val numBlocks = 4
-    val blocks = Csr.buildBalanced(spark, edgesDf(e), numBlocks).collect()
-    val total = blocks.map(_.nedges.toLong).sum
-    assert(total == 2L * e.size)
-    val quota = (2L * e.size + numBlocks - 1) / numBlocks // = 8
-    assert(blocks.forall(_.nedges <= quota),
-      "no block may exceed the edge quota — the skew-proof property")
-    // the hub's adjacency is split across >= 2 blocks
-    val hubBlocks = blocks.filter(_.vids.contains(0L)).map(_.blockId).distinct
+    def balanced(e: Seq[(Long, Long, Long)]): Array[Csr.Block] = {
+      val blocks = checkBlocks(e,
+        Csr.buildBalanced(edgesDf(e), numBlocks).collect())
+      val quota = (2L * e.size + numBlocks - 1) / numBlocks
+      assert(blocks.forall(_.nedges <= quota),
+        "no block may exceed the edge quota — the skew-proof property")
+      blocks
+    }
+    balanced(Fixtures.zipf(250))
+    // star17's hub (degree 16 > quota 8) is split across >= 2 blocks; its
+    // degree is conserved across the copies (checkBlocks)
+    val hubBlocks = balanced(Fixtures.star17)
+      .filter(_.vids.contains(0L)).map(_.blockId).distinct
     assert(hubBlocks.length >= 2, s"hub must be split, got $hubBlocks")
-    // per-vertex adjacency is conserved across the split
-    val hubDeg = blocks.flatMap { b =>
-      b.vids.indices.filter(i => b.vids(i) == 0L)
-        .map(i => b.xadj(i + 1) - b.xadj(i))
-    }.sum
-    assert(hubDeg == 16)
   }
 
   test("internal/external vertex counts (A10) against a dense oracle") {

@@ -76,11 +76,11 @@ class PageRankSpec extends SparkSpec {
       val want = Oracles.pageRank(e, verts, 0.85, 8)
       val bounds = GraphOps.edgeBalancedRanges(edgesDf(e), 4)
       withClue(s"$name vid ranges: ")(assertClose(collectRanks(
-        CsrDirect.pageRank(spark, Csr.build(spark, edgesDf(e), bounds),
+        CsrDirect.pageRank(spark, Csr.build(edgesDf(e), bounds),
           vertsDf(verts), 0.85, 8)), want))
       // edge-granular layout splits hubs but must compute the same function
       withClue(s"$name balanced: ")(assertClose(collectRanks(
-        CsrDirect.pageRank(spark, Csr.buildBalanced(spark, edgesDf(e), 4),
+        CsrDirect.pageRank(spark, Csr.buildBalanced(edgesDf(e), 4),
           vertsDf(verts), 0.85, 8)), want))
     }
   }
@@ -88,27 +88,42 @@ class PageRankSpec extends SparkSpec {
   test("single-exchange path (CsrDirect) computes the same ranks") {
     for ((name, e) <- cases) {
       val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
+      // the large-graph entry point (prepareRows → iterate → toRanksDf)
+      val st = CsrDirect.prepareRows(spark, edgesDf(e),
+        vertsDf(verts), numBlocks = 4)
       val got = collectRanks(
-        CsrDirect.pageRank(spark,
-          Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8))
+        CsrDirect.toRanksDf(spark, st, 0.85,
+          CsrDirect.iterate(st, 0.85, 8), vertsDf(verts)))
+      st.unpersistAll()
       // the DataFrame semantic reference: no dangling redistribution, so an
       // isolated vertex holds the damping base in both engines
       withClue(s"$name vs fixedIterations: ")(assertClose(got, collectRanks(
         PageRank.fixedIterations(edgesDf(e), vertsDf(verts), 0.85, 8))))
-      // the large-graph row-assembly path (prepareRows — no intermediate
-      // Csr.Block) must produce bit-identical state, hence identical ranks
-      val st = CsrDirect.prepareRows(spark, edgesDf(e),
-        vertsDf(verts), numBlocks = 4)
-      val rows = collectRanks(
-        CsrDirect.toRanksDf(spark, st, 0.85,
-          CsrDirect.iterate(st, 0.85, 8), vertsDf(verts)))
-      st.unpersistAll()
-      assert(rows.keySet == got.keySet, s"$name prepareRows vertex sets differ")
-      rows.foreach { case (v, r) =>
-        assert(math.abs(r - got(v)) <= 1e-12,
-          s"$name vid $v: prepareRows $r vs prepare ${got(v)}")
-      }
     }
+  }
+
+  test("a block whose dictionary spans 2 tiles: srcT ascends per tile, ranks match the oracle") {
+    // a 70k-leaf star plus a few cross edges, one block: > 2^16 distinct
+    // destinations, so the counting sort by tile actually reorders edges
+    val leaves = 70000L
+    val e = (1L to leaves).map(l => (0L, l, 1L + l % 3)) ++
+      Seq((1L, 2L, 2L), (5L, 66000L, 1L), (69998L, 70000L, 4L), (3L, 65537L, 1L))
+    val verts = Fixtures.vertsOf(e)
+    val blocks = Csr.buildBalanced(edgesDf(e), 1)
+    val b = blocks.collect().map(_._2).head
+    assert(b.dstVids.length > (1 << 16), "dictionary must span >= 2 tiles")
+    val tile = b.dstT.map(_ >> 16)
+    assert(tile.distinct.length >= 2)
+    // edges are grouped by tile, and the stable sort keeps CSR (src
+    // ascending) order inside each tile: the bit-identity invariant
+    for (j <- 1 until tile.length) {
+      assert(tile(j - 1) <= tile(j), s"edge $j: tiles out of order")
+      if (tile(j - 1) == tile(j))
+        assert(b.srcT(j - 1) <= b.srcT(j), s"edge $j: srcT descends in tile ${tile(j)}")
+    }
+    assertClose(collectRanks(
+      CsrDirect.pageRank(spark, blocks, vertsDf(verts), 0.85, 5)),
+      Oracles.pageRank(e, verts, 0.85, 5), tol = 1e-10)
   }
 
   test("CsrDirect state save/load round-trip is bit-exact") {
