@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.NullNode
-import graft.plans.Json
+import graft.plans.{Json, Metrics, Plans}
 
 /** Per-round benchmark (driver contract: ONE JSON line on stdout).
   *
@@ -34,17 +33,7 @@ object Bench {
     sys.props("graft.scale.deadline.ms") =
       (System.currentTimeMillis() + 3250L * 1000).toString
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.locality.wait", "0ms")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Plans.localSession("ERROR").getOrCreate()
     // Untimed one-time JVM warm-up: without it, whichever query sorts
     // first absorbs ~8-10 s of session cost that belongs to NO query —
     // Janino/codegen compiler bring-up, shuffle machinery, parquet reader
@@ -59,8 +48,7 @@ object Bench {
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .select(xxhash64(col("event_type"), col("n")).as("h"))
         .agg(expr("bit_xor(h)")).head()
-      System.err.println(
-        f"[bench] warmup ${(System.nanoTime() - t0) / 1e9}%.3f s (untimed)")
+      Metrics.log("bench_warmup", "wall_s" -> Metrics.secondsSince(t0))
     }
     // dev filter: SPARK_GRAFT_ONLY=q_a,q_b times just those queries
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -69,20 +57,19 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try {
+      val error = try {
         val df = fn(spark, sfDir)
         // force every column's VALUES, not just row existence
         df.select(xxhash64(df.columns.map(col): _*).as("h"))
           .agg(expr("bit_xor(h)")).head()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+        null
+      } catch { case e: Throwable => e.toString }
       val sec = (System.nanoTime() - t0) / 1e9
       // incremental per-query evidence: a timeout still leaves every
       // completed timing parseable from stderr (round 2 lost all 30
       // completed timings when one query hung)
-      System.err.println(f"[bench] $name%s $sec%.3f s")
-      System.err.flush()
+      Metrics.log("bench_query", "query" -> name, "wall_s" -> sec,
+        "error" -> error)
       name -> sec
     }
     val qs = Json.obj()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.operators.{CsrDirect, EdgeDeriver}
-import graft.plans.Json
+import graft.plans.{Json, Metrics}
 import graft.sources.Transcripts
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
@@ -185,8 +185,7 @@ object Scaling {
   private def budget(mb: Long, capMb: Long): Long = if (mb >= capMb * 0.95) capMb else mb
 
   private def withSession[A](cpus: Int)(body: SparkSession => A): A = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.plans.Plans.localSession("ERROR", cpus.toString)
       .appName(s"graft-scaling-$cpus")
       .config("spark.sql.shuffle.partitions", NumParts.toString)
       // the measured loop is the RDD kernel — Kryo for its tuple shuffles
@@ -207,15 +206,6 @@ object Scaling {
       // AQE stays ON: its runtime broadcast of the per-block rank arrays is
       // what keeps the CSR blocks from being re-shuffled every iteration
       // (measured 6x slower without it)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      // local mode: every task is process-local — never pay the locality
-      // scheduler's wait-and-see delay on the per-iteration stages
-      .config("spark.locality.wait", "0ms")
-      .config("spark.ui.enabled", "false")
-      // a config, so it holds while the context starts: its ~40 INFO
-      // lines per child would bury the [scaling] lines on shared stderr
-      .config("spark.log.level", "ERROR")
       .getOrCreate()
     try body(spark) finally spark.stop()
   }
@@ -286,7 +276,8 @@ object Scaling {
   private[graft] def prepStage(keyFile: java.nio.file.Path, key: String)(
       build: => Unit): Unit =
     if (Files.exists(keyFile) && Files.readString(keyFile).trim == key)
-      System.err.println(s"[scaling] reused ${keyFile.getFileName} ($key)")
+      Metrics.log("scaling_prep_reused", "stage" -> keyFile.getFileName,
+        "key" -> key)
     else {
       Files.deleteIfExists(keyFile)
       build
@@ -306,8 +297,8 @@ object Scaling {
     val tPrep0 = System.nanoTime()
     val st = CsrDirect.loadState(spark, s"$edgesDir/direct-state")
     val nE = Files.readString(Paths.get(s"$edgesDir/nedges.txt")).trim.toLong
-    val prepSec = (System.nanoTime() - tPrep0) / 1e9
-    System.err.println(f"[scaling] cpus=$cpus prep=${prepSec}%.2fs")
+    Metrics.log("scaling_load", "cpus" -> cpus,
+      "wall_s" -> Metrics.secondsSince(tPrep0))
     // Per-ITERATION timing via stage boundaries: the measured job is one
     // lineage of `iters` shuffle-map stages (one exchange per iteration)
     // plus a tiny result stage, and the stages of a single chain run
@@ -412,9 +403,9 @@ object Scaling {
       // child's JSON line; skip empty drains instead
       val med = median(perIter)
       if (!med.isNaN) trialMeds += med
-      val cut = if (done < iters) s" CAPPED at $done/$iters iters" else ""
-      System.err.println(f"[scaling] cpus=$cpus trial=$t ${dt}%.2fs " +
-        f"iterMed=$med%.0fms (${perIter.size} samples)$cut")
+      Metrics.log("scaling_trial", "cpus" -> cpus, "trial" -> t,
+        "wall_s" -> dt, "iter_median_ms" -> med, "samples" -> perIter.size,
+        "iters_done" -> done, "iters" -> iters)
       // reap the trial's shuffle files from the tmpfs dir before the
       // next trial (the timing above has already been taken)
       System.gc(); Thread.sleep(1000)
@@ -595,8 +586,8 @@ object Scaling {
   def pair(): ObjectNode = {
     val (plan, dir) = prepare(withState = true)
     // one disk serializes the legs' shuffle at every parallelism (see fork)
-    if (!plan.legTmpfs) System.err.println(s"[scaling] WARNING: /dev/shm has " +
-      s"${plan.host.shmFreeMb} MB free, under the ${plan.legHeapMb} MB leg heap: disk legs")
+    if (!plan.legTmpfs) Metrics.log("scaling_disk_legs",
+      "shm_free_mb" -> plan.host.shmFreeMb, "leg_heap_mb" -> plan.legHeapMb)
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
     json(pairForked(plan, dir, iters), plan)
   }
@@ -680,13 +671,12 @@ object Scaling {
       r match {
         case scala.util.Success(r) =>
           if (c == cpusLo) loF :+= r else hiF :+= r
-          System.err.println(f"[scaling] fork=$k cpus=$c wallMin=${r.seconds}%.2fs " +
-            f"iterMed=${r.iterMedianMs}%.0fms legWall=$wall%.0fs")
+          Metrics.log("scaling_leg", "fork" -> k, "cpus" -> c, "leg_wall_s" -> wall,
+            "wall_min_s" -> r.seconds, "iter_median_ms" -> r.iterMedianMs)
         case scala.util.Failure(e) =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(f"[scaling] fork=$k cpus=$c FAILED after " +
-            f"$wall%.0fs — continuing with remaining forks: " +
-            msg.linesIterator.take(1).mkString.take(300))
+          Metrics.log("scaling_leg_failed", "fork" -> k, "cpus" -> c,
+            "leg_wall_s" -> wall,
+            "error" -> e.toString.linesIterator.take(1).mkString.take(300))
       }
     }
     def runPair(k: Int): Unit = {
@@ -711,8 +701,7 @@ object Scaling {
       runPair(k)
     }
     if (k < BaseForks)
-      System.err.println(s"[scaling] deadline: stopped after $k/$BaseForks " +
-        "base fork pairs — emitting with what we have")
+      Metrics.log("scaling_deadline", "pairs" -> k, "base_pairs" -> BaseForks)
     // CONVERGENCE stopping rule (replaces the round-4 stop-on-pass):
     // the old hunt redrew only while the headline sat outside the pass
     // band — adaptive optional stopping on a min statistic, which
@@ -722,9 +711,10 @@ object Scaling {
     // ConvTol; extras go to whichever level is not yet converged (no-data
     // levels first), and the hunt stops the moment BOTH levels converge —
     // wherever the ratio then lands.
-    def state: String = f"eff=${if (loF.isEmpty || hiF.isEmpty) Double.NaN
-      else PairResult(loF, hiF, cpusLo, cpusHi).eff}%.3f " +
-      f"gap(lo)=${convGap(loF)}%.3f gap(hi)=${convGap(hiF)}%.3f"
+    def state: Seq[(String, Any)] = Seq(
+      "eff" -> (if (loF.isEmpty || hiF.isEmpty) Double.NaN
+        else PairResult(loF, hiF, cpusLo, cpusHi).eff),
+      "gap_lo" -> convGap(loF), "gap_hi" -> convGap(hiF), "tol" -> ConvTol)
     def converged(rs: Seq[RunResult]): Boolean = convGap(rs) <= ConvTol
     // redraw priority: a level with NO data, then the level further
     // from converging (its min-median is the less trustworthy one)
@@ -748,14 +738,15 @@ object Scaling {
       else {
         extra += 1
         k += 1
-        System.err.println(f"[scaling] $state (tol $ConvTol%.2f) — extra " +
-          s"cpus=$c ${if (full) "leg" else "SHORT (1-trial) leg"}, fork $k")
+        Metrics.log("scaling_extra_leg", state ++ Seq("cpus" -> c,
+          "fork" -> k, "short" -> !full): _*)
         runLeg(k, c, trials = if (full) None else Some(1))
       }
     }
     if (!allConverged)
-      System.err.println(s"[scaling] emitting UNCONVERGED $state (budget: " +
-        s"extra=$extra/$MaxExtra, fits=${fits(shortLegCost(retryCpus))})")
+      Metrics.log("scaling_unconverged", state ++ Seq("extra" -> extra,
+        "max_extra" -> MaxExtra,
+        "fits" -> fits(shortLegCost(retryCpus))): _*)
     require(loF.nonEmpty && hiF.nonEmpty, "every scaling fork at " +
       s"${if (loF.isEmpty) cpusLo else cpusHi} cpus failed — no data to emit")
     PairResult(loF, hiF, cpusLo, cpusHi)

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract smoke: run the flagship `SparkEntry.entry` on sf0.001
   * and assert rows > 0 (exactly what the driver's t1 check does).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.plans.Plans.localSession("WARN", cpus = "8").getOrCreate()
     val df = SparkEntry.entry(spark)
     df.show(10, truncate = false)
     val n = df.count()

@@ -487,7 +487,7 @@ object SparkEntry {
     // brute-force top-5 on the same embeddings. Every input is
     // deterministic (seeded sample, seeded init, fixed Lloyd iterations,
     // synthetic data), so the measured recall is a constant per SF and the
-    // gate is non-flaky; the raw recall goes to stderr for diagnostics.
+    // gate is non-flaky; the raw recall goes out as a `knn_recall` event.
     "q_knn_ivf_kmeans" -> { (s, d) =>
       val e = emb(s, d)
       val kk = 5; val nQ = 10
@@ -498,8 +498,8 @@ object SparkEntry {
       val nTruth = truth.count()
       val nHits = truth.join(got, Seq("qid", "neighbor")).count()
       val recall = nHits.toDouble / math.max(1L, nTruth)
-      System.err.println(f"[q_knn_ivf_kmeans] recall@$kk=$recall%.3f " +
-        s"($nHits/$nTruth)")
+      graft.plans.Metrics.log("knn_recall", "query" -> "q_knn_ivf_kmeans",
+        "k" -> kk, "recall" -> recall, "hits" -> nHits, "truth" -> nTruth)
       s.createDataFrame(Seq((nTruth, recall >= IvfKmeansRecallTau)))
         .toDF("n_truth", "recall_ge_tau")
     },

@@ -52,72 +52,55 @@ object EventsGraph {
     convs.unionByName(tools)
   }
 
-  // The gate graph is read by ~30 queries per Verify/Bench session, and
-  // several of them consume it in more than one action — memoize the
-  // CHECKPOINTED derivation per (session, sf dir) so the window+join
-  // pipeline runs once per session instead of once per action. The
-  // materialized rows are tiny (gate-scale); production-scale reads go
-  // through EdgeDeriver directly.
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), AnyRef]()
 
-  /** Drop entries whose session has stopped so checkpointed DataFrames
-    * and their RDD blocks don't stay pinned for the JVM lifetime when a
-    * caller (e.g. a test suite) creates and stops many sessions.
-    */
-  private def purgeStopped(): Unit = {
-    val it = memo.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
-
   /** Canonical simple edge table (src, dst, wgt), src < dst. */
-  def edges(spark: SparkSession, sfDir: String): DataFrame = {
-    purgeStopped()
-    memo.computeIfAbsent((spark, sfDir, "edges"), _ => {
+  def edges(spark: SparkSession, sfDir: String): DataFrame =
+    memoized(spark, sfDir, "edges") {
       val ts = transcripts(spark, sfDir)
       graft.plans.Plans.checkpoint(
         EdgeDeriver.simpleGraph(
           EdgeDeriver.edges(ts, vertexDict(ts),
             EdgeDeriver.Config(hubCap = HubCap))))
-    }).asInstanceOf[DataFrame]
-  }
+    }
 
   /** Vertex set (vid) incl. both kinds. */
-  def vertices(spark: SparkSession, sfDir: String): DataFrame = {
-    purgeStopped()
-    memo.computeIfAbsent((spark, sfDir, "verts"), _ =>
+  def vertices(spark: SparkSession, sfDir: String): DataFrame =
+    memoized(spark, sfDir, "verts") {
       graft.plans.Plans.checkpoint(
-        vertexDict(transcripts(spark, sfDir)).select(col("vid"))))
-      .asInstanceOf[DataFrame]
-  }
+        vertexDict(transcripts(spark, sfDir)).select(col("vid")))
+    }
 
-  /** Memoize an arbitrary gate derivation per (session, sfDir, key), same
-    * lifecycle as the edge/vertex memo (dropped when the session stops).
-    * For gate queries that share an expensive intermediate — e.g. the ND
-    * vertex separator consumed by three q_vsep* gates, or the balanced CSR
-    * blocks of q_pagerank_direct and q_csr_edge_stats — so a Verify/Bench
-    * session derives it once, not once per query. `f` must return an
-    * already-materialized value (a checkpointed DataFrame, a persisted and
-    * counted RDD); `key` names one type per use. get-then-putIfAbsent (not
-    * computeIfAbsent) because `f` itself reads `edges`/`vertices` through
-    * this same map and ConcurrentHashMap forbids recursive updates; a
-    * lost race recomputes once, harmlessly.
+  /** Memoize a gate derivation per (session, sfDir, key): the gate graph
+    * is read by ~30 queries per Verify/Bench session, some in several
+    * actions or through a shared intermediate (the ND separator of three
+    * q_vsep* gates, the balanced CSR blocks of q_pagerank_direct and
+    * q_csr_edge_stats), so each is derived once per session. `f` must
+    * return an already-materialized value (a checkpointed DataFrame, a
+    * persisted and counted RDD); `key` names one type per use. Entries of
+    * stopped sessions are dropped, so a caller that creates and stops many
+    * sessions (a test suite) does not pin their blocks for the JVM's life.
+    * get-then-putIfAbsent (not computeIfAbsent): `f` may itself read
+    * `edges`/`vertices` through this map, and ConcurrentHashMap forbids
+    * recursive updates; a lost race recomputes once, harmlessly.
     */
   def memoized[A <: AnyRef](spark: SparkSession, sfDir: String, key: String)
                             (f: => A): A = {
-    purgeStopped()
+    val it = memo.keySet.iterator()
+    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
     val k = (spark, sfDir, key)
     val cur = memo.get(k)
     if (cur != null) cur.asInstanceOf[A]
     else {
-      // derivation cost to stderr: the FIRST query to need this
+      // derivation cost as an event: the FIRST query to need this
       // intermediate pays it inside its own wall (bench timings are
       // therefore order-dependent for memo-sharing query families — the
-      // line makes the shared cost auditable instead of invisible)
+      // event makes the shared cost auditable instead of invisible)
       val t0 = System.nanoTime()
       val v = f
-      System.err.println(
-        f"[memo] derived $key ($sfDir) in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      graft.plans.Metrics.log("memo_derived", "key" -> key, "sf_dir" -> sfDir,
+        "wall_s" -> graft.plans.Metrics.secondsSince(t0))
       val prev = memo.putIfAbsent(k, v)
       if (prev != null) prev.asInstanceOf[A] else v
     }

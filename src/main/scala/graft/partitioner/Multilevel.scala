@@ -1,5 +1,6 @@
 package graft.partitioner
 
+import graft.plans.Metrics
 import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,6 +49,11 @@ object Multilevel {
   case class PartitionResult(assign: DataFrame, cut: Long, imbalance: Double,
                              levels: Int)
 
+  // edge bounds of the serial dispatches below (whole graph; tail): no
+  // caller sets them, serialGraphVertices = 0 turns both dispatches off
+  private val SerialGraphEdges = 2000000L
+  private val SerialTailEdges = 8000000L
+
   /** Scalar-weight entry point (vertices(vid, vwgt)). */
   def partition(spark: SparkSession, edges0: DataFrame, vertices0: DataFrame,
                 k: Int, ubFactor: Double = 1.03, coarsenTo0: Int = 0,
@@ -75,9 +81,7 @@ object Multilevel {
                   targets: Array[Double] = null,
                   serialRefineThreshold: Long = 4096L,
                   serialGraphVertices: Long = 50000L,
-                  serialGraphEdges: Long = 2000000L,
-                  serialTailVertices: Long = 200000L,
-                  serialTailEdges: Long = 8000000L): PartitionResult = {
+                  serialTailVertices: Long = 200000L): PartitionResult = {
     val tgt = if (targets != null) targets else Array.fill(k)(1.0 / k)
     val coarsenTo = if (coarsenTo0 > 0) coarsenTo0 else math.max(30 * k, 200)
     // materialize both inputs ONCE (stats-free checkpoint), so the dispatch
@@ -101,7 +105,7 @@ object Multilevel {
     // the graph is small, src/imetis.c:147-223): a distributed V-cycle on a
     // gatherable graph is pure scheduling overhead — collect once, solve in
     // the driver, parallelize only the result
-    if (nAll <= serialGraphVertices && eAll <= serialGraphEdges)
+    if (nAll <= serialGraphVertices && eAll <= SerialGraphEdges)
       return partitionSerialWhole(spark, allEdges, allVerts, k, ncon, ubFactor,
         coarsenTo, stopRatio, seed, nRuns, tgt)
     // F4: degree-0 islands skip the V-cycle entirely
@@ -119,7 +123,6 @@ object Multilevel {
     // (the collect is a one-off, not the whole job); serialGraphVertices=0
     // (the force-distributed override) disables the tail too.
     val tailV = if (serialGraphVertices <= 0) 0L else serialTailVertices
-    val tailE = if (serialGraphEdges <= 0) 0L else serialTailEdges
     def wc(c: Int) = element_at(col("vwgts"), c + 1)
     val tvCols = (0 until ncon).map(c => sum(wc(c)).as(s"t$c"))
     val tvAll = allVerts.agg(tvCols.head, tvCols.tail: _*).head()
@@ -131,20 +134,10 @@ object Multilevel {
     var levels = List.empty[Level] // finest first
     var shrinking = true
     var levelSeed = seed
-    val tStart = System.nanoTime()
-    def elapsed: String = f"${(System.nanoTime() - tStart) / 1e9}%.0fs"
     while (nvtxs > coarsenTo && shrinking &&
-           !(nvtxs <= tailV && nedges <= tailE)) {
-      System.err.println(
-        s"[mlevel] coarsen level ${levels.size}: nvtxs=$nvtxs " +
-          s"nedges=$nedges t=$elapsed")
-      // per-phase wall clocks (stderr diagnostics; the scale profile of a
-      // multi-hour V-cycle is unreadable without them)
-      var tMark = System.nanoTime()
-      def lap(): Double = {
-        val now = System.nanoTime()
-        val d = (now - tMark) / 1e9; tMark = now; d
-      }
+           !(nvtxs <= tailV && nedges <= SerialTailEdges)) {
+      val tLevel = System.nanoTime()
+      var schemes = "shem"
       // level-shared adjacency state: the symmetrized edge table
       // (partitioned by src) and the degree table are reused by every
       // matching scheme the M5 dispatch tries at this level — without
@@ -160,8 +153,6 @@ object Multilevel {
         caps, nVerts = nvtxs, symIn = symL, degIn = degL)
       var cmap = shem
       // P4: SHEM ineffective (self-matched ratio >= 1/3) -> rerun with RM
-      val tShem = lap()
-      var tRm = 0.0; var tHop = 0.0; var tFc = 0.0
       if (Matching.stalled(nvtxs - 2 * paired, nvtxs)) {
         val (rm, _, rmPaired) = Matching.cmapRounds(edges, vertices, caps,
           scheme = Matching.RM, seed = levelSeed, nVerts = nvtxs,
@@ -170,7 +161,7 @@ object Multilevel {
         if (rmPaired > paired) {
           graft.plans.Plans.unpersist(cmap); cmap = rm
         } else graft.plans.Plans.unpersist(rm)
-        tRm = lap()
+        schemes += "+rm"
         // still stalled after RM -> 2-hop augmentation (leaf/twin pairs,
         // the star/hub shape neither edge-matching scheme can coarsen)
         val best = math.max(paired, rmPaired)
@@ -179,6 +170,7 @@ object Multilevel {
           cmap = Matching.augment2Hop(edges, vertices, cmap, caps(0),
             symIn = symL, degIn = degL)
           graft.plans.Plans.unpersist(pre2hop)
+          schemes += "+2hop"
           // M3 fall-through (mirror of the reference's scheme selection,
           // src/aggregate.c:2018-2135): if even leaf/twin pairing leaves
           // >= 1/3 of the level self-matched — e.g. hub-and-spoke shapes
@@ -186,9 +178,8 @@ object Multilevel {
           // clustering coarsens what 1-to-1 matching cannot
           val selfAfter = cmap.groupBy(col("coarse"))
             .agg(count(lit(1)).as("n")).filter(col("n") === 1).count()
-          tHop = lap()
           if (Matching.stalled(selfAfter, nvtxs)) {
-            graft.plans.Metrics.event("m3_clustering_dispatch",
+            Metrics.event("m3_clustering_dispatch",
               s"level ${levels.size}: $selfAfter/$nvtxs self-matched after " +
                 "SHEM+RM+2hop — falling through to FC clustering")
             val preFc = cmap
@@ -198,20 +189,25 @@ object Multilevel {
               caps(0), seed = levelSeed, symIn = symL,
               earlyStopSingles = nvtxs / 8)
             graft.plans.Plans.unpersist(preFc)
-            tFc = lap()
+            schemes += "+fc"
           }
         }
       }
       levelSeed += 1
+      // symL/degL persist lazily, so their first build (the symmetrize
+      // shuffle and the degree aggregate) runs inside the first matching
+      // call: match_s includes it
+      val matchSec = Metrics.secondsSince(tLevel)
+      val tContract = System.nanoTime()
       val (ce, cv) = Contraction.contractMC(edges, vertices, cmap, ncon,
         nVerts = nvtxs)
       val (cEdges, cne) = ce.ckptSpillCounted()
       val (cVerts, cn) = cv.ckptSpillCounted()
       symL.unpersist(); degL.unpersist() // level-shared state is dead
-      val tContract = lap()
-      System.err.println(f"[mlevel-prof] level=${levels.size} nvtxs=$nvtxs " +
-        f"shem=$tShem%.1fs shem_rounds=$shemRounds rm=$tRm%.1fs " +
-        f"hop2=$tHop%.1fs fc=$tFc%.1fs contract=$tContract%.1fs")
+      Metrics.log("coarsen_level", "level" -> levels.size, "nvtxs" -> nvtxs,
+        "nedges" -> nedges, "schemes" -> schemes, "shem_rounds" -> shemRounds,
+        "match_s" -> matchSec, "contract_s" -> Metrics.secondsSince(tContract),
+        "coarse_nvtxs" -> cn, "coarse_nedges" -> cne)
       shrinking = cn.toDouble / nvtxs <= stopRatio
       if (cn < nvtxs) {
         levels = Level(edges, vertices, cmap, nvtxs) :: levels
@@ -224,14 +220,8 @@ object Multilevel {
       }
     }
 
-    // initial partition on the coarsest graph, driver-side best-of-8.
-    // sorted: collect() row order is shuffle-fetch-order dependent, and the
-    // serial solver's BFS visits neighbors in adjacency insertion order —
-    // unsorted input would make the result run-dependent
-    val eArr = edges.select(col("src"), col("dst"), col("wgt")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(t => (t._1, t._2))
-    val vArr = vertices.select(col("vid"), col("vwgts")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
+    // initial partition on the coarsest graph, driver-side best-of-8
+    val (eArr, vArr) = gather(edges, vertices)
     val g = InitialPartition.fromEdgesMC(eArr, vArr, ncon)
     val finestEdges = if (levels.nonEmpty) levels.last.edges else edges
     val finestVerts = if (levels.nonEmpty) levels.last.vertices else vertices
@@ -269,8 +259,6 @@ object Multilevel {
       var levelIdx = levels.size
       for (lvl <- levels) {
         levelIdx -= 1
-        System.err.println(s"[mlevel] uncoarsen run=$run level=$levelIdx: " +
-          s"nvtxs=${lvl.nvtxs} t=$elapsed")
         val tLvl = System.nanoTime()
         // J4 projection join: fine inherits coarse part through cmap
         val projected = lvl.cmap
@@ -282,17 +270,17 @@ object Multilevel {
         // now (it is never bestAssign: that is only ever a FINEST-level
         // assignment from a previous run)
         graft.plans.Plans.unpersist(assign)
+        val serial = lvl.nvtxs <= serialRefineThreshold
         assign =
-          if (lvl.nvtxs <= serialRefineThreshold)
-            serialRefine(spark, lvl, projected, k, ncon, ubFactor, tgt)
+          if (serial) serialRefine(spark, lvl, projected, k, ncon, ubFactor, tgt)
           else Refinement.refineMC(spark, lvl.edges, lvl.vertices,
             projected, k, ubFactor, ncon = ncon, targets = tgt,
             nVerts = lvl.nvtxs)
         // refine returned its own checkpoint; the projection is dead
         graft.plans.Plans.unpersist(projected)
-        System.err.println(f"[mlevel-prof] uncoarsen run=$run " +
-          f"level=$levelIdx nvtxs=${lvl.nvtxs} " +
-          f"refine=${(System.nanoTime() - tLvl) / 1e9}%.1fs")
+        Metrics.log("uncoarsen_level", "run" -> run, "level" -> levelIdx,
+          "nvtxs" -> lvl.nvtxs, "serial_refine" -> serial,
+          "wall_s" -> Metrics.secondsSince(tLvl))
       }
       val cut = GraphOps.edgeCut(finestEdges, assign,
         if (levels.nonEmpty) levels.last.nvtxs else nvtxs)
@@ -325,16 +313,8 @@ object Multilevel {
                                    ubFactor: Double, coarsenTo: Int,
                                    stopRatio: Double, seed: Long, nRuns: Int,
                                    tgt: Array[Double]): PartitionResult = {
-    val vArr = vertices0.select(col("vid"), col("vwgts")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    val eArr = edges0.select(col("src"), col("dst"), col("wgt")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2))
-    val tv = new Array[Long](ncon)
-    vArr.foreach { case (_, ws) =>
-      var c = 0
-      while (c < ncon) { tv(c) += ws(c); c += 1 }
-    }
+    val (eArr, vArr) = gather(edges0, vertices0)
+    val tv0 = vArr.iterator.map(_._2(0)).sum
     // F4: split degree-0 islands off the V-cycle
     val touched = new scala.collection.mutable.HashSet[Long]
     eArr.foreach { case (s, d, _) => touched += s; touched += d }
@@ -352,7 +332,7 @@ object Multilevel {
     // F4 restore, serial mirror of [[restoreIslands]] ([[islandBounds]])
     val islWhere = new Array[Int](isl.length)
     if (isl.nonEmpty) {
-      val cumBounds = islandBounds(pwgt, tgt, tv(0), isl.map(_._2(0)).sum)
+      val cumBounds = islandBounds(pwgt, tgt, tv0, isl.map(_._2(0)).sum)
       var cum = 0L
       isl.indices.foreach { i =>
         cum += isl(i)._2(0)
@@ -369,8 +349,8 @@ object Multilevel {
     var cut = 0L
     eArr.foreach { case (s, d, w) => if (whereOf(s) != whereOf(d)) cut += w }
     val imb =
-      if (tv(0) == 0) 1.0
-      else (0 until k).map(p => pwgt(p).toDouble / (tgt(p) * tv(0))).max
+      if (tv0 == 0) 1.0
+      else (0 until k).map(p => pwgt(p).toDouble / (tgt(p) * tv0)).max
     val rows = vArr.map { case (v, _) => (v, whereOf(v)) }.toIndexedSeq
     val assign = graft.plans.Plans.checkpoint(
       spark.createDataFrame(rows).toDF("vid", "part")
@@ -387,11 +367,7 @@ object Multilevel {
                            projected: DataFrame, k: Int, ncon: Int,
                            ubFactor: Double,
                            tgt: Array[Double]): DataFrame = {
-    val eArr = lvl.edges.select(col("src"), col("dst"), col("wgt")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2))
-    val vArr = lvl.vertices.select(col("vid"), col("vwgts")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
+    val (eArr, vArr) = gather(lvl.edges, lvl.vertices)
     val g = InitialPartition.fromEdgesMC(eArr, vArr, ncon)
     val whereMap = projected.collect()
       .map(r => r.getLong(0) -> r.get(1).toString.toInt).toMap
@@ -401,6 +377,21 @@ object Multilevel {
     spark.createDataFrame(
       g.vids.zip(refined).toSeq.map { case (v, p) => (v, p) })
       .toDF("vid", "part").ckpt()
+  }
+
+  /** One level in the driver: edges sorted by (src, dst), vertices by vid.
+    * collect() row order is shuffle-fetch-order dependent and the serial
+    * solvers visit neighbors in adjacency insertion order, so unsorted
+    * input would make their results run-dependent.
+    */
+  private def gather(edges: DataFrame, vertices: DataFrame)
+      : (Array[(Long, Long, Long)], Array[(Long, Array[Long])]) = {
+    val eArr = edges.select(col("src"), col("dst"), col("wgt")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy(t => (t._1, t._2))
+    val vArr = vertices.select(col("vid"), col("vwgts")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
+    (eArr, vArr)
   }
 
   /** max_p pwgt(p) / (targets(p)·tvwgt) — imbalance under target fractions

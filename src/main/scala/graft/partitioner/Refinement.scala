@@ -1,5 +1,6 @@
 package graft.partitioner
 
+import graft.plans.Metrics
 import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -466,8 +467,8 @@ object Refinement {
         bestCut = cut; best = cur; bestPw = pwCur
         if (oldBest ne cur) graft.plans.Plans.unpersist(oldBest)
       }
-      System.err.println(f"[refine] pass=$pass nV=$nV cut=$cut " +
-        f"imb=$imb%.4f t=${(System.nanoTime() - tPass) / 1e9}%.1fs")
+      Metrics.log("refine_pass", "pass" -> pass, "nvtxs" -> nV, "cut" -> cut,
+        "imbalance" -> imb, "wall_s" -> Metrics.secondsSince(tPass))
       pass += 1
     }
     if (cur ne best) graft.plans.Plans.unpersist(cur)
@@ -491,8 +492,8 @@ object Refinement {
           graft.plans.Plans.unpersist(oldBest)
         } else graft.plans.Plans.unpersist(next)
       }
-      System.err.println(f"[refine] hills phase=$hsPhase nV=$nV " +
-        f"t=${(System.nanoTime() - tHill) / 1e9}%.1fs")
+      Metrics.log("refine_hills", "phase" -> hsPhase, "nvtxs" -> nV,
+        "wall_s" -> Metrics.secondsSince(tHill))
     }
     sym.unpersist(); vw.unpersist()
     best

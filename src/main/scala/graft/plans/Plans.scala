@@ -1,9 +1,44 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlInternals}
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
 
-/** Plan-hygiene helpers. */
+/** Session and plan-hygiene helpers. */
 object Plans {
+
+  /** The builder of every local session, `cpus` threads (SPARK_GRAFT_CPUS,
+    * default the core count). Spark's log4j2 defaults are loaded here
+    * (silently), so `logLevel` already holds for the banner `SparkContext`
+    * logs as it starts. WindowExec stays at ERROR: it warns for every
+    * single-partition window, and the engine's are deliberate and bounded
+    * (SeparatorRefine's cumulative admit, GraphFiles' `lineno` ranks).
+    */
+  def localSession(logLevel: String, cpus: String = sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
+      : SparkSession.Builder = {
+    SparkLogging.init()
+    Configurator.setRootLevel(Level.toLevel(logLevel))
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // bound plan-string rendering: AQE re-renders explainString on every
+      // replan, and a deep lazy lineage (iterative PR/CC loops) makes each
+      // render O(plan size) — uncapped, one test burned 990 CPU-sec just
+      // building strings
+      .config("spark.sql.maxPlanStringLength", "16384")
+      // local mode: every task is process-local — never pay the locality
+      // scheduler's wait-and-see delay
+      .config("spark.locality.wait", "0ms")
+      .config("spark.ui.enabled", "false")
+  }
+
+  private object SparkLogging extends org.apache.spark.internal.Logging {
+    def init(): Unit = initializeLogIfNecessary(false, silent = true)
+  }
 
   /** Eager local checkpoint that strips inherited plan state. Spark 4.1's
     * `localCheckpoint` keeps the origin plan's constraints AND statistics on

@@ -86,7 +86,7 @@ class PartitionerExtSpec extends SparkSpec {
     val k = 4
     val v = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
     val r = Multilevel.partitionMC(spark, edgesDf(e), v, k, ncon = 1,
-      coarsenTo0 = 40, serialGraphVertices = 0L, serialGraphEdges = 0L)
+      coarsenTo0 = 40, serialGraphVertices = 0L)
     val parts = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     assert(parts.keySet == vids.toSet, "islands must be assigned too")
     assert(r.cut == GraphOps.edgeCut(edgesDf(e), r.assign))
@@ -250,7 +250,7 @@ class PartitionerExtSpec extends SparkSpec {
     val v = vertsDf(vids)
       .select(col("vid"), array(lit(1L)).as("vwgts"))
     val r = Multilevel.partitionMC(spark, edgesDf(e), v, k, ncon = 1,
-      coarsenTo0 = 60, serialGraphVertices = 0L, serialGraphEdges = 0L)
+      coarsenTo0 = 60, serialGraphVertices = 0L)
     val parts = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     assert(parts.keySet == vids.toSet, "totality")
     assert(r.imbalance <= 1.03 + 2.0 * k / vids.size + 1e-9,
@@ -280,8 +280,7 @@ class PartitionerExtSpec extends SparkSpec {
     val v = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
     val r = Multilevel.partitionMC(spark, edgesDf(e), v, 2, ncon = 1,
       coarsenTo0 = 60, serialRefineThreshold = 0L,
-      serialGraphVertices = 0L, serialGraphEdges = 0L,
-      serialTailVertices = 0L, serialTailEdges = 0L)
+      serialGraphVertices = 0L, serialTailVertices = 0L)
     val parts = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     assert(parts.keySet == vids.toSet, "totality")
     assert(r.imbalance <= 1.03 + 4.0 / (n * n) + 1e-9,

@@ -29,22 +29,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      // bound plan-string rendering: AQE re-renders explainString on every
-      // replan, and a deep lazy lineage (iterative PR/CC loops) makes each
-      // render O(plan size) — uncapped, one test burned 990 CPU-sec just
-      // building strings (round 3 thread dump). Same cap as the mains.
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    graft.plans.Plans.localSession("WARN", cpus = "4")
+      .appName("graft-tests").getOrCreate()
 }
 
 /** Canonical small graphs (FIXTURES.md §3): undirected, src < dst, unit or
