@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Plans
 import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -101,12 +102,15 @@ object ConnectedComponents {
       val nbrMin = sym
         .join(labels.withColumnRenamed("vid", "src"), "src")
         .groupBy(col("dst").as("vid")).agg(min(col("component")).as("nbr_min"))
-      labels = labels.join(nbrMin, Seq("vid"), "left")
+      val next = labels.join(nbrMin, Seq("vid"), "left")
         .select(col("vid"),
           least(col("component"), coalesce(col("nbr_min"), col("component")))
             .as("component"))
-      labels = labels.ckpt()
+        .ckpt()
+      Plans.unpersist(labels) // superseded round
+      labels = next
     }
+    Plans.unpersist(sym)
     labels
   }
 

@@ -26,10 +26,11 @@ import org.apache.spark.sql.expressions.Window
   */
 object EdgeDeriver {
 
-  case class Config(
-      hubCap: Int = 64,           // max clique size per tool before sparsifying
-      idBuckets: Int = 256,       // buckets for scalable dense-id assignment
-      includeConvTool: Boolean = true)
+  /** `hubCap`: max clique size per tool before sparsifying. */
+  case class Config(hubCap: Int = 64)
+
+  // buckets for the scalable dense-id assignment in [[vertices]]
+  private val IdBuckets = 256
 
   /** Vertex dictionary: (vid bigint, kind 'conv'|'tool', key string).
     *
@@ -39,7 +40,7 @@ object EdgeDeriver {
     * sums (B is small → driver-side). Ids are stable across runs and
     * independent of input partitioning.
     */
-  def vertices(transcripts: DataFrame, cfg: Config = Config()): DataFrame = {
+  def vertices(transcripts: DataFrame): DataFrame = {
     val convs = transcripts.select(col("conv_id").as("key")).distinct()
       .withColumn("kind", lit("conv"))
     val tools = transcripts.filter(col("tool").isNotNull)
@@ -47,14 +48,14 @@ object EdgeDeriver {
       .withColumn("kind", lit("tool"))
     val keys = convs.unionByName(tools)
       .withColumn("bucket",
-        pmod(xxhash64(col("kind"), col("key")), lit(cfg.idBuckets.toLong)).cast("int"))
-    // exact per-bucket counts -> driver prefix sums (idBuckets rows only)
+        pmod(xxhash64(col("kind"), col("key")), lit(IdBuckets.toLong)).cast("int"))
+    // exact per-bucket counts -> driver prefix sums (IdBuckets rows only)
     val counts = keys.groupBy(col("bucket")).count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).toMap
-    val offsets = (0 until cfg.idBuckets)
+    val offsets = (0 until IdBuckets)
       .scanLeft(0L)((acc, b) => acc + counts.getOrElse(b, 0L))
     val offsetDf = keys.sparkSession.createDataFrame(
-      (0 until cfg.idBuckets).map(b => (b, offsets(b)))
+      (0 until IdBuckets).map(b => (b, offsets(b)))
     ).toDF("bucket", "offset")
     val w = Window.partitionBy(col("bucket")).orderBy(col("kind"), col("key"))
     keys.withColumn("rnk", row_number().over(w) - 1)
@@ -139,8 +140,7 @@ object EdgeDeriver {
             cfg: Config = Config()): DataFrame = {
     val keyed = turnAdjacency(transcripts)
       .unionByName(sharedTool(transcripts, cfg))
-      .unionByName(if (cfg.includeConvTool) convTool(transcripts)
-                   else turnAdjacency(transcripts).limit(0))
+      .unionByName(convTool(transcripts))
     val vs = verts.select(col("vid"), col("kind"), col("key"))
     keyed
       .join(vs.withColumnRenamed("vid", "src_vid"),

@@ -32,8 +32,7 @@ object GraphOps {
     * GB of memory; above the threshold (10⁹-vertex cluster scale) every
     * call site falls back to the shuffle join unchanged.
     */
-  val BcastMaxVerts: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX_VERTS", "8000000").toLong
+  val BcastMaxVerts: Long = 8000000L
 
   /** Whether V-sized state of a caller-known `nRows` rows may pass
     * through the driver: within [[BcastMaxVerts]]; `nRows < 0` = unknown =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Plans
 import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -34,10 +35,13 @@ object LabelPropagation {
         .groupBy(col("vid"))
         .agg(max(struct(col("score"), (-col("label")).as("neg"))).as("w"))
         .select(col("vid"), (-col("w.neg")).as("new_label"))
-      labels = labels.join(winner, Seq("vid"), "left")
+      val next = labels.join(winner, Seq("vid"), "left")
         .select(col("vid"), coalesce(col("new_label"), col("label")).as("label"))
-      labels = labels.ckpt()
+        .ckpt()
+      Plans.unpersist(labels) // superseded round
+      labels = next
     }
+    Plans.unpersist(sym)
     labels
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Plans
 import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,13 +95,17 @@ object PageRank {
         .join(ranks.withColumnRenamed("vid", "src"), "src")
         .groupBy(col("dst").as("vid"))
         .agg(sum(col("rank") * col("share")).as("contrib"))
-      ranks = verts.join(contribs, Seq("vid"), "left")
+      val next = verts.join(contribs, Seq("vid"), "left")
         .select(col("vid"),
           (lit((1 - damping) / n) +
             lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      ranks = ranks.ckpt()
+        .ckpt()
+      Plans.unpersist(ranks) // superseded round (a no-op on the initial frame)
+      ranks = next
     }
     adj.unpersist()
+    // zero iterations return the initial frame, which reads verts lazily
+    if (iters > 0) Plans.unpersist(verts)
     ranks
   }
 

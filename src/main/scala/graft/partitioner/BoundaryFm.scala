@@ -25,6 +25,9 @@ import graft.operators.GraphOps
   *       bounds (maxwgt/minwgt = tpwgts·tvwgt·ub^±1,
   *       src/kwayrefine.c:1056-1059), super-vertices locked.
   *
+  *   R2  one 2-way [[InitialPartition.hillSweepK]] sweep between FM runs,
+  *       with the two super-vertices locked (never seeds, never absorbed).
+  *
   * Because the super-vertices carry the exact core weights, part weights on
   * the boundary graph EQUAL part weights on the full graph — balance checks
   * need no side channel, and a cut improvement on the boundary graph is the
@@ -128,8 +131,9 @@ object BoundaryFm {
     var refined = fm2way(g, where, locked, maxW, minW, passes)
     // R2 hill-scanning: clusters whose members are individually stuck
     // (gain ≤ 0) can still move with positive combined gain; a follow-up
-    // FM pass cleans up around moved hills
-    if (hillScan(g, refined, locked, maxW, minW) > 0)
+    // FM pass cleans up around moved hills. The super-vertices carry the
+    // core weights, so hillSweepK's bounds over g equal maxW/minW
+    if (InitialPartition.hillSweepK(g, 2, refined, ubFactor, targets, locked))
       refined = fm2way(g, refined, locked, maxW, minW, passes)
     val moved = g.vids.indices.iterator
       .filter(i => !locked(i) && refined(i) != where(i))
@@ -141,94 +145,6 @@ object BoundaryFm {
       .select(col("vid"),
         coalesce(col("newpart"), col("part")).cast("int").as("part"))
       .ckpt()
-  }
-
-  /** R2 hill-scanning pass (reference S_par_kwayrefine_HS
-    * src/kwayrefine.c:1217-1550, hill construction S_build_hill
-    * :599-772, hillsize=16 src/ctrl.c:44): vertices stuck at non-positive
-    * individual gain may still move profitably as a CLUSTER — for a
-    * connected set S moved together, gain(S) = Σ gain(v) + 2·w(S-internal
-    * edges) (internal edges stop being double-counted as losses). Grows a
-    * hill greedily around each stuck boundary vertex by the best
-    * marginal-gain neighbor; moves the hill when its combined gain is
-    * positive and both balance bounds hold. Mutates `where`; returns the
-    * number of hills moved. Deterministic: seeds and neighbors scan in
-    * index order, ties to the lower id.
-    */
-  private[partitioner] def hillScan(g: InitialPartition.LocalGraph,
-                                    where: Array[Int],
-                                    locked: Array[Boolean],
-                                    maxW: Array[Long], minW: Array[Long],
-                                    hillSize: Int = 16): Int = {
-    val n = g.nvtxs
-    val pw = Array.ofDim[Long](2)
-    for (v <- 0 until n) pw(where(v)) += g.w(v, 0)
-    def gainOf(v: Int): Long = {
-      var s = 0L
-      var j = g.xadj(v)
-      while (j < g.xadj(v + 1)) {
-        if (where(g.adjncy(j)) != where(v)) s += g.adjwgt(j) else s -= g.adjwgt(j)
-        j += 1
-      }
-      s
-    }
-    val inHill = new Array[Boolean](n)
-    val moved = new Array[Boolean](n)
-    var hillsMoved = 0
-    var seed = 0
-    while (seed < n) {
-      val from = where(seed)
-      val isBnd = (g.xadj(seed) until g.xadj(seed + 1))
-        .exists(j => where(g.adjncy(j)) != from)
-      if (!locked(seed) && !moved(seed) && isBnd && gainOf(seed) <= 0) {
-        val hill = scala.collection.mutable.ArrayBuffer(seed)
-        inHill(seed) = true
-        var combined = gainOf(seed)
-        var wsum = g.w(seed, 0)
-        // grow while the combined gain is non-positive and room remains
-        var grown = true
-        while (combined <= 0 && hill.size < hillSize && grown) {
-          var best = -1
-          var bestDelta = Long.MinValue
-          hill.foreach { h =>
-            var j = g.xadj(h)
-            while (j < g.xadj(h + 1)) {
-              val u = g.adjncy(j)
-              if (!inHill(u) && !locked(u) && !moved(u) && where(u) == from) {
-                // marginal combined-gain: gain(u) + 2·w(u, hill)
-                var delta = gainOf(u)
-                var jj = g.xadj(u)
-                while (jj < g.xadj(u + 1)) {
-                  if (inHill(g.adjncy(jj))) delta += 2L * g.adjwgt(jj)
-                  jj += 1
-                }
-                if (delta > bestDelta || (delta == bestDelta && (best < 0 || u < best))) {
-                  bestDelta = delta; best = u
-                }
-              }
-              j += 1
-            }
-          }
-          if (best < 0) grown = false
-          else {
-            hill += best
-            inHill(best) = true
-            combined += bestDelta
-            wsum += g.w(best, 0)
-          }
-        }
-        val to = 1 - from
-        if (combined > 0 && pw(to) + wsum <= maxW(to) &&
-            pw(from) - wsum >= minW(from)) {
-          hill.foreach { v => where(v) = to; moved(v) = true }
-          pw(from) -= wsum; pw(to) += wsum
-          hillsMoved += 1
-        }
-        hill.foreach(v => inHill(v) = false)
-      }
-      seed += 1
-    }
-    hillsMoved
   }
 
   /** Serial 2-way FM with rollback (FM1S shape, reference

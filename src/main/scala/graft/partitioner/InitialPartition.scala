@@ -250,23 +250,28 @@ object InitialPartition {
     where
   }
 
-  /** Serial k-way hill-scanning (R2 serial mirror — reference
-    * S_par_kwayrefine_HS src/kwayrefine.c:1217-1550, hill gain identity
-    * :599-772): a connected same-part set H of individually-stuck boundary
-    * vertices may still move TOGETHER with positive combined gain
+  // reference hillsize (src/ctrl.c:44)
+  private val HillSize = 16
+
+  /** Hill-scanning (R2 — reference S_par_kwayrefine_HS
+    * src/kwayrefine.c:1217-1550, hill gain identity :599-772), the engine's
+    * one hill scanner: a connected same-part set H of individually-stuck
+    * boundary vertices may still move TOGETHER with positive combined gain
     *   jgain(H→p) = Σ_{v∈H} conn_v(p) − (Σ_{v∈H} conn_v(home) − 2·w(E⊆H))
     * (edges inside H stay internal when the whole hill moves). Hills grow
     * from each stuck seed along the heaviest connection into the hill
-    * (maximizing the refund) up to `hillSize`; the first feasible positive
-    * target wins. Single-vertex greedy cannot escape these configurations —
-    * on hub-heavy graphs they are the difference between the serial tail's
-    * local optimum and the distributed BSP+hills chain it replaces.
-    * Mutates `where`; returns true if any hill moved.
+    * (maximizing the refund) up to [[HillSize]] vertices;
+    * the first feasible positive target wins, under both bounds for every
+    * constraint. Runs once per V-cycle, on the coarsest graph
+    * ([[SerialMultilevel.partition]]), and between the 2-way FM runs of
+    * [[BoundaryFm.refineBisection]]. `locked` vertices (default: none)
+    * are never seeds and never absorbed. Mutates `where`; returns true if
+    * any hill moved.
     */
   private[partitioner] def hillSweepK(g: LocalGraph, k: Int,
                                       where: Array[Int], ubFactor: Double,
                                       targets: Array[Double] = null,
-                                      hillSize: Int = 16): Boolean = {
+                                      locked: Array[Boolean] = null): Boolean = {
     val ncon = g.ncon
     val tgt = if (targets != null) targets else uniform(k)
     val (maxW, minW) = bounds(g, k, tgt, ubFactor)
@@ -283,7 +288,8 @@ object InitialPartition {
       }
     }
     val inHill = new Array[Boolean](n)
-    val moved = new Array[Boolean](n)
+    // vertices no hill may take: the locked ones and members of moved hills
+    val moved = if (locked != null) locked.clone() else new Array[Boolean](n)
     var movedAny = false
     val hconn = new Array[Long](k) // Σ conn_v(p) over hill members
     val hw = new Array[Long](ncon) // hill weight per constraint
@@ -346,7 +352,7 @@ object InitialPartition {
           }
           var target = bestTarget
           var grown = true
-          while (target < 0 && hill.size < hillSize && grown) {
+          while (target < 0 && hill.size < HillSize && grown) {
             // heaviest same-part connection into the hill (the refund)
             var best = -1
             var bestW = 0L

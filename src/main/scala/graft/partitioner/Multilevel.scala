@@ -18,8 +18,9 @@ import graft.operators.GraphOps
   *             leaves ≥ ⅓ self-matched — P4, src/aggregate.c:2049-2087) →
   *             contraction (A1 groupBy)] until nvtxs ≤ coarsenTo or shrink
   *             ratio > stopRatio (P6, partition.c:216-223, ctrl.c:57,260);
-  *   init:     collect coarsest to the driver, best-of-8 greedy growing
-  *             (P10, initpart.c:30-77);
+  *   init:     collect coarsest to the driver, best-of-8 greedy growing,
+  *             then hill-scanning (R2) and greedy refinement, all in
+  *             [[SerialMultilevel.partition]] (P10, initpart.c:30-77);
   *   uncoarsen: per level, projection join through cmap (J4,
   *             S_project_kway src/project.c:35-230) then bulk-synchronous
   *             greedy boundary refinement (R1) under per-constraint
@@ -220,17 +221,15 @@ object Multilevel {
       }
     }
 
-    // initial partition on the coarsest graph, driver-side best-of-8
+    // the coarsest graph is solved in the driver by the serial V-cycle:
+    // below coarsenTo that is best-of-8 growing + hills + greedy (P10); a
+    // level the coarsen loop left above coarsenTo (the serial-tail bounds)
+    // first coarsens further — greedy growing alone on a 200k-vertex graph
+    // is NOT an initial partitioner
     val (eArr, vArr) = gather(edges, vertices)
     val g = InitialPartition.fromEdgesMC(eArr, vArr, ncon)
     val finestEdges = if (levels.nonEmpty) levels.last.edges else edges
     val finestVerts = if (levels.nonEmpty) levels.last.vertices else vertices
-    // the coarsen loop stopped above coarsenTo: the gathered level still
-    // needs multilevel treatment — run the whole remaining tail (coarsen +
-    // init + refine back up) in the driver. Greedy growing alone on a
-    // 200k-vertex graph is NOT an initial partitioner (P10 assumes the
-    // coarsest graph); the serial V-cycle is
-    val serialTail = nvtxs > coarsenTo
     var tailLevels = 0
 
     // P11 best-of-nruns over the init+uncoarsen phase (coarsening is
@@ -238,17 +237,12 @@ object Multilevel {
     var bestAssign: DataFrame = null
     var bestCut = Long.MaxValue
     for (run <- 0 until nRuns) {
-      val where0 =
-        if (serialTail) {
-          // best-of-4 tail solves: the serial V-cycle costs seconds where
-          // the distributed levels it replaces cost minutes — spend some of
-          // that budget buying back init variance
-          val (w, nl) = SerialMultilevel.partition(g, k, ubFactor, coarsenTo,
-            stopRatio, seed + 7919L * run, 4, tgt)
-          tailLevels = nl
-          w
-        } else InitialPartition.partition(g, k, ubFactor, 8,
-          seed + 7919L * run, targets = tgt)
+      // best-of-4 serial solves: the serial V-cycle costs seconds where the
+      // distributed levels it replaces cost minutes — spend some of that
+      // budget buying back init variance
+      val (where0, nl) = SerialMultilevel.partition(g, k, ubFactor, coarsenTo,
+        stopRatio, seed + 7919L * run, 4, tgt)
+      tailLevels = nl
       var assign = spark.createDataFrame(
         g.vids.zip(where0).toSeq.map { case (v, p) => (v, p) }
       ).toDF("vid", "part").ckpt()

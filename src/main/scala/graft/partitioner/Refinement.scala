@@ -11,7 +11,7 @@ import graft.operators.GraphOps
   * the reference's chunked greedy k-way refinement
   * (par_kwayrefine_chunk, reference src/kwayrefine_chunk.c:471-843).
   *
-  * Per pass (≤ `passes`, reference nrefpass=8 src/ctrl.c:39):
+  * Per pass (≤ 8, reference nrefpass=8 src/ctrl.c:39):
   *   1. J5 neighbor-partition join (S_partparams_kway src/refine.c:39-211):
   *      per (vertex, neighbor part) summed edge weight → internal degree
   *      `id`, external degrees `ed(p)`;
@@ -35,27 +35,21 @@ import graft.operators.GraphOps
   *      kwayrefine.c:774-807) — consistent by construction in BSP;
   *   7. keep the best assignment seen (mincut tracking, kwayrefine.c:1186).
   *
-  * When the greedy passes stall, distributed hill-scanning rounds (R2,
-  * reference S_par_kwayrefine_HS src/kwayrefine.c:1217-1550) move connected
-  * sets of up to 16 adjacent individually-stuck vertices whose COMBINED
-  * gain is positive — see `hillMoves` below; serial
-  * [[BoundaryFm.hillScan]] covers gathered boundaries on the small-level
-  * dispatch path.
+  * Hill-scanning (R2) is not run here: it runs once per V-cycle, on the
+  * gathered coarsest graph ([[InitialPartition.hillSweepK]] inside
+  * [[SerialMultilevel.partition]]).
   *
   * Vertex weights are multi-constraint: `vertices(vid, vwgts array<bigint>)`
   * with `ncon` entries each (reference vwgt layout src/graph.h:44,55);
   * `targets` = per-part weight fractions (reference tpwgts), uniform by
-  * default. [[refine]] is the scalar (ncon=1) wrapper.
+  * default.
   */
 object Refinement {
 
-  /** Scalar-weight entry point: vertices(vid, vwgt). */
-  def refine(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-             assign0: DataFrame, k: Int, ubFactor: Double = 1.03,
-             passes: Int = 8): DataFrame =
-    refineMC(spark, edges,
-      vertices.select(col("vid"), array(col("vwgt")).as("vwgts")),
-      assign0, k, ubFactor, passes)
+  // reference nrefpass (src/ctrl.c:39) and the relative improvement a pass
+  // must beat for another pass to run
+  private val Passes = 8
+  private val MinImpFrac = 5e-4
 
   /** Multi-constraint entry point: vertices(vid, vwgts array<bigint>).
     *
@@ -73,10 +67,8 @@ object Refinement {
     */
   def refineMC(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                assign0: DataFrame, k: Int, ubFactor: Double = 1.03,
-               passes: Int = 8, ncon: Int = 1,
-               targets: Array[Double] = null, nVerts: Long = -1L,
-               minImpFrac: Double = 5e-4,
-               hillMaxVerts: Long = 100000L): DataFrame = {
+               ncon: Int = 1, targets: Array[Double] = null,
+               nVerts: Long = -1L): DataFrame = {
     val tgt = if (targets != null) targets else Array.fill(k)(1.0 / k)
     require(tgt.length == k, s"targets length ${tgt.length} != k=$k")
     if (vertices.isEmpty) return assign0
@@ -102,40 +94,26 @@ object Refinement {
       (0 until k).foldLeft(lit(Long.MinValue)) { (e, p) =>
         when(keyCol === p, lit(values(p))).otherwise(e)
       }
-    // ONE action per pass for all three outputs (edge-cut, imbalance under
-    // targets, AND the full per-(part, constraint) weights): the aggregates
-    // ride a tagged union — per-pass driver job count is the BSP loop's
-    // fixed cost, so metrics are batched. The weights are returned so the
-    // hill phase can reuse the best assignment's pwgts instead of re-running
-    // the same |V|-row join+agg (the greedy admit and this metric already
-    // paid for it).
-    def cutAndImbalance(a: DataFrame): (Long, Double, Array[Array[Long]]) = {
+    // ONE action per pass for both outputs (edge-cut and imbalance under
+    // targets): the aggregates ride a tagged union — per-pass driver job
+    // count is the BSP loop's fixed cost, so metrics are batched
+    def cutAndImbalance(a: DataFrame): (Long, Double) = {
       val cutDf = edges
         .join(dim(a.select(col("vid").as("src"), col("part").as("sp"))), "src")
         .join(dim(a.select(col("vid").as("dst"), col("part").as("dp"))), "dst")
         .filter(col("sp") =!= col("dp"))
         .agg(coalesce(sum(col("wgt")), lit(0L)).as("v"))
-        .select(lit(-1L).as("k"),
-          array((col("v") +: Seq.fill(ncon - 1)(lit(0L))): _*).as("vs"))
+        .select(lit(-1L).as("k"), col("v"))
       val pwDf = a.join(dim(vw), "vid").groupBy(col("part"))
-        .agg((0 until ncon).map(c => sum(wc(c)).as(s"v$c")).head,
-          (0 until ncon).map(c => sum(wc(c)).as(s"v$c")).tail: _*)
-        .select(col("part").cast("long").as("k"),
-          array((0 until ncon).map(c => col(s"v$c")): _*).as("vs"))
+        .agg(sum(wc(0)).as("v"))
+        .select(col("part").cast("long").as("k"), col("v"))
       val rows = cutDf.unionByName(pwDf).collect()
-      val cut = rows.find(_.getLong(0) == -1L)
-        .map(_.getSeq[Long](1).head).getOrElse(0L)
-      val pws = rows.filter(_.getLong(0) >= 0)
-      val pw = Array.ofDim[Long](k, ncon)
-      pws.foreach { r =>
-        val p = r.getLong(0).toInt
-        val vs = r.getSeq[Long](1)
-        (0 until ncon).foreach(c => pw(p)(c) = vs(c))
-      }
+        .map(r => r.getLong(0) -> r.getLong(1))
+      val cut = rows.collectFirst { case (-1L, v) => v }.getOrElse(0L)
+      val pws = rows.filter(_._1 >= 0)
       val imb = if (pws.isEmpty) 1.0
-        else pws.map(r => r.getSeq[Long](1).head.toDouble /
-          (tgt(r.getLong(0).toInt) * tv(0))).max
-      (cut, imb, pw)
+        else pws.map { case (p, v) => v.toDouble / (tgt(p.toInt) * tv(0)) }.max
+      (cut, imb)
     }
 
     var best = assign0.select(col("vid"), col("part")).ckpt()
@@ -235,236 +213,25 @@ object Refinement {
       cur
     }
 
-    // R2 hill-scanning, generalized to hills of up to `maxHill` vertices
-    // (reference S_par_kwayrefine_HS src/kwayrefine.c:1217-1550 grows hills
-    // to 16; hill gain identity S_build_hill :599-772): a connected
-    // same-part set H of individually-stuck vertices (best single-move
-    // gain <= 0 each) may still move TOGETHER with positive combined gain
-    //   jgain(H -> p) = Σ_{v∈H} conn_v(p) − (Σ_{v∈H} id_v − 2·Σ_{e⊆H} w_e)
-    // (edges inside H stay internal when the whole hill moves, so their
-    // doubly-counted loss is refunded). Hills grow by `rounds` of J2-style
-    // handshake merges on the CONTRACTED cluster graph — each round pairs
-    // adjacent same-part clusters along their heaviest connecting edge
-    // (maximizing the refund, the reference's BFS-growth analogue), so
-    // round r reaches size 2^r ≤ maxHill. A cluster whose best jgain turns
-    // positive is FROZEN — it stops growing and is queued for the move
-    // phase, exactly the reference's stop-growing-when-profitable rule
-    // (kwayrefine.c:652-700). Frozen hills are admitted under the same
-    // dual balance windows as the greedy phases, with element-wise summed
-    // hill weights. `phase` applies the S_right_side parity rule
-    // (kwayrefine.c:142-167): hills move only to higher (phase 0) / lower
-    // (phase 1) part ids per call, so two hills on opposite sides of the
-    // same boundary cannot swap past each other in one BSP step. Returns
-    // None when no hill is admitted.
-    def hillMoves(a: DataFrame, phase: Int, rounds: Int = 4,
-                  maxHill: Int = 16,
-                  pwIn: Array[Array[Long]] = null): Option[DataFrame] = {
-      val nbr = sym
-        .join(dim(a.select(col("vid").as("dst"), col("part").as("dpart"))),
-          "dst")
-        .groupBy(col("src").as("vid"), col("dpart"))
-        .agg(sum(col("wgt")).as("conn"))
-      val home = nbr.join(dim(a), "vid")
-      // stuck boundary vertices: some external connectivity, but every
-      // single-vertex move is non-improving
-      val stuck = home.groupBy(col("vid"), col("part"))
-        .agg(
-          coalesce(max(when(col("dpart") === col("part"), col("conn"))),
-            lit(0L)).as("idw"),
-          max(when(col("dpart") =!= col("part"), col("conn"))).as("maxconn"))
-        .filter(col("maxconn").isNotNull && col("maxconn") <= col("idw"))
-        .select(col("vid"), col("part").as("from"), col("idw")).ckpt()
-      // the stuck subgraph (same-part edges between stuck vertices) — the
-      // only edges hills can grow along; fixed across rounds
-      val se = sym.filter(col("src") < col("dst"))
-        .join(dim(stuck.select(col("vid").as("src"), col("from"))), "src")
-        .join(dim(stuck.select(col("vid").as("dst"), col("from").as("fd"))),
-          "dst")
-        .filter(col("from") === col("fd"))
-        .select(col("src"), col("dst"), col("wgt")).ckpt()
-      // stuck vertices' connectivity into foreign parts (hill gain inputs;
-      // fixed across rounds — nothing moves until the final admit)
-      val extConn = home.filter(col("dpart") =!= col("part"))
-        .join(dim(stuck.select(col("vid"))), "vid")
-        .select(col("vid"), col("dpart").as("to"), col("conn")).ckpt()
-      val hillDir =
-        if (phase == 0) col("to") > col("from") else col("to") < col("from")
-
-      var memb = stuck.select(col("vid"), col("vid").as("cid")).ckpt()
-      var frozenIds: DataFrame = null // cids already queued for the move
-      var cands = List.empty[DataFrame] // (cid, from, to, gain) per round
-      var r = 0
-      var progressed = true
-      while (r < rounds && progressed) {
-        r += 1
-        // contracted cluster graph over growable (non-frozen) clusters,
-        // capped so merged hills stay ≤ maxHill members
-        val sizes = memb.groupBy(col("cid")).agg(count(lit(1)).as("n"))
-        var ce = se
-          .join(dim(memb.select(col("vid").as("src"), col("cid").as("ua"))),
-            "src")
-          .join(dim(memb.select(col("vid").as("dst"), col("cid").as("va"))),
-            "dst")
-          .filter(col("ua") =!= col("va"))
-          .select(least(col("ua"), col("va")).as("ua"),
-            greatest(col("ua"), col("va")).as("va"), col("wgt"))
-          .groupBy(col("ua"), col("va")).agg(sum(col("wgt")).as("w"))
-        if (frozenIds != null) {
-          ce = ce
-            .join(frozenIds.select(col("cid").as("ua")), Seq("ua"), "left_anti")
-            .join(frozenIds.select(col("cid").as("va")), Seq("va"), "left_anti")
-        }
-        ce = ce
-          .join(sizes.select(col("cid").as("ua"), col("n").as("na")), "ua")
-          .join(sizes.select(col("cid").as("va"), col("n").as("nb")), "va")
-          .filter(col("na") + col("nb") <= maxHill)
-          .select(col("ua"), col("va"), col("w"))
-        // handshake: every cluster proposes its heaviest connecting edge;
-        // mutual proposals merge (larger cid folds into smaller)
-        val props = ce.select(col("ua").as("cid"), col("va").as("p"), col("w"))
-          .unionByName(
-            ce.select(col("va").as("cid"), col("ua").as("p"), col("w")))
-          .groupBy(col("cid"))
-          .agg(max(struct(col("w"), (-col("p")).as("np"))).as("b"))
-          .select(col("cid"), (-col("b.np")).as("p"))
-        // checkpoint + count BEFORE the old memb is released: merges'
-        // lineage runs through it, and a released local checkpoint cannot
-        // be recomputed
-        val merges = props.as("x")
-          .join(props.as("y"),
-            col("x.p") === col("y.cid") && col("y.p") === col("x.cid"))
-          .filter(col("x.cid") < col("x.p"))
-          .select(col("x.p").as("oldCid"), col("x.cid").as("newCid"))
-          .ckpt()
-        val nMerged = merges.count()
-        val membNext = memb
-          .join(merges.withColumnRenamed("oldCid", "cid"), Seq("cid"), "left")
-          .select(col("vid"), coalesce(col("newCid"), col("cid")).as("cid"))
-          .ckpt()
-        graft.plans.Plans.unpersist(merges)
-        graft.plans.Plans.unpersist(memb)
-        memb = membNext
-        // evaluate every growable cluster's best jgain on the merged
-        // clustering; positive ones freeze
-        val withFrom = memb.join(stuck, "vid")
-        var idSum = withFrom.groupBy(col("cid"), col("from"))
-          .agg(sum(col("idw")).as("idSum"))
-        if (frozenIds != null)
-          idSum = idSum.join(frozenIds, Seq("cid"), "left_anti")
-        val refund = se
-          .join(dim(memb.select(col("vid").as("src"), col("cid").as("ua"))),
-            "src")
-          .join(dim(memb.select(col("vid").as("dst"), col("cid").as("va"))),
-            "dst")
-          .filter(col("ua") === col("va"))
-          .groupBy(col("ua").as("cid")).agg(sum(col("wgt")).as("iw"))
-          .select(col("cid"), (lit(2L) * col("iw")).as("refund"))
-        val conn = extConn.join(memb, "vid")
-          .groupBy(col("cid"), col("to")).agg(sum(col("conn")).as("cconn"))
-        val gains = idSum
-          .join(refund, Seq("cid"), "left")
-          .join(conn, "cid")
-          .filter(hillDir)
-          .withColumn("jgain", col("cconn") - col("idSum") +
-            coalesce(col("refund"), lit(0L)))
-          .filter(col("jgain") > 0)
-          .groupBy(col("cid"), col("from"))
-          .agg(max(struct(col("jgain"), (-col("to")).as("nt"))).as("b"))
-          .select(col("cid"), col("from"), (-col("b.nt")).as("to"),
-            col("b.jgain").as("gain")).ckpt()
-        val nFrozen = gains.count()
-        if (nFrozen > 0) {
-          cands = gains :: cands
-          val fNext = (if (frozenIds == null) gains.select(col("cid"))
-            else frozenIds.unionByName(gains.select(col("cid")))).ckpt()
-          if (frozenIds != null) graft.plans.Plans.unpersist(frozenIds)
-          frozenIds = fNext
-        } else graft.plans.Plans.unpersist(gains)
-        // no merge and no new freeze -> later rounds are identical
-        progressed = nMerged > 0 || nFrozen > 0
-      }
-      graft.plans.Plans.unpersist(stuck)
-      graft.plans.Plans.unpersist(se)
-      graft.plans.Plans.unpersist(extConn)
-      if (frozenIds != null) graft.plans.Plans.unpersist(frozenIds)
-      if (cands.isEmpty) {
-        graft.plans.Plans.unpersist(memb)
-        return None
-      }
-      // admit frozen hills by gain order under both balance windows, with
-      // per-constraint hill weights summed over final memberships
-      val hills = cands.reduce(_ unionByName _)
-      val hwCols = (0 until ncon).map(c => sum(wc(c)).as(s"hw$c"))
-      val hw = memb.join(dim(vw), "vid").groupBy(col("cid"))
-        .agg(hwCols.head, hwCols.tail: _*)
-      val units = hills.join(hw, "cid")
-        .withColumn("vwgts",
-          array((0 until ncon).map(c => col(s"hw$c")): _*))
-      // phase-start pwgts: reuse the caller's (cutAndImbalance already
-      // aggregated them for this exact assignment); recompute only when the
-      // caller has none yet (hills on a never-measured assignment)
-      val pw = if (pwIn != null) pwIn else {
-        val pwRows = a.join(dim(vw), "vid").groupBy(col("part"))
-          .agg((0 until ncon).map(c => sum(wc(c)).as(s"pw$c")).head,
-            (0 until ncon).map(c => sum(wc(c)).as(s"pw$c")).tail: _*).collect()
-        val arr = Array.ofDim[Long](k, ncon)
-        pwRows.foreach { r =>
-          val p = r.get(0).toString.toInt
-          (0 until ncon).foreach(c => arr(p)(c) = r.getLong(c + 1))
-        }
-        arr
-      }
-      val wTo = Window.partitionBy(col("to"))
-        .orderBy(col("gain").desc, col("cid"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFrom = Window.partitionBy(col("from"))
-        .orderBy(col("gain").desc, col("cid"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val okCond = (0 until ncon).map { c =>
-        (sum(wc(c)).over(wTo) <=
-          byPart(col("to"), p => maxW(p)(c) - pw(p)(c))) &&
-        (sum(wc(c)).over(wFrom) <=
-          byPart(col("from"), p => pw(p)(c) - minW(p)(c)))
-      }.reduce(_ && _)
-      val admitted = units.withColumn("ok", okCond).filter(col("ok"))
-        .select(col("cid"), col("to")).ckpt()
-      cands.foreach(graft.plans.Plans.unpersist) // per-round gains released
-      if (admitted.isEmpty) {
-        graft.plans.Plans.unpersist(admitted)
-        graft.plans.Plans.unpersist(memb)
-        return None
-      }
-      val moved = admitted.join(memb, "cid").select(col("vid"), col("to"))
-      val out = graft.plans.Plans.checkpoint(
-        a.join(moved, Seq("vid"), "left")
-          .select(col("vid"), coalesce(col("to"), col("part")).as("part")))
-      graft.plans.Plans.unpersist(admitted)
-      graft.plans.Plans.unpersist(memb)
-      Some(out)
-    }
-
     var cur = best
     var pass = 0
     var improved = true
-    // per-part weights of the CURRENT best assignment (threaded into the
-    // hill phases); null until the first cutAndImbalance measures it
-    var bestPw: Array[Array[Long]] = null
-    while (pass < passes && improved) {
+    while (pass < Passes && improved) {
       val tPass = System.nanoTime()
       val in = cur
       cur = onePass(in)
       if (in ne best) graft.plans.Plans.unpersist(in)
-      val (cut, imb, pwCur) = cutAndImbalance(cur)
+      val (cut, imb) = cutAndImbalance(cur)
       val better = cut < bestCut && imb <= ubFactor + 1e-9
       // convergence stop: keep ANY improvement, but only spend another
       // full-edge-scan pass when this one beat the relative floor
       // (measured: passes 2–6 at the finest level bought 0.06% of cut for
       // ~20 s; the reference's serial pass costs ~nothing, ours is 3 edge
       // scans)
-      improved = better && cut + (bestCut * minImpFrac).toLong < bestCut
+      improved = better && cut + (bestCut * MinImpFrac).toLong < bestCut
       if (better) {
         val oldBest = best
-        bestCut = cut; best = cur; bestPw = pwCur
+        bestCut = cut; best = cur
         if (oldBest ne cur) graft.plans.Plans.unpersist(oldBest)
       }
       Metrics.log("refine_pass", "pass" -> pass, "nvtxs" -> nV, "cut" -> cut,
@@ -472,29 +239,6 @@ object Refinement {
       pass += 1
     }
     if (cur ne best) graft.plans.Plans.unpersist(cur)
-    // hill rounds once greedy stalls (the reference runs HS when the greedy
-    // pass stops improving): one round per direction — move jointly-
-    // profitable hills, then one greedy clean-up pass around the moved
-    // hills. Bounded to levels ≤ hillMaxVerts: each hill phase costs ~6
-    // edge scans plus per-round cluster joins, and at the two finest levels
-    // of the 26.5M-edge profile the 40.7 s spent bought 0.003% of cut —
-    // fine-level boundaries are greedy-converged; hills earn their keep on
-    // the coarse levels where moves are coupled (and cost ~nothing there)
-    for (hsPhase <- 0 to 1 if nV <= hillMaxVerts) {
-      val tHill = System.nanoTime()
-      hillMoves(best, hsPhase, pwIn = bestPw).foreach { afterHills =>
-        val next = onePass(afterHills)
-        graft.plans.Plans.unpersist(afterHills)
-        val (cut, imb, pwNext) = cutAndImbalance(next)
-        if (cut < bestCut && imb <= ubFactor + 1e-9) {
-          val oldBest = best
-          bestCut = cut; best = next; bestPw = pwNext
-          graft.plans.Plans.unpersist(oldBest)
-        } else graft.plans.Plans.unpersist(next)
-      }
-      Metrics.log("refine_hills", "phase" -> hsPhase, "nvtxs" -> nV,
-        "wall_s" -> Metrics.secondsSince(tHill))
-    }
     sym.unpersist(); vw.unpersist()
     best
   }

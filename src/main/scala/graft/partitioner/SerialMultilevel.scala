@@ -22,6 +22,12 @@ import InitialPartition.LocalGraph
   *   ratio exceeds stopRatio (P6, src/partition.c:216-223). Initial
   *   partition and per-level greedy refinement reuse [[InitialPartition]]
   *   (best-of-8 growing, max+min balance bounds per constraint).
+  *
+  * Hill-scanning (R2, [[InitialPartition.hillSweepK]]) runs once per
+  * solve, on the coarsest graph, followed by a greedy sweep when a hill
+  * moved. This is also how [[Multilevel.partitionMC]] solves its gathered
+  * coarsest level: a graph already at or below coarsenTo is not coarsened
+  * (best-of-8 growing, then hills, then greedy).
   */
 object SerialMultilevel {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.Checkpointer
 import graft.plans.Plans.CheckpointOps
-import graft.operators.{ConnectedComponents, GraphOps, PageRank}
+import graft.operators.{ConnectedComponents, GraphOps, LabelPropagation, PageRank}
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -129,6 +129,15 @@ class CheckpointerSpec extends SparkSpec {
     assert(iters.map(i => leftPersisted(ConnectedComponents.run(spark,
       edgesDf(path), vertsDf(Fixtures.vertsOf(path)), maxRounds = i))) ==
       Seq(1, 1), "ConnectedComponents")
+    // the fixed-round loops release their superseded rounds and their
+    // loop constants too
+    assert(iters.map(i => leftPersisted(ConnectedComponents.hashMinIterations(
+      edgesDf(path), vertsDf(Fixtures.vertsOf(path)), i))) == Seq(1, 1),
+      "hashMinIterations")
+    assert(iters.map(i => leftPersisted(LabelPropagation.run(edgesDf(e),
+      vertsDf(verts), i))) == Seq(1, 1), "LabelPropagation")
+    assert(iters.map(i => leftPersisted(PageRank.fixedIterations(edgesDf(e),
+      vertsDf(verts), 0.85, i))) == Seq(1, 1), "fixedIterations")
   }
 
   test("Iceberg backend selection: catalog-configured gates writeTo path") {

@@ -99,9 +99,9 @@ class PartitionerExtSpec extends SparkSpec {
   test("refinement respects the min-weight floor") {
     val e = Fixtures.grid4x4
     val vids = Fixtures.vertsOf(e)
-    val vw = spark.createDataFrame(vids.map(v => (v, 1L))).toDF("vid", "vwgt")
+    val vw = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
     val bad = assignDf(vids.map(v => v -> (v % 2).toInt).toMap)
-    val refined = Refinement.refine(spark, edgesDf(e), vw, bad, k = 2)
+    val refined = Refinement.refineMC(spark, edgesDf(e), vw, bad, k = 2)
     val pw = refined.groupBy(col("part")).count().collect()
       .map(r => r.getLong(1))
     // target 8, ub 1.03: floor(8/1.03)=7, ceil(8*1.03)=9
@@ -267,8 +267,8 @@ class PartitionerExtSpec extends SparkSpec {
     // the sibling test above leaves serialRefineThreshold at 4096, so on a
     // 300-vertex graph every level still refines via the gathered serial
     // FM — this one zeroes EVERY serial dispatch bound, forcing the BSP
-    // bounded-admit refinement + distributed hills on every level, and
-    // uses a structured graph (24x24 grid, ideal bisection cut 24) where
+    // bounded-admit refinement on every distributed level (hills run once,
+    // on the gathered coarsest graph), and uses a structured graph (24x24 grid, ideal bisection cut 24) where
     // refinement quality actually shows (a zipf expander hides it)
     val n = 24
     val e: Seq[(Long, Long, Long)] = for {

@@ -2,9 +2,10 @@ package graft.partitioner
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pure-JVM units for the serial FM internals (no SparkSession):
-  * R2 hill-scanning (reference S_par_kwayrefine_HS src/kwayrefine.c:1217,
-  * S_build_hill :599-772) and FM rollback (FM1S, src/eseprefine.c:363-534).
+/** Pure-JVM units for the serial FM internals (no SparkSession): the
+  * 2-way use of R2 hill-scanning ([[InitialPartition.hillSweepK]] with
+  * k = 2, reference S_par_kwayrefine_HS src/kwayrefine.c:1217, S_build_hill
+  * :599-772) and FM rollback (FM1S, src/eseprefine.c:363-534).
   */
 class BoundaryFmUnitSpec extends AnyFunSuite {
 
@@ -22,29 +23,39 @@ class BoundaryFmUnitSpec extends AnyFunSuite {
     InitialPartition.fromEdges(edges, verts)
   }
 
-  test("hillScan moves a welded pair with positive combined gain") {
+  test("hillSweepK moves a welded pair with positive combined gain") {
     val g = weldedPair()
     val idx = g.vids.zipWithIndex.toMap
     val where = g.vids.map(v => if (v <= 3L) 0 else 1)
-    val locked = Array.fill(g.nvtxs)(false)
     val before = InitialPartition.cutOf(g, where)
-    val movedHills = BoundaryFm.hillScan(g, where, locked,
-      maxW = Array(6L, 6L), minW = Array(1L, 1L))
-    assert(movedHills >= 1, "the welded pair is a movable hill")
+    // ub 1.34 on 6 unit vertices: maxW = 5, minW = 2 — 4/2 and 2/4 both fit
+    assert(InitialPartition.hillSweepK(g, 2, where, 1.34),
+      "the welded pair is a movable hill")
     val after = InitialPartition.cutOf(g, where)
     assert(after < before, s"cut must drop: $before -> $after")
     assert(where(idx(2L)) == 1 && where(idx(3L)) == 1, "both welded vertices moved")
   }
 
-  test("hillScan respects balance bounds") {
+  test("hillSweepK respects balance bounds") {
     val g = weldedPair()
     val where = g.vids.map(v => if (v <= 3L) 0 else 1)
-    val locked = Array.fill(g.nvtxs)(false)
-    // forbid B from growing: the profitable hill must NOT move
-    val moved = BoundaryFm.hillScan(g, where, locked,
-      maxW = Array(6L, 2L), minW = Array(1L, 1L))
-    assert(moved == 0)
+    // ub 1.0: maxW = 3 forbids B from growing past one more vertex, so the
+    // profitable two-vertex hill must NOT move
+    assert(!InitialPartition.hillSweepK(g, 2, where, 1.0))
     assert(where.count(_ == 1) == 2, "assignment unchanged")
+  }
+
+  test("hillSweepK never moves or absorbs a locked vertex inside the hill") {
+    val g = weldedPair()
+    val idx = g.vids.zipWithIndex.toMap
+    val where = g.vids.map(v => if (v <= 3L) 0 else 1)
+    val before = where.clone()
+    // lock 3, one half of the profitable hill {2,3}: grown without it, the
+    // hill from 2 runs through A's interior and never turns profitable
+    val locked = g.vids.map(_ == 3L)
+    assert(!InitialPartition.hillSweepK(g, 2, where, 1.34, locked = locked))
+    assert(where(idx(3L)) == 0, "the locked vertex kept its part")
+    assert(where.sameElements(before), "no hill moved without it")
   }
 
   test("fm2way rolls back a pass that finds no feasible improvement") {
