@@ -46,7 +46,7 @@ object SparkEntry {
   /** ND vertex separator over the gate graph, derived once per session:
     * q_vsep / q_vsep_sfm / q_vsep_flow all refine THIS separator (same
     * input graph, same default seed), so the multilevel bisection + cover
-    * + FM-shrink runs once per Verify/Bench session instead of 3x. Same
+    * + refine runs once per Verify/Bench session instead of 3x. Same
     * memo pattern (and lifecycle) as the gate edges/vertices themselves.
     */
   private def gateVsep(s: SparkSession, d: String): DataFrame =
@@ -382,19 +382,19 @@ object SparkEntry {
       m.select((col("n_a") + col("n_b") + col("n_sep")).as("n_total"),
         col("violations"), (col("sep_weight") <= lit(sep0)).as("sep_no_worse"))
     },
-    // R4 flow family: SEGMENTED FM (SeparatorRefine.refineSfm, reference
-    // S_vseprefine_SFM src/vseprefine.c:2207-2285 / S_flow_SFM :771-1026)
-    // on the ND separator — pulled vertices flow onward instead of
-    // locking, the half of the reference's parallel-default SFG scheme the
-    // greedy pass lacks. Same hard gate: totality, zero violations,
-    // separator never heavier than its input (move-ordered rollback)
+    // R4: the separator refiner (SeparatorRefine.refine — segmented FM,
+    // reference S_vseprefine_SFM src/vseprefine.c:2207-2285 / S_flow_SFM
+    // :771-1026, behind the SFG greedy fallback) applied again on the ND
+    // separator — pulled vertices flow onward instead of locking. Same
+    // hard gate: totality, zero violations, separator never heavier than
+    // its input (move-ordered rollback)
     "q_vsep_sfm" -> { (s, d) =>
       val e = EventsGraph.edges(s, d)
       val v = EventsGraph.vertices(s, d)
       val vw = v.withColumn("vwgt", lit(1L)).select(col("vid"), col("vwgt"))
       val where0 = gateVsep(s, d)
       val sep0 = GraphOps.vsepMetrics(e, vw, where0).head().getLong(3)
-      val out = graft.partitioner.SeparatorRefine.refineSfm(s, e, where0, vw)
+      val out = graft.partitioner.SeparatorRefine.refine(s, e, where0, vw)
       val m = GraphOps.vsepMetrics(e, vw, out)
       m.select((col("n_a") + col("n_b") + col("n_sep")).as("n_total"),
         col("violations"), (col("sep_weight") <= lit(sep0)).as("sep_no_worse"))
@@ -531,12 +531,16 @@ object SparkEntry {
     }
   )
 
+  // the vertex count every totality row predicts: users + tools
+  private val NCte =
+    """WITH n AS (
+      |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
+      |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "q_transcripts" -> Transcripts.fromEventsSql,
     "q_vertex_dict" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_keys, n AS n_distinct, CAST(0 AS BIGINT) AS min_vid,
         |       n - 1 AS max_vid FROM n""".stripMargin,
     "q_edges" -> s"WITH e AS ($EC) SELECT src, dst, wgt FROM e ORDER BY src, dst",
@@ -676,47 +680,33 @@ object SparkEntry {
         |     + (SELECT COUNT(DISTINCT event_type) FROM events) AS n_vertices,
         |     CAST(4 AS BIGINT) AS n_parts, TRUE AS balanced""".stripMargin,
     "q_partition_kway" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_assigned, n AS n_distinct,
         |       CAST(0 AS BIGINT) AS out_of_range,
         |       CAST(0 AS BIGINT) AS n_missing FROM n""".stripMargin,
     "q_partition_rb" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_assigned, n AS n_distinct,
         |       CAST(0 AS BIGINT) AS out_of_range,
         |       CAST(0 AS BIGINT) AS n_missing FROM n""".stripMargin,
     "q_partition_mc" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_assigned, n AS n_distinct,
         |       CAST(0 AS BIGINT) AS out_of_range,
         |       CAST(0 AS BIGINT) AS n_missing, TRUE AS mc_sane FROM n""".stripMargin,
     "q_nd_perm" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_vertices, n AS n_distinct_perm,
         |       CAST(0 AS BIGINT) AS min_perm, n - 1 AS max_perm FROM n""".stripMargin,
     "q_vsep" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_total, CAST(0 AS BIGINT) AS violations FROM n""".stripMargin,
     "q_vsep_flow" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_total, CAST(0 AS BIGINT) AS violations,
         |       TRUE AS sep_no_worse FROM n""".stripMargin,
     "q_vsep_sfm" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_total, CAST(0 AS BIGINT) AS violations,
         |       TRUE AS sep_no_worse FROM n""".stripMargin,
     "q_intext" ->
@@ -732,9 +722,7 @@ object SparkEntry {
          |FROM v LEFT JOIN ext ON v.vid = ext.vid
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q_boundary_fm" ->
-      """WITH n AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM events)
-        |       + (SELECT COUNT(DISTINCT event_type) FROM events) AS n)
+      s"""$NCte
         |SELECT n AS n_assigned, n AS n_distinct, TRUE AS cut_not_worse FROM n""".stripMargin,
     "q_embed_neardup" -> {
       val bucketExpr = (0 until 8).map(j =>

@@ -130,7 +130,7 @@ object Clustering {
           .select(col("vid"),
             coalesce(col("target"), col("cluster")).as("cluster"),
             col("vwgt")))
-      Plans.unpersist(prevCl) // superseded round — checkpoints never evict
+      Plans.unpersist(prevCl) // superseded round: release now, not at GC
       if (earlyStopSingles >= 0)
         singles = cl.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
           .filter(col("n") === 1).count()

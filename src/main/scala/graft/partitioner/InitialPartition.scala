@@ -93,6 +93,11 @@ object InitialPartition {
 
   /** Balance bounds per (part, constraint): maxW/minW =
     * targets(p)·tvwgt(c)·ub^±1 (reference kwayrefine.c:1056-1059).
+    * maxW keeps the ceiling, unlike `Refinement.refineMC`'s floor: the
+    * serial passes have no acceptance test that could discard a pass
+    * landing one unit over ub, and every serial V-cycle's cut is computed
+    * under this bound (the partition_vcycle benchmark's per-seed
+    * `edge_cut` depends on it).
     */
   private def bounds(g: LocalGraph, k: Int, targets: Array[Double],
                      ubFactor: Double): (Array[Long], Array[Long]) = {

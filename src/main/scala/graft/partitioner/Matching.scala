@@ -186,8 +186,9 @@ object Matching {
         pairs.unionByName(mutual), StorageLevel.MEMORY_AND_DISK)
       pairs = next; nPairs = cnt
       // prevPairs is folded into the new checkpoint — release its blocks
-      // (checkpoints are never evicted on their own; leaking one per round
-      // per level pins O(levels·rounds·|V|) rows for the session)
+      // (the ContextCleaner drops a checkpoint only once a GC clears its
+      // RDD; one left per round per level holds O(levels·rounds·|V|) rows
+      // for as long as GC timing decides)
       graft.plans.Plans.unpersist(prevPairs)
       val matchedVids = pairs.select(col("u").as("vid"))
         .unionByName(pairs.select(col("v").as("vid")))

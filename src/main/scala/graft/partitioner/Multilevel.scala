@@ -158,7 +158,7 @@ object Multilevel {
         val (rm, _, rmPaired) = Matching.cmapRounds(edges, vertices, caps,
           scheme = Matching.RM, seed = levelSeed, nVerts = nvtxs,
           symIn = symL, degIn = degL)
-        // release the losing cmap — superseded checkpoints never evict
+        // release the losing cmap now, not whenever a GC clears it
         if (rmPaired > paired) {
           graft.plans.Plans.unpersist(cmap); cmap = rm
         } else graft.plans.Plans.unpersist(rm)

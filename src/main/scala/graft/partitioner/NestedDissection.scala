@@ -9,15 +9,14 @@ import graft.operators.GraphOps
   * API (MTMETIS_NodeND, reference src/mtmetis.c:426-461; par_order_nd
   * src/order.c:80-222).
   *
-  * Structure mirrors the reference: the distributed layer bisects the graph
-  * (par_partition_vertexseparator src/partition.c:854 — here the multilevel
-  * 2-way cut), derives a vertex separator from the edge boundary (the
-  * smaller-side endpoint cover of the cut edges — the standard
-  * edge-cut→vertex-separator construction the reference applies before FM
-  * refinement), extracts the two separator-free halves (J6 semi-joins,
-  * src/graph.c:2936), and recurses; once a subgraph fits the driver it is
-  * collected and ordered serially (the reference calls vendored serial
-  * METIS_NodeND at the leaves, src/imetis.c:455). Separator vertices take
+  * Structure mirrors the reference: the distributed layer takes its vertex
+  * separator from [[vertexSeparator]] (par_partition_vertexseparator
+  * src/partition.c:854 — the multilevel 2-way cut, a greedy vertex cover
+  * of the cut edges, then [[SeparatorRefine.refine]]), extracts the two
+  * separator-free halves (J6 semi-joins, src/graph.c:2936), and recurses;
+  * once a subgraph fits the driver it is collected and ordered serially
+  * (the reference calls vendored serial METIS_NodeND at the leaves,
+  * src/imetis.c:455). Separator vertices take
   * the HIGHEST labels of their range (W2 numbering: perm[sep[i]] = --lastvtx,
   * src/order.c:155-159); halves own the prefix.
   *
@@ -74,8 +73,8 @@ object NestedDissection {
       .select(col("vid"),
         when(col("insep").isNotNull, lit(2)).otherwise(col("part"))
           .cast("int").as("side"))
-    // FM-shrink the cover (reference par_vseprefine,
-    // src/vseprefine.c:2380-2534): smaller separators = less fill
+    // shrink the cover with the reference's parallel scheme (SFG,
+    // src/vseprefine.c:2373-2460): smaller separators = less fill
     SeparatorRefine.refine(spark, edges, cover,
       verts.select(col("vid"), lit(1L).as("vwgt")))
   }
@@ -96,90 +95,38 @@ object NestedDissection {
       return spark.createDataFrame(
         vArr.toIndexedSeq.map(v => (v, lo + perm(v)))).toDF("vid", "perm")
     }
-    val r = Multilevel.partitionMC(spark, edges,
-      verts.select(col("vid"), array(lit(1L)).as("vwgts")), 2, ncon = 1,
-      seed = seed)
-    val a = r.assign.ckpt()
-    // vertex separator: side-0 endpoints of cut edges (a vertex cover of
-    // the boundary)
-    val ap = a.select(col("vid"), col("part"))
-    val cutE = edges
-      .join(ap.select(col("vid").as("src"), col("part").as("sp")), "src")
-      .join(ap.select(col("vid").as("dst"), col("part").as("dp")), "dst")
-      .filter(col("sp") =!= col("dp"))
-    val sep = cutE.select(when(col("sp") === 0, col("src"))
-        .otherwise(col("dst")).as("vid")).distinct()
-      .ckpt()
-    val nSep = sep.count()
-    if (nSep == 0) {
-      // no cut edges: the two sides are mutually disconnected — a perfect
-      // split already; recurse on the halves with an empty separator.
-      // (Previously this forced a whole-block driver gather at ANY size —
-      // an OOM risk for graphs with huge disconnected components.)
-      val va = verts.join(ap.filter(col("part") === 0).select(col("vid")),
-        "vid").ckpt()
-      val vb = verts.join(ap.filter(col("part") === 1).select(col("vid")),
-        "vid").ckpt()
-      val na = va.count()
-      if (na == 0 || na == n) {
-        // bisection put everything on one side: split by vid median instead
-        // (stays distributed; any split of a cut-free block is valid)
-        val mid = verts.stat.approxQuantile("vid", Array(0.5), 0.001)(0)
-        val vlo = verts.filter(col("vid") <= mid).ckpt()
-        val vhi = verts.filter(col("vid") > mid).ckpt()
-        val nlo = vlo.count()
-        if (nlo == 0 || nlo == n)
-          return recDist(spark, edges, verts, lo, n, leafSize, seed) // tiny
-        def sub(vs: DataFrame) = edges
-          .join(vs.select(col("vid").as("src")), Seq("src"), "left_semi")
-          .join(vs.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-          .ckpt()
-        return recDist(spark, sub(vlo), vlo, lo, collectThreshold, leafSize,
-            seed * 31 + 3)
-          .unionByName(recDist(spark, sub(vhi), vhi, lo + nlo,
-            collectThreshold, leafSize, seed * 31 + 4))
-      }
-      def sub(vs: DataFrame) = edges
-        .join(vs.select(col("vid").as("src")), Seq("src"), "left_semi")
-        .join(vs.select(col("vid").as("dst")), Seq("dst"), "left_semi")
-        .ckpt()
-      return recDist(spark, sub(va), va, lo, collectThreshold, leafSize,
-          seed * 31 + 1)
-        .unionByName(recDist(spark, sub(vb), vb, lo + na, collectThreshold,
-          leafSize, seed * 31 + 2))
-    }
-    if (nSep == n) {
-      // degenerate: everything became separator — gather and order serially
-      return recDist(spark, edges, verts, lo, n, leafSize, seed)
-    }
-    // FM-shrink the cover before splitting (reference par_vseprefine,
-    // src/vseprefine.c:2380-2534); the refined 3-way labels define the
-    // halves directly
-    val lbl = SeparatorRefine.refine(spark, edges,
-      ap.join(sep.withColumn("insep", lit(1)), Seq("vid"), "left")
-        .select(col("vid"),
-          when(col("insep").isNotNull, lit(2)).otherwise(col("part"))
-            .cast("int").as("side")),
-      verts.select(col("vid"), lit(1L).as("vwgt"))).ckpt()
-    val sepR = lbl.filter(col("side") === 2).select(col("vid")).ckpt()
-    def side(p: Int): (DataFrame, DataFrame) = {
-      val vs = verts
-        .join(lbl.filter(col("side") === p).select(col("vid")), "vid").ckpt()
+    // recurse on a vertex subset with its induced edges
+    def rec(vs: DataFrame, at: Long, sd: Long): DataFrame = {
       val e = edges
         .join(vs.select(col("vid").as("src")), Seq("src"), "left_semi")
         .join(vs.select(col("vid").as("dst")), Seq("dst"), "left_semi")
         .ckpt()
-      (vs, e)
+      recDist(spark, e, vs, at, collectThreshold, leafSize, sd)
     }
-    val (v0, e0) = side(0)
-    val (v1, e1) = side(1)
-    val n0 = v0.count()
-    val n1 = v1.count()
-    val pA = recDist(spark, e0, v0, lo, collectThreshold, leafSize, seed * 31 + 1)
-    val pB = recDist(spark, e1, v1, lo + n0, collectThreshold, leafSize,
-      seed * 31 + 2)
+    val lbl = vertexSeparator(spark, edges, verts, seed).ckpt()
+    def nSide(p: Int) = sum(when(col("side") === p, 1L).otherwise(0L))
+    val c = lbl.agg(nSide(0), nSide(1), nSide(2)).head()
+    val (n0, n1, nS) = (c.getLong(0), c.getLong(1), c.getLong(2))
+    // degenerate: everything became separator — gather and order serially
+    if (nS == n) return recDist(spark, edges, verts, lo, n, leafSize, seed)
+    if (nS == 0 && (n0 == 0 || n1 == 0)) {
+      // bisection put everything on one side of a cut-free block: split by
+      // vid median instead (stays distributed; any split of a cut-free
+      // block is valid)
+      val mid = verts.stat.approxQuantile("vid", Array(0.5), 0.001)(0)
+      val vlo = verts.filter(col("vid") <= mid).ckpt()
+      val nlo = vlo.count()
+      if (nlo == 0 || nlo == n)
+        return recDist(spark, edges, verts, lo, n, leafSize, seed) // tiny
+      return rec(vlo, lo, seed * 31 + 3).unionByName(
+        rec(verts.filter(col("vid") > mid).ckpt(), lo + nlo, seed * 31 + 4))
+    }
+    def side(p: Int) = lbl.filter(col("side") === p).select(col("vid")).ckpt()
+    val pA = rec(side(0), lo, seed * 31 + 1)
+    val pB = rec(side(1), lo + n0, seed * 31 + 2)
+    if (nS == 0) return pA.unionByName(pB)
     // W2: separator gets the top labels [lo+n0+n1, lo+n), by vid order
-    val pS = GraphOps.cumDegByVid(sepR.withColumn("deg", lit(1L)))
+    val pS = GraphOps.cumDegByVid(side(2).withColumn("deg", lit(1L)))
       .select(col("vid"), (lit(lo + n0 + n1 - 1) + col("cum")).as("perm"))
     pA.unionByName(pB).unionByName(pS)
   }

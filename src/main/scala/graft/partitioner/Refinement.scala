@@ -83,9 +83,11 @@ object Refinement {
     // per-(part, constraint) bounds: maxwgt/minwgt = tpwgts·tvwgt·ub^±1 —
     // k·ncon driver-side longs, inlined as literals into the admit
     // predicate (joins here would bloat the per-phase plan that Catalyst
-    // re-optimizes on every action)
+    // re-optimizes on every action). maxW is floored, so every admitted
+    // move set passes the pass-acceptance test below (a ceiling admits a
+    // part one unit over ub, and the pass that fills it is thrown away)
     val maxW = Array.tabulate(k, ncon)((p, c) =>
-      math.ceil(tgt(p) * tv(c) * ubFactor).toLong)
+      math.floor(tgt(p) * tv(c) * ubFactor).toLong)
     val minW = Array.tabulate(k, ncon)((p, c) =>
       math.floor(tgt(p) * tv(c) / ubFactor).toLong)
     // literal lookup column: keyCol == p -> values(p)(c)
@@ -117,7 +119,12 @@ object Refinement {
     }
 
     var best = assign0.select(col("vid"), col("part")).ckpt()
-    var bestCut = GraphOps.edgeCut(edges, best, nV)
+    // a level can arrive over ub: the serial levels above it admit up to
+    // ceil(tgt·tv·ub). The floored admit never adds to a part at or over
+    // maxW, so a pass stays within max(ub, the arriving imbalance)
+    val (cut0, imb0) = cutAndImbalance(best)
+    val imbCap = math.max(ubFactor, imb0) + 1e-9
+    var bestCut = cut0
 
     // one greedy pass = the reference's two S_right_side phases.
     // Phase-0's checkpoint is folded into phase-1's and released — leaked
@@ -222,7 +229,7 @@ object Refinement {
       cur = onePass(in)
       if (in ne best) graft.plans.Plans.unpersist(in)
       val (cut, imb) = cutAndImbalance(cur)
-      val better = cut < bestCut && imb <= ubFactor + 1e-9
+      val better = cut < bestCut && imb <= imbCap
       // convergence stop: keep ANY improvement, but only spend another
       // full-edge-scan pass when this one beat the relative floor
       // (measured: passes 2–6 at the finest level bought 0.06% of cut for

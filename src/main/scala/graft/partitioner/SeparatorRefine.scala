@@ -1,38 +1,47 @@
 package graft.partitioner
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.operators.GraphOps
+import graft.plans.{Metrics, Plans}
 import graft.plans.Plans.CheckpointOps
 
-/** Vertex-separator FM refinement — the serial re-expression of the
-  * reference's separator-refinement family (par_vseprefine,
-  * reference src/vseprefine.c:2380-2534; FM core :1384-1810): after the
-  * greedy edge-cover builds a VALID separator, FM moves shrink it.
+/** Vertex-separator refinement — the reference's parallel separator scheme
+  * SFG (S_vseprefine_SFG, reference src/vseprefine.c:2373-2460; ctrl.c:300-306
+  * picks it for VSEP/ND whenever nthreads > 1): a greedy flow pass, then
+  * segmented FM. Here the gathered segmented FM runs alone while the
+  * separator region fits the gather bound; the distributed greedy flow runs
+  * first only when it does not.
   *
-  * Move semantics (3-way labels A=0/B=1/SEP=2, reference vseprefine.c FM):
-  * a separator vertex v may move to side s; every neighbor of v on the
-  * OPPOSITE side is pulled INTO the separator (otherwise an A–B edge would
-  * escape). Gain = w(v) − Σ w(pulled). Moves are applied greedily
-  * (negative gains allowed, FM-style) with rollback to the best separator
-  * weight seen; pulled vertices are locked for the pass (they have no
-  * gathered adjacency, so they never move back out — conservative).
+  * Labels are 3-way (A=0/B=1/SEP=2). A separator vertex v moves to side s;
+  * every neighbor of v on the OPPOSITE side is pulled INTO the separator
+  * (otherwise an A–B edge would escape), so the gain is w(v) − Σ w(pulled).
+  * Every path keeps the best separator seen, so the output separator is
+  * never heavier than the input and no A–B edge appears.
   *
   * Distribution shape (J8, the boundary-gather pattern of
-  * par_graph_extract_separator, reference src/graph.h:566-603): only the
-  * separator and its frontier N(SEP) are gathered — bounded by
-  * `maxGather` — while side weights count the WHOLE graph via one
+  * par_graph_extract_separator, reference src/graph.h:566-603): only
+  * SEP ∪ N(SEP) with its full adjacency (plus the sides and weights of the
+  * 2-hop ring) is gathered, bounded by the session conf
+  * `spark.graft.vsep.maxGather` (vertices, and 8x that in adjacency rows;
+  * default 200000), while side weights count the WHOLE graph via one
   * aggregate, so balance is global. The rest of the graph never moves.
   */
 object SeparatorRefine {
 
-  /** Gather bound: an explicit positive argument wins; otherwise the
-    * session conf `spark.graft.vsep.maxGather` (scale benches lower it to
-    * force the SFG distributed path); otherwise 200000.
-    */
-  private def resolveMaxGather(spark: SparkSession, arg: Long): Long =
-    if (arg > 0) arg
-    else spark.conf.get("spark.graft.vsep.maxGather", "200000").toLong
+  // reference ubfactor for separators; each side may hold ceil(ub·tv/2)
+  private val UbFactor = 1.2
+  // reference nrefpass (src/ctrl.c:39): SFM half-pass pairs
+  private val NRefPass = 8
+  // reference hillsize: non-improving moves one SFM flow tolerates
+  private val HillSize = 16
+  // distributed greedy half-passes (S_pass_GREEDY)
+  private val GreedyPasses = 4
+  // bounded admit of the greedy pass: top AdmitCap per hash bucket
+  private val AdmitBuckets = 32
+  private val AdmitCap = 1024
+  private val DefaultMaxGather = 200000L
 
   /** Edge-gather bound = 8x the vertex bound, overflow-safe for callers
     * that pass a huge bound to effectively disable the guard.
@@ -40,57 +49,88 @@ object SeparatorRefine {
   private[partitioner] def edgeBound(mg: Long): Long =
     8L * math.min(mg, Long.MaxValue / 8L)
 
-  /** Refine `where(vid, side)` (side ∈ {0,1,2}); returns the same schema.
-    * `vwgt(vid, vwgt)` supplies vertex weights. Returns the input
-    * unchanged when the separator is empty; when the gather exceeds
-    * `maxGather` (vertices, or 8x in adjacency rows) the SFG distributed
-    * scheme runs instead of the gathered FM ([[refineSfg]]).
+  private def maxSide(tv: Long): Long = math.ceil(UbFactor * tv / 2.0).toLong
+
+  /** Whole-graph weight per side of `w(vid, side)`. */
+  private def sideWeights(w: DataFrame, vwgt: DataFrame): Array[Long] = {
+    val out = Array.fill(3)(0L)
+    w.join(vwgt, "vid").groupBy(col("side")).agg(sum(col("vwgt")).as("sw"))
+      .collect().foreach(r => out(r.get(0).toString.toInt) = r.getLong(1))
+    out
+  }
+
+  /** Refine `where(vid, side)` (side ∈ {0,1,2}); returns (vid, side).
+    * `vwgt(vid, vwgt)` supplies vertex weights. The gathered segmented FM
+    * runs when the separator region fits the gather bound. Otherwise SFG:
+    * the distributed greedy flow ([[refineGreedyDist]]) shrinks the
+    * separator, and the gather is retried; if it still does not fit, the
+    * greedy labels stand. Both fallbacks are counted
+    * (`vsep_refine_dist_fallback`, `vsep_sfm_skipped`).
     */
   def refine(spark: SparkSession, edges: DataFrame, where: DataFrame,
-             vwgt: DataFrame, ubFactor: Double = 1.2,
-             maxGather: Long = -1L, passes: Int = 4): DataFrame = {
-    val mg = resolveMaxGather(spark, maxGather)
+             vwgt: DataFrame): DataFrame = {
+    val mg = spark.conf.get("spark.graft.vsep.maxGather",
+      DefaultMaxGather.toString).toLong
     val w = where.select(col("vid"), col("side")).ckpt()
-    val sepV = w.filter(col("side") === 2).select(col("vid"))
-    if (sepV.isEmpty) return w
-    // adjacency of separator vertices (both directions), dst side/weight;
-    // checkpointed: counted once for the bound, then collected — without
-    // it the full-edge semi-join would run twice more below
-    val sym = GraphOps.symmetrize(edges)
-    val sepAdj = sym.join(sepV.withColumnRenamed("vid", "src"), Seq("src"),
-        "left_semi")
-      .select(col("src"), col("dst")).ckpt()
-    val gatherIds = sepV.unionByName(sepAdj.select(col("dst").as("vid")))
-      .distinct()
-    val nGather = gatherIds.count()
-    // bound BOTH the vertex and the edge gather: a small separator of
-    // HUBS carries Σ deg(sep) adjacency rows — unbounded by the vertex
-    // count alone (same guard as refineSfm); -1 = not counted (the vertex
-    // bound already tripped)
-    val nAdjE = if (nGather > mg) -1L else sepAdj.count()
-    if (nGather > mg || nAdjE > edgeBound(mg)) {
-      graft.plans.Plans.unpersist(sepAdj)
-      // never silent (repo rule): counted, and since round 4 the over-bound
-      // path gets the reference's PARALLEL default scheme SFG (greedy
-      // flow passes, then segmented FM once the greedy has shrunk the
-      // separator back under the gather bound — ctrl.c:300-306 picks SFG
-      // for VSEP/ND whenever nthreads > 1). The gathered FM stays the
-      // small-separator path (it sees negative-gain chains the one-sided
-      // greedy cannot)
-      graft.plans.Metrics.event("vsep_refine_dist_fallback",
-        s"separator+frontier $nGather vtxs / " +
-          s"${if (nAdjE < 0) "uncounted" else nAdjE.toString} adj rows > " +
-          s"maxGather $mg — running SFG (distributed greedy + gathered " +
-          "SFM) instead")
-      return refineSfg(spark, edges, w, vwgt, ubFactor, mg,
-        greedyPasses = math.max(passes, 4))
+    sfmGathered(spark, edges, w, vwgt, mg) match {
+      case Right(out) => out
+      case Left(over) =>
+        Metrics.event("vsep_refine_dist_fallback",
+          s"$over — running SFG (distributed greedy flow, then gathered SFM)")
+        val g = refineGreedyDist(spark, edges, w, vwgt)
+        Plans.unpersist(w) // g is its own checkpoint
+        sfmGathered(spark, edges, g, vwgt, mg) match {
+          case Right(out) => out
+          case Left(over2) =>
+            Metrics.event("vsep_sfm_skipped",
+              s"$over2 after the greedy flow — keeping the greedy labels")
+            g
+        }
     }
-    // global side weights (balance is whole-graph, not gathered-set)
-    val sideWRows = w.join(vwgt, "vid").groupBy(col("side"))
-      .agg(sum(col("vwgt")).as("sw")).collect()
-    val sideW = Array.fill(3)(0L)
-    sideWRows.foreach(r => sideW(r.get(0).toString.toInt) = r.getLong(1))
-    val gathered = gatherIds.join(w, "vid").join(vwgt, "vid")
+  }
+
+  /** Segmented FM over the gathered separator region (S_vseprefine_SFM,
+    * reference src/vseprefine.c:2207-2285): SEP ∪ N(SEP) is gathered with
+    * its COMPLETE adjacency (so pulls and onward flows are exact), the
+    * 2-hop ring with sides and weights only — ring vertices can be pulled
+    * into the separator but never move out (the shared-memory reference
+    * always has full adjacency). Left(what was counted) when the region is
+    * over the bound `mg`: vertices, or [[edgeBound]] adjacency rows.
+    */
+  private def sfmGathered(spark: SparkSession, edges: DataFrame,
+                          w: DataFrame, vwgt: DataFrame,
+                          mg: Long): Either[String, DataFrame] = {
+    val sepV = w.filter(col("side") === 2).select(col("vid"))
+    if (sepV.isEmpty) return Right(w)
+    val sym = GraphOps.symmetrize(edges).select(col("src"), col("dst"))
+    def ckptCounted(df: DataFrame) =
+      GraftSqlInternals.statlessLocalCheckpointCounted(df,
+        StorageLevel.MEMORY_AND_DISK)
+    // movable set: SEP ∪ N(SEP), whose full adjacency is gathered
+    val (movableIds, nMovable) = ckptCounted(sepV.unionByName(
+        sym.join(sepV.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")
+          .select(col("dst").as("vid")))
+      .distinct())
+    if (nMovable > mg) {
+      Plans.unpersist(movableIds)
+      return Left(s"separator region $nMovable vtxs > maxGather $mg")
+    }
+    // bound the edge gather too (a separator of hubs carries Σ deg
+    // adjacency rows behind a small vertex count), then the ring
+    val (gAdj, nAdjE) = ckptCounted(sym.join(
+      movableIds.withColumnRenamed("vid", "src"), Seq("src"), "left_semi"))
+    val universe = movableIds
+      .unionByName(gAdj.select(col("dst").as("vid"))).distinct()
+    val overE = nAdjE > edgeBound(mg)
+    val nGather = if (overE) 0L else universe.count()
+    if (overE || nGather > mg) {
+      Plans.unpersist(movableIds); Plans.unpersist(gAdj)
+      return Left(s"separator region $nMovable vtxs / $nAdjE adj rows" +
+        (if (overE) "" else s" ($nGather vtxs with its ring)") +
+        s" > maxGather $mg")
+    }
+    val sideW = sideWeights(w, vwgt)
+    val gathered = universe.join(w, "vid").join(vwgt, "vid")
       .select(col("vid"), col("side"), col("vwgt")).collect()
       .map(r => (r.getLong(0), r.get(1).toString.toInt, r.getLong(2)))
       .sortBy(_._1)
@@ -98,21 +138,31 @@ object SeparatorRefine {
     val idx = ids.zipWithIndex.toMap
     val side = gathered.map(_._2)
     val vw = gathered.map(_._3)
-    val adjPairs = sepAdj.collect()
-      .map(r => (idx(r.getLong(0)), idx(r.getLong(1))))
-    graft.plans.Plans.unpersist(sepAdj)
-    val adj = Array.fill(ids.length)(Array.empty[Int])
-    adjPairs.groupBy(_._1).foreach { case (v, ps) =>
-      adj(v) = ps.map(_._2).distinct.sorted
+    // gAdj's sources are exactly the movable vertices with an edge, so
+    // movable = a source or a (possibly isolated) separator member
+    val canMove = side.map(_ == 2)
+    // adjacency symmetric within the gathered universe: a ring vertex's
+    // (partial) reverse adjacency is exactly its gathered neighbors, which
+    // is all the con-update loop ever needs (SEP ⊂ gathered)
+    val adjSets = Array.fill(ids.length)(
+      scala.collection.mutable.Set.empty[Int])
+    gAdj.collect().foreach { r =>
+      val a = idx(r.getLong(0)); val b = idx(r.getLong(1))
+      canMove(a) = true
+      adjSets(a) += b; adjSets(b) += a
     }
-    val changed = fm(side, vw, adj, sideW, ubFactor, passes)
-    if (!changed) return w
+    val adj = adjSets.map(_.toArray.sorted)
+    Plans.unpersist(movableIds); Plans.unpersist(gAdj)
+    val before = side.clone()
+    sfm1s(side, vw, adj, canMove, sideW, maxSide(sideW.sum))
+    if (side.sameElements(before)) return Right(w)
     val updated = spark.createDataFrame(
-        ids.toIndexedSeq.zipWithIndex.map { case (v, i) => (v, side(i)) })
+        ids.toIndexedSeq.zipWithIndex.collect {
+          case (v, i) if side(i) != before(i) => (v, side(i)) })
       .toDF("vid", "nside")
-    w.join(updated, Seq("vid"), "left")
+    Right(w.join(updated, Seq("vid"), "left")
       .select(col("vid"),
-        coalesce(col("nside"), col("side")).cast("int").as("side"))
+        coalesce(col("nside"), col("side")).cast("int").as("side")))
   }
 
   /** Distributed one-sided greedy separator refinement — the Spark
@@ -129,40 +179,30 @@ object SeparatorRefine {
     * gains for ALL separator vertices in one join+aggregate, candidates
     * admitted in gain order under a cumulative-weight prefix so the target
     * side never exceeds maxpwgt (reference :556-559) — the prefix window
-    * runs on a pre-truncated candidate set (top `admitCap` per hash
-    * bucket), so the single-task window is bounded by admitBuckets×admitCap
+    * runs on a pre-truncated candidate set (top `AdmitCap` per hash
+    * bucket), so the single-task window is bounded by AdmitBuckets×AdmitCap
     * rows regardless of |SEP|. Unlike the serial per-move loop,
     * simultaneous movers sharing a pulled neighbor can jointly regress, so
     * the best assignment seen is kept FM-style (pass-granular rollback).
     *
     * This is the SCALE path: it never gathers the separator to the driver,
-    * so it refines separators of any size (the gathered [[fm]] is bounded
-    * by `maxGather`).
+    * so it refines separators of any size.
     */
   def refineGreedyDist(spark: SparkSession, edges: DataFrame,
-                       where: DataFrame, vwgt: DataFrame,
-                       ubFactor: Double = 1.2, passes: Int = 8,
-                       admitBuckets: Int = 32, admitCap: Int = 1024): DataFrame = {
+                       where: DataFrame, vwgt: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     var w = where.select(col("vid"), col("side").cast("int").as("side")).ckpt()
     val vw = vwgt.select(col("vid"), col("vwgt"))
     val sym = GraphOps.symmetrize(edges).select(col("src"), col("dst")).ckpt()
-    def sideWeights(a: DataFrame): Array[Long] = {
-      val out = Array.fill(3)(0L)
-      a.join(vw, "vid").groupBy(col("side")).agg(sum(col("vwgt")).as("sw"))
-        .collect().foreach(r => out(r.get(0).toString.toInt) = r.getLong(1))
-      out
-    }
-    var sw = sideWeights(w)
-    val tv = sw.sum
-    val maxSide = math.ceil(ubFactor * tv / 2.0).toLong
+    var sw = sideWeights(w, vw)
+    val cap = maxSide(sw.sum)
     // first half-pass targets the LIGHTER side (reference :1323-1329)
     val o = if (sw(0) > sw(1)) 1 else 0
     var bestW = w
     var bestSep = sw(2)
     var nnone = 0
     var d = 0
-    while (d < passes && nnone < 2 && sw(2) > 0) {
+    while (d < GreedyPasses && nnone < 2 && sw(2) > 0) {
       val s = (d + o) % 2
       val other = 1 - s
       val sepIds = w.filter(col("side") === 2).select(col("vid"))
@@ -180,18 +220,18 @@ object SeparatorRefine {
         // side (reference :538-543)
         .filter(col("gain") > 0 ||
           (col("gain") === 0 && lit(sw(s) < sw(other))))
-      val quota = maxSide - sw(s)
+      val quota = cap - sw(s)
       val movers =
         if (quota <= 0) spark.range(0).select(col("id").as("vid"))
         else {
           // bounded admit (Refinement pattern): pre-truncate per hash
           // bucket so the exact cumulative prefix below is a single task
-          // over ≤ admitBuckets×admitCap rows, never O(|SEP|)
+          // over ≤ AdmitBuckets×AdmitCap rows, never O(|SEP|)
           val capped = cand
-            .withColumn("bkt", pmod(xxhash64(col("vid")), lit(admitBuckets)))
+            .withColumn("bkt", pmod(xxhash64(col("vid")), lit(AdmitBuckets)))
             .withColumn("r", row_number().over(Window.partitionBy(col("bkt"))
               .orderBy(col("gain").desc, col("vid"))))
-            .filter(col("r") <= admitCap).drop("bkt", "r")
+            .filter(col("r") <= AdmitCap).drop("bkt", "r")
           val wCum = Window.orderBy(col("gain").desc, col("vid"))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
           capped.withColumn("cumw", sum(col("vwgt")).over(wCum))
@@ -200,7 +240,7 @@ object SeparatorRefine {
       val mv = movers.ckpt()
       val nMoves = mv.count()
       if (nMoves == 0) {
-        graft.plans.Plans.unpersist(mv)
+        Plans.unpersist(mv)
         nnone += 1
       } else {
         // other-side neighbors of every mover enter the separator
@@ -217,158 +257,37 @@ object SeparatorRefine {
             when(col("mv"), lit(s)).when(col("pl"), lit(2))
               .otherwise(col("side")).cast("int").as("side"))
           .ckpt()
-        graft.plans.Plans.unpersist(mv)
-        sw = sideWeights(w)
+        Plans.unpersist(mv)
+        sw = sideWeights(w, vw)
         if (sw(2) < bestSep) {
-          if (!(bestW eq prev)) graft.plans.Plans.unpersist(bestW)
+          if (!(bestW eq prev)) Plans.unpersist(bestW)
           bestSep = sw(2)
           bestW = w
         }
-        if (!(prev eq bestW)) graft.plans.Plans.unpersist(prev)
+        if (!(prev eq bestW)) Plans.unpersist(prev)
         nnone = 0
       }
       d += 1
     }
-    if (!(w eq bestW)) graft.plans.Plans.unpersist(w)
-    graft.plans.Plans.unpersist(sym)
+    if (!(w eq bestW)) Plans.unpersist(w)
+    Plans.unpersist(sym)
     bestW
   }
 
-  /** Segmented-FM separator refinement (reference S_vseprefine_SFM,
-    * src/vseprefine.c:2207-2285): alternating one-sided FLOW half-passes
-    * over the gathered separator region. Differs from [[refine]]'s FM in
-    * that pulled vertices are NOT locked — they re-enter the queue and may
-    * flow onward toward the same side (the "segmented" behaviour), which
-    * drains corridor-shaped separators the pull-and-lock FM cannot.
-    *
-    * Gather shape: SEP ∪ N(SEP) with COMPLETE adjacency (so their pulls
-    * and onward flows are exact), plus the 2-hop ring's sides/weights
-    * without adjacency — ring vertices can be pulled into the separator
-    * but never move out (a conservative narrowing; the shared-memory
-    * reference always has full adjacency). Balance is whole-graph: side
-    * weights come from one global aggregate, exactly like [[refine]].
-    *
-    * Over the `maxGather` bound the distributed greedy pass runs instead
-    * (when `fallbackToGreedy`; [[refineSfg]] disables that because it has
-    * already run the greedy pass).
-    */
-  def refineSfm(spark: SparkSession, edges: DataFrame, where: DataFrame,
-                vwgt: DataFrame, ubFactor: Double = 1.2,
-                maxGather: Long = -1L, nrefpass: Int = 8,
-                hillSize: Int = 16, levelParity: Int = 0,
-                fallbackToGreedy: Boolean = true): DataFrame = {
-    val mg = resolveMaxGather(spark, maxGather)
-    val w = where.select(col("vid"), col("side")).ckpt()
-    val sepV = w.filter(col("side") === 2).select(col("vid"))
-    if (sepV.isEmpty) return w
-    val sym = GraphOps.symmetrize(edges).select(col("src"), col("dst"))
-    // movable set: SEP ∪ N(SEP), whose full adjacency is gathered
-    val movableIds = sepV.unionByName(
-        sym.join(sepV.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")
-          .select(col("dst").as("vid")))
-      .distinct().ckpt()
-    // checkpointed: the full-edge semi-join otherwise re-runs for the
-    // bound count, the universe count, and both collects below
-    val gAdj = sym.join(movableIds.withColumnRenamed("vid", "src"),
-      Seq("src"), "left_semi").ckpt()
-    val universe = movableIds
-      .unionByName(gAdj.select(col("dst").as("vid"))).distinct()
-    // bound BOTH the vertex and the edge gather (a dense frontier can
-    // carry maxGather² edges behind a small vertex count); -1 = not
-    // counted (the vertex bound already tripped)
-    val nGather = universe.count()
-    val nAdjE = if (nGather > mg) -1L else gAdj.count()
-    if (nGather > mg || nAdjE > edgeBound(mg)) {
-      graft.plans.Plans.unpersist(movableIds)
-      graft.plans.Plans.unpersist(gAdj)
-      graft.plans.Metrics.event("vsep_sfm_skipped",
-        s"SFM gather $nGather vtxs / " +
-          s"${if (nAdjE < 0) "uncounted" else nAdjE.toString} edges " +
-          s"> bound $mg" +
-          (if (fallbackToGreedy) " — running distributed greedy instead"
-           else " — keeping the greedy-refined labels"))
-      return if (fallbackToGreedy)
-        refineGreedyDist(spark, edges, w, vwgt, ubFactor,
-          passes = math.max(nrefpass, 4))
-      else w
-    }
-    // global side weights (balance is whole-graph, not gathered-set)
-    val sideW = Array.fill(3)(0L)
-    w.join(vwgt, "vid").groupBy(col("side")).agg(sum(col("vwgt")).as("sw"))
-      .collect().foreach(r => sideW(r.get(0).toString.toInt) = r.getLong(1))
-    val gathered = universe.join(w, "vid").join(vwgt, "vid")
-      .select(col("vid"), col("side"), col("vwgt")).collect()
-      .map(r => (r.getLong(0), r.get(1).toString.toInt, r.getLong(2)))
-      .sortBy(_._1)
-    val ids = gathered.map(_._1)
-    val idx = ids.zipWithIndex.toMap
-    val side = gathered.map(_._2)
-    val vw = gathered.map(_._3)
-    val movable = movableIds.collect().map(_.getLong(0)).toSet
-    val canMove = ids.map(movable.contains)
-    // adjacency symmetric within the gathered universe: a ring vertex's
-    // (partial) reverse adjacency is exactly its gathered neighbors, which
-    // is all the con-update loop ever needs (SEP ⊂ gathered)
-    val adjSets = Array.fill(ids.length)(
-      scala.collection.mutable.Set.empty[Int])
-    gAdj.collect().foreach { r =>
-      val a = idx(r.getLong(0)); val b = idx(r.getLong(1))
-      adjSets(a) += b; adjSets(b) += a
-    }
-    val adj = adjSets.map(_.toArray.sorted)
-    graft.plans.Plans.unpersist(movableIds)
-    graft.plans.Plans.unpersist(gAdj)
-    val before = side.clone()
-    val tv = sideW.sum
-    val maxSide = math.ceil(ubFactor * tv / 2.0).toLong
-    sfm1s(side, vw, adj, canMove, sideW, maxSide, nrefpass, hillSize,
-      levelParity)
-    if (side.sameElements(before)) return w
-    val updated = spark.createDataFrame(
-        ids.toIndexedSeq.zipWithIndex.collect {
-          case (v, i) if side(i) != before(i) => (v, side(i)) })
-      .toDF("vid", "nside")
-    w.join(updated, Seq("vid"), "left")
-      .select(col("vid"),
-        coalesce(col("nside"), col("side")).cast("int").as("side"))
-  }
-
-  /** SFG — the reference's PARALLEL default scheme for vertex separators
-    * and nested dissection (ctrl.c:300-306 picks RTYPE_SFG whenever
-    * nthreads > 1; S_vseprefine_SFG, src/vseprefine.c:2373-2460): one
-    * greedy flow pass, then one SFM1S pass. Here: the distributed greedy
-    * ([[refineGreedyDist]], the any-size path) shrinks the separator,
-    * then the gathered SFM polishes it — by which point a huge separator
-    * has usually drained under the gather bound; if not, the greedy
-    * result stands (counted via `vsep_sfm_skipped`).
-    */
-  def refineSfg(spark: SparkSession, edges: DataFrame, where: DataFrame,
-                vwgt: DataFrame, ubFactor: Double = 1.2,
-                maxGather: Long = -1L, greedyPasses: Int = 2,
-                hillSize: Int = 16): DataFrame = {
-    val g = refineGreedyDist(spark, edges, where, vwgt, ubFactor,
-      passes = greedyPasses)
-    refineSfm(spark, edges, g, vwgt, ubFactor, maxGather, nrefpass = 1,
-      hillSize = hillSize, fallbackToGreedy = false)
-  }
-
   /** Alternating half-pass driver (S_pass_SFM1S, reference
-    * src/vseprefine.c:1227-1301): up to `2*nrefpass` one-sided flow
-    * half-passes, the first targeting the lighter side (ties broken by
-    * `levelParity` — :1252-1258), stopping after two consecutive empty
+    * src/vseprefine.c:1227-1301): up to `2*NRefPass` one-sided flow
+    * half-passes, the first targeting the lighter side (side 0 on a tie —
+    * :1252-1258 at level parity 0), stopping after two consecutive empty
     * half-passes. Arrays updated in place; returns total retained moves.
     */
   private[partitioner] def sfm1s(side: Array[Int], vw: Array[Long],
       adj: Array[Array[Int]], canMove: Array[Boolean], sideW: Array[Long],
-      maxSide: Long, nrefpass: Int, hillSize: Int = 16,
-      levelParity: Int = 0): Int = {
-    val o = if (sideW(0) > sideW(1)) 1
-            else if (sideW(0) < sideW(1)) 0
-            else levelParity % 2
+      maxSide: Long): Int = {
+    val o = if (sideW(0) > sideW(1)) 1 else 0
     var total = 0; var nnone = 0; var d = 0
-    while (d < 2 * nrefpass && nnone < 2 && sideW(2) > 0) {
+    while (d < 2 * NRefPass && nnone < 2 && sideW(2) > 0) {
       val s = (d + o) % 2
-      val nm = sfmFlow(side, vw, adj, canMove, sideW, s, maxSide, hillSize)
+      val nm = sfmFlow(side, vw, adj, canMove, sideW, s, maxSide, HillSize)
       if (nm == 0) nnone += 1 else { total += nm; nnone = 0 }
       d += 1
     }
@@ -379,7 +298,8 @@ object SeparatorRefine {
     * src/vseprefine.c:771-1026): pop separator vertices by gain toward the
     * fixed side `s` (gain = w(v) − con_other(v)); a move pulls the
     * mover's other-side neighbors into the separator, where they re-enter
-    * the queue and may flow onward to `s`; neighbors' gains are updated as
+    * the queue and may flow onward to `s` (the "segmented" behaviour that
+    * drains corridor-shaped separators); neighbors' gains are updated as
     * the pulled weight leaves `other` (:929-946). Stops when the target
     * side hits `maxSide` (:836-843) or `limit` consecutive moves fail to
     * improve the (separator weight, |balance|) objective (:853-868), then
@@ -472,80 +392,5 @@ object SeparatorRefine {
       }
     }
     minMove
-  }
-
-  /** In-place FM over the gathered arrays; returns true if any label
-    * changed. `adj` is populated only for initial separator members.
-    */
-  private[partitioner] def fm(side: Array[Int], vw: Array[Long],
-                              adj: Array[Array[Int]], sideW: Array[Long],
-                              ubFactor: Double, passes: Int): Boolean = {
-    val n = side.length
-    val tv = sideW.sum
-    val maxSide = math.ceil(ubFactor * tv / 2.0).toLong
-    val orig = side.clone()
-    var bestSide = side.clone()
-    var bestSepW = sideW(2)
-    val bestW = sideW.clone()
-    var pass = 0
-    var improvedAny = true
-    while (pass < passes && improvedAny) {
-      improvedAny = false
-      val locked = new Array[Boolean](n)
-      val sepSize0 = (0 until n).count(side(_) == 2)
-      var moves = 0
-      var more = true
-      while (more && moves < 2 * sepSize0 + 4) {
-        // best (v ∈ SEP with adjacency, unlocked) → s move by gain
-        var bv = -1; var bs = -1; var bGain = Long.MinValue
-        var v = 0
-        while (v < n) {
-          if (side(v) == 2 && !locked(v) && adj(v).nonEmpty) {
-            var s = 0
-            while (s < 2) {
-              // balance: target side may not overfill (or must stay the
-              // lighter side, so a skewed start can still drain)
-              if (sideW(s) + vw(v) <= maxSide ||
-                  sideW(s) + vw(v) <= sideW(1 - s)) {
-                var pull = 0L
-                adj(v).foreach(u => if (side(u) == 1 - s) pull += vw(u))
-                val gain = vw(v) - pull
-                if (gain > bGain ||
-                    (gain == bGain && bv >= 0 &&
-                      sideW(s) < sideW(bs))) {
-                  bv = v; bs = s; bGain = gain
-                }
-              }
-              s += 1
-            }
-          }
-          v += 1
-        }
-        if (bv < 0) more = false
-        else {
-          side(bv) = bs; locked(bv) = true
-          sideW(2) -= vw(bv); sideW(bs) += vw(bv)
-          adj(bv).foreach { u =>
-            if (side(u) == 1 - bs) {
-              sideW(side(u)) -= vw(u)
-              side(u) = 2; sideW(2) += vw(u)
-              locked(u) = true
-            }
-          }
-          moves += 1
-          if (sideW(2) < bestSepW) {
-            bestSepW = sideW(2)
-            Array.copy(side, 0, bestSide, 0, n)
-            Array.copy(sideW, 0, bestW, 0, 3)
-            improvedAny = true
-          }
-        }
-      }
-      // rollback to the best state seen (FM)
-      Array.copy(bestSide, 0, side, 0, n)
-      Array.copy(bestW, 0, sideW, 0, 3)
-      pass += 1
-    }
-    !side.sameElements(orig)
   }
 }

@@ -74,10 +74,12 @@ object Plans {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Release the storage behind a checkpoint that is provably dead (its
-    * successor has already materialized). Checkpoint blocks are the only
-    * copy of their rows, so Spark never evicts them — an iterative
-    * checkpoint-per-round algorithm pins every superseded round for the
-    * session lifetime without this. The frame must not be read afterwards.
+    * successor has already materialized). Spark's ContextCleaner drops a
+    * local checkpoint only once its RDD object is garbage-collected, so an
+    * iterative checkpoint-per-round algorithm that does not release holds
+    * every superseded round until some GC happens to clear it: releasing
+    * explicitly keeps peak storage independent of GC timing. The frame
+    * must not be read afterwards.
     */
   def unpersist(df: DataFrame): Unit =
     GraftSqlInternals.unpersistCheckpoint(df)

@@ -61,11 +61,13 @@ object GraftSqlInternals {
   /** Drop the storage blocks behind a [[statlessLocalCheckpoint]] result
     * that is provably DEAD (every downstream consumer has already
     * materialized its own checkpoint). Local-checkpoint blocks are the only
-    * copy of the data — Spark never evicts them on its own — so an
-    * iterative algorithm that checkpoints per round pins every superseded
-    * round's rows for the session lifetime unless it releases them
-    * explicitly. No-op when `df` is not a checkpoint leaf. The DataFrame
-    * must not be read again afterwards (recompute would fail).
+    * copy of the data, and Spark's ContextCleaner drops them only once the
+    * RDD object is garbage-collected, so an iterative algorithm that
+    * checkpoints per round holds every superseded round's rows until a GC
+    * happens to clear them. Releasing explicitly keeps peak storage
+    * independent of GC timing. No-op when `df` is not a checkpoint leaf.
+    * The DataFrame must not be read again afterwards (recompute would
+    * fail).
     */
   def unpersistCheckpoint(df: Dataset[Row]): Unit =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed match {

@@ -104,8 +104,57 @@ class PartitionerExtSpec extends SparkSpec {
     val refined = Refinement.refineMC(spark, edgesDf(e), vw, bad, k = 2)
     val pw = refined.groupBy(col("part")).count().collect()
       .map(r => r.getLong(1))
-    // target 8, ub 1.03: floor(8/1.03)=7, ceil(8*1.03)=9
+    // target 8, ub 1.03: floor(8/1.03)=7, ceil(8*1.03)=9 (the admit cap
+    // is floor(8*1.03)=8)
     assert(pw.forall(w => w >= 7 && w <= 9), s"part weights ${pw.mkString(",")}")
+  }
+
+  test("refineMC keeps a pass that fills a part to its admit bound") {
+    // 100 unit vertices, k=2, ub=1.03: tgt·tv·ub = 51.5. Part 0 = {0..48}
+    // (49), part 1 = {49..99} (51); two paths keep both sides internally
+    // connected. 97, 98 and 99 each have two edges into part 0 and one to
+    // 96: gain 1 toward part 0, and no other vertex has a positive gain.
+    // Admitting under ceil(51.5) = 52 moved all three (part 0 = 52,
+    // imbalance 1.04 > ub) and the pass was thrown away; under
+    // floor(51.5) = 51 two move, imbalance 1.02, cut 6 -> 4
+    val e = (0L until 48L).map(i => (i, i + 1, 1L)) ++
+      (49L until 96L).map(i => (i, i + 1, 1L)) ++
+      Seq(97L, 98L, 99L).flatMap { v =>
+        val a = 2L * (v - 97L)
+        Seq((a, v, 1L), (a + 1, v, 1L), (96L, v, 1L))
+      }
+    val vids = 0L until 100L
+    val vw = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
+    val a0 = assignDf(vids.map(v => v -> (if (v < 49L) 0 else 1)).toMap)
+    assert(Oracles.cut(e, vids.map(v => v -> (if (v < 49L) 0 else 1)).toMap) == 6)
+    val out = Refinement.refineMC(spark, edgesDf(e), vw, a0, k = 2)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(out.keySet == vids.toSet, "totality")
+    val imb = Oracles.imbalance(out, vids.map(_ -> 1L).toMap, 2)
+    assert(imb <= 1.03 + 1e-9, s"imbalance $imb over ub")
+    assert(Oracles.cut(e, out) == 4, s"the pass must be kept: cut ${Oracles.cut(e, out)}")
+  }
+
+  test("refineMC keeps a pass on a level that arrives over ub") {
+    // 100 unit vertices, k=4, ub=1.03: parts of 26/25/25/24 along four
+    // paths, so part 0 arrives at 26/25 = 1.04 (the serial levels admit up
+    // to ceil(25.75) = 26). 75 (end of part 2's path) has two edges into
+    // part 3: moving it cuts 2 -> 1 and leaves part 0 at 1.04. A pass that
+    // does not worsen the arriving imbalance must be kept
+    val start = (v: Long) => if (v < 26L) 0 else if (v < 51L) 1
+      else if (v < 76L) 2 else 3
+    val e = Seq((0L, 25L), (26L, 50L), (51L, 75L), (76L, 99L))
+      .flatMap { case (a, b) => (a until b).map(i => (i, i + 1, 1L)) } ++
+      Seq((75L, 76L, 1L), (75L, 77L, 1L))
+    val vids = 0L until 100L
+    val vw = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
+    val a0 = vids.map(v => v -> start(v)).toMap
+    assert(Oracles.cut(e, a0) == 2)
+    val out = Refinement.refineMC(spark, edgesDf(e), vw, assignDf(a0), k = 4)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val imb = Oracles.imbalance(out, vids.map(_ -> 1L).toMap, 4)
+    assert(imb <= 1.04 + 1e-9, s"imbalance $imb over the arriving 1.04")
+    assert(Oracles.cut(e, out) == 1, s"the pass must be kept: cut ${Oracles.cut(e, out)}")
   }
 
   test("best-of-nruns never loses to the single run (P11)") {
@@ -387,7 +436,7 @@ class PartitionerExtSpec extends SparkSpec {
       (0L, 0), (1L, 2), (2L, 1), (3L, 1), (4L, 1))).toDF("vid", "side")
     val vw = vertsDf(Seq(0L, 1L, 2L, 3L, 4L)).withColumn("vwgt", lit(1L))
     val out = graft.partitioner.SeparatorRefine
-      .refineSfm(spark, edgesDf(e), where0, vw)
+      .refine(spark, edgesDf(e), where0, vw)
       .collect().map(r => r.getLong(0) -> r.get(1).toString.toInt).toMap
     assert(out == Map(0L -> 0, 1L -> 0, 2L -> 2, 3L -> 1, 4L -> 1),
       s"flow must shift the separator from vertex 1 to vertex 2: $out")
@@ -401,7 +450,7 @@ class PartitionerExtSpec extends SparkSpec {
         vertsDf(vids))
       val sep0 = where0.filter(col("side") === 2).count()
       val out = graft.partitioner.SeparatorRefine
-        .refineSfm(spark, edgesDf(e), where0, vw)
+        .refine(spark, edgesDf(e), where0, vw)
         .collect().map(r => r.getLong(0) -> r.get(1).toString.toInt).toMap
       assert(out.keySet == vids.toSet, "totality")
       assert(out.values.count(_ == 2) <= sep0,
@@ -413,18 +462,24 @@ class PartitionerExtSpec extends SparkSpec {
   }
 
   test("SFG (reference parallel default): greedy+SFM drains free movers") {
-    // same fixture as the greedy drain test: SFG's single greedy pass pair
-    // must drain the separator under the balance cap, and the follow-up
-    // SFM pass must be a no-op on the empty separator
+    // same fixture as the greedy drain test, with the gather bound (4)
+    // under the 10-vertex separator region: refine must take the SFG path,
+    // whose greedy pass pair drains the separator under the balance cap;
+    // the retried gather then finds an empty separator
     val e = Seq((0L, 2L, 1L), (1L, 3L, 1L))
     val verts = (0L to 9L)
     val where0 = spark.createDataFrame(
       verts.map(v => (v, if (v == 0L) 0 else if (v == 1L) 1 else 2)))
       .toDF("vid", "side")
     val vw = vertsDf(verts).withColumn("vwgt", lit(1L))
-    val out = graft.partitioner.SeparatorRefine
-      .refineSfg(spark, edgesDf(e), where0, vw)
+    val fb0 = graft.plans.Metrics.count("vsep_refine_dist_fallback")
+    spark.conf.set("spark.graft.vsep.maxGather", "4")
+    val out = try graft.partitioner.SeparatorRefine
+      .refine(spark, edgesDf(e), where0, vw)
       .collect().map(r => r.getLong(0) -> r.get(1).toString.toInt).toMap
+    finally spark.conf.unset("spark.graft.vsep.maxGather")
+    assert(graft.plans.Metrics.count("vsep_refine_dist_fallback") == fb0 + 1,
+      "over the bound, refine must run SFG")
     assert(out.keySet == verts.toSet, "totality")
     assert(out.values.count(_ == 2) == 0, s"separator must drain: $out")
     val sw = out.values.groupBy(identity).map { case (k, v) => k -> v.size }
