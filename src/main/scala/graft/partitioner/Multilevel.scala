@@ -85,6 +85,7 @@ object Multilevel {
                   serialTailVertices: Long = 200000L): PartitionResult = {
     val tgt = if (targets != null) targets else Array.fill(k)(1.0 / k)
     val coarsenTo = if (coarsenTo0 > 0) coarsenTo0 else math.max(30 * k, 200)
+    val tInputs = System.nanoTime()
     // materialize both inputs ONCE (stats-free checkpoint), so the dispatch
     // counts, the island split, and (on the serial path) the collects never
     // re-derive the upstream plan. Spill-level: these live for the whole
@@ -109,11 +110,36 @@ object Multilevel {
     if (nAll <= serialGraphVertices && eAll <= SerialGraphEdges)
       return partitionSerialWhole(spark, allEdges, allVerts, k, ncon, ubFactor,
         coarsenTo, stopRatio, seed, nRuns, tgt)
-    // F4: degree-0 islands skip the V-cycle entirely
-    val (connected0, islands) = GraphOps.splitIslands(allVerts, allEdges)
+    // F4: degree-0 islands skip the V-cycle entirely. One vertex checkpoint
+    // carries a `touched` flag (the island split's one materialization):
+    // the connected vertices and the islands are narrow filters over it,
+    // and one aggregate counts the connected vertices with the weight
+    // totals, so the island count costs no job of its own
+    def wc(c: Int) = element_at(col("vwgts"), c + 1)
+    val flagged = allVerts
+      .join(GraphOps.edgeVertices(allEdges).withColumn("touched", lit(true)),
+        Seq("vid"), "left")
+      .select(col("vid"), col("vwgts"),
+        coalesce(col("touched"), lit(false)).as("touched"))
+      .ckptSpill()
+    graft.plans.Plans.unpersist(allVerts)
+    val inCols = count_if(col("touched")).as("n") +:
+      (0 until ncon).map(c => sum(wc(c)).as(s"t$c"))
+    val inRow = flagged.agg(inCols.head, inCols.tail: _*).head()
+    var nvtxs = inRow.getLong(0)
+    val tv = (0 until ncon).map(c => inRow.getLong(c + 1)).toArray
+    var vertices = flagged.filter(col("touched"))
+      .select(col("vid"), col("vwgts"))
+    val islands = flagged.filter(!col("touched"))
+      .select(col("vid"), col("vwgts"))
+    val nIsl = nAll - nvtxs
+    // the islands' driver copy, (vid, weight) in vid order, whenever they
+    // are few enough to pass through the driver
+    val isl =
+      if (nIsl == 0 || !GraphOps.broadcastable(nIsl)) Array.empty[(Long, Long)]
+      else islands.select(col("vid"), wc(0)).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     var edges = allEdges
-    var (vertices, nvtxs) = connected0.select(col("vid"), col("vwgts"))
-      .ckptSpillCounted()
     var nedges = eAll
     // serial-tail dispatch bound (reference: serial FM/METIS below a size
     // threshold, src/eseprefine.c:1060-1097, src/imetis.c:147-223): once a
@@ -124,13 +150,11 @@ object Multilevel {
     // (the collect is a one-off, not the whole job); serialGraphVertices=0
     // (the force-distributed override) disables the tail too.
     val tailV = if (serialGraphVertices <= 0) 0L else serialTailVertices
-    def wc(c: Int) = element_at(col("vwgts"), c + 1)
-    val tvCols = (0 until ncon).map(c => sum(wc(c)).as(s"t$c"))
-    val tvAll = allVerts.agg(tvCols.head, tvCols.tail: _*).head()
-    val tv = (0 until ncon).map(c => tvAll.getLong(c)).toArray
     // P7 matching weight cap per constraint: 1.5 * (tvwgt / coarsenTo + 2)
     // (reference src/coarsen.c:78-88)
     val caps = tv.map(t => (1.5 * (t.toDouble / coarsenTo + 2)).toLong)
+    Metrics.log("vcycle_inputs", "nvtxs" -> nvtxs, "nedges" -> eAll,
+      "islands" -> nIsl, "wall_s" -> Metrics.secondsSince(tInputs))
 
     var levels = List.empty[Level] // finest first
     var shrinking = true
@@ -226,30 +250,31 @@ object Multilevel {
     // level the coarsen loop left above coarsenTo (the serial-tail bounds)
     // first coarsens further — greedy growing alone on a 200k-vertex graph
     // is NOT an initial partitioner
+    val tGather = System.nanoTime()
     val (eArr, vArr) = gather(edges, vertices)
     val g = InitialPartition.fromEdgesMC(eArr, vArr, ncon)
-    val finestEdges = if (levels.nonEmpty) levels.last.edges else edges
-    val finestVerts = if (levels.nonEmpty) levels.last.vertices else vertices
+    var serialSec = Metrics.secondsSince(tGather)
+    var cutSec = 0.0
     var tailLevels = 0
 
     // P11 best-of-nruns over the init+uncoarsen phase (coarsening is
     // deterministic and shared)
-    var bestAssign: DataFrame = null
-    var bestCut = Long.MaxValue
+    var best: Refinement.Refined = null
     for (run <- 0 until nRuns) {
       // best-of-4 serial solves: the serial V-cycle costs seconds where the
       // distributed levels it replaces cost minutes — spend some of that
       // budget buying back init variance
+      val tSolve = System.nanoTime()
       val (where0, nl) = SerialMultilevel.partition(g, k, ubFactor, coarsenTo,
         stopRatio, seed + 7919L * run, 4, tgt)
       tailLevels = nl
-      var assign = spark.createDataFrame(
-        g.vids.zip(where0).toSeq.map { case (v, p) => (v, p) }
-      ).toDF("vid", "part").ckpt()
+      var assign = assignOf(spark, g.vids, where0)
+      serialSec += Metrics.secondsSince(tSolve)
 
       // uncoarsen: project + refine per level, finest last. The coarsest
       // level needs no distributed refine — InitialPartition.refineGreedy
       // already refined it serially on the gathered graph (P10)
+      var refined: Refinement.Refined = null
       var levelIdx = levels.size
       for (lvl <- levels) {
         levelIdx -= 1
@@ -261,39 +286,61 @@ object Multilevel {
           .select(col("vid"), col("part"))
           .ckpt()
         // the coarser level's assignment is folded into `projected` — dead
-        // now (it is never bestAssign: that is only ever a FINEST-level
+        // now (it is never the best: that is only ever a FINEST-level
         // assignment from a previous run)
         graft.plans.Plans.unpersist(assign)
         val serial = lvl.nvtxs <= serialRefineThreshold
-        assign =
+        refined =
           if (serial) serialRefine(spark, lvl, projected, k, ncon, ubFactor, tgt)
           else Refinement.refineMC(spark, lvl.edges, lvl.vertices,
             projected, k, ubFactor, ncon = ncon, targets = tgt,
             nVerts = lvl.nvtxs)
+        assign = refined.assign
         // refine returned its own checkpoint; the projection is dead
         graft.plans.Plans.unpersist(projected)
         Metrics.log("uncoarsen_level", "run" -> run, "level" -> levelIdx,
           "nvtxs" -> lvl.nvtxs, "serial_refine" -> serial,
           "wall_s" -> Metrics.secondsSince(tLvl))
       }
-      val cut = GraphOps.edgeCut(finestEdges, assign,
-        if (levels.nonEmpty) levels.last.nvtxs else nvtxs)
-      if (cut < bestCut) {
-        if (bestAssign != null) graft.plans.Plans.unpersist(bestAssign)
-        bestCut = cut; bestAssign = assign
+      // the finest level's cut and constraint-0 part weights: its refine
+      // measured them; with no distributed level, they are summed over the
+      // gathered graph
+      val tCut = System.nanoTime()
+      if (refined == null) refined = Refinement.Refined(assign,
+        InitialPartition.cutOf(g, where0), partWeights(g, where0, k))
+      cutSec += Metrics.secondsSince(tCut)
+      if (best == null || refined.cut < best.cut) {
+        if (best != null) graft.plans.Plans.unpersist(best.assign)
+        best = refined
       } else graft.plans.Plans.unpersist(assign)
     }
 
     // F4 restore: islands fill the parts' remaining weight headroom
     // (reference round-robins them into underweight parts,
     // src/graph.c:3271-3382) — deterministic deficit-proportional fill over
-    // the vid-ordered island sequence, no global window. Islands have no
-    // edges, so the finest level's cut is already the final cut
-    val fullAssign = restoreIslands(spark, bestAssign, finestVerts, islands,
-      k, tgt, tv)
-    val scalarVerts = allVerts.select(col("vid"), wc(0).as("vwgt"))
-    val imb = imbalanceTargets(fullAssign, scalarVerts, tgt, tv(0))
-    PartitionResult(fullAssign, bestCut, imb, levels.size + tailLevels)
+    // the vid-ordered island sequence. Islands have no edges, so the finest
+    // level's cut is already the final cut; `pw` gains the islands' weights
+    val tIslands = System.nanoTime()
+    val pw = best.pwgts.clone()
+    val fullAssign =
+      if (nIsl == 0) best.assign
+      else if (isl.nonEmpty) {
+        val islWhere = placeIslands(pw, isl, tgt, tv(0))
+        val full = graft.plans.Plans.checkpoint(best.assign
+          .select(col("vid"), col("part").cast("int").as("part"))
+          .unionByName(spark.createDataFrame(
+            isl.indices.map(i => (isl(i)._1, islWhere(i)))).toDF("vid", "part")))
+        graft.plans.Plans.unpersist(best.assign)
+        full
+      } else restoreIslands(spark, best.assign, islands, pw, tgt, tv(0))
+    val islandsSec = Metrics.secondsSince(tIslands)
+    val tImb = System.nanoTime()
+    val imb = imbalanceOf(pw, tgt, tv(0))
+    Metrics.log("vcycle_result", "runs" -> nRuns, "cut" -> best.cut,
+      "imbalance" -> imb, "islands" -> nIsl, "serial_s" -> serialSec,
+      "cut_s" -> cutSec, "islands_s" -> islandsSec,
+      "imbalance_s" -> Metrics.secondsSince(tImb))
+    PartitionResult(fullAssign, best.cut, imb, levels.size + tailLevels)
   }
 
   /** Whole-graph serial dispatch: gather the (small) graph, run the entire
@@ -313,54 +360,33 @@ object Multilevel {
     val touched = new scala.collection.mutable.HashSet[Long]
     eArr.foreach { case (s, d, _) => touched += s; touched += d }
     val (conn, isl) = vArr.partition(v => touched(v._1))
+    val g = InitialPartition.fromEdgesMC(eArr, conn, ncon)
     val (whereConn, nLevels) =
       if (conn.isEmpty) (Array.empty[Int], 0)
-      else {
-        val g = InitialPartition.fromEdgesMC(eArr, conn, ncon)
-        SerialMultilevel.partition(g, k, ubFactor, coarsenTo, stopRatio,
-          seed, nRuns, tgt)
-      }
-    val connVids = conn.map(_._1)
-    val pwgt = new Array[Long](k)
-    conn.indices.foreach(i => pwgt(whereConn(i)) += conn(i)._2(0))
-    // F4 restore, serial mirror of [[restoreIslands]] ([[islandBounds]])
-    val islWhere = new Array[Int](isl.length)
-    if (isl.nonEmpty) {
-      val cumBounds = islandBounds(pwgt, tgt, tv0, isl.map(_._2(0)).sum)
-      var cum = 0L
-      isl.indices.foreach { i =>
-        cum += isl(i)._2(0)
-        var p = 0
-        while (p < k - 1 && cum > cumBounds(p)) p += 1
-        islWhere(i) = p
-        pwgt(p) += isl(i)._2(0)
-      }
-    }
-    // serial metrics (A4 cut over canonical edges; A7 imbalance vs targets)
-    val whereOf = new scala.collection.mutable.HashMap[Long, Int]
-    connVids.indices.foreach(i => whereOf(connVids(i)) = whereConn(i))
-    isl.indices.foreach(i => whereOf(isl(i)._1) = islWhere(i))
-    var cut = 0L
-    eArr.foreach { case (s, d, w) => if (whereOf(s) != whereOf(d)) cut += w }
-    val imb =
-      if (tv0 == 0) 1.0
-      else (0 until k).map(p => pwgt(p).toDouble / (tgt(p) * tv0)).max
-    val rows = vArr.map { case (v, _) => (v, whereOf(v)) }.toIndexedSeq
+      else SerialMultilevel.partition(g, k, ubFactor, coarsenTo, stopRatio,
+        seed, nRuns, tgt)
+    // serial metrics (A4 cut; A7 imbalance vs targets) and the F4 restore
+    val pwgt = partWeights(g, whereConn, k)
+    val islWhere = placeIslands(pwgt, isl.map(v => (v._1, v._2(0))), tgt, tv0)
+    val rows = (g.vids.zip(whereConn) ++ isl.map(_._1).zip(islWhere))
+      .sortBy(_._1).toIndexedSeq
     val assign = graft.plans.Plans.checkpoint(
       spark.createDataFrame(rows).toDF("vid", "part")
         .select(col("vid"), col("part").cast("int").as("part")))
-    PartitionResult(assign, cut, imb, nLevels)
+    PartitionResult(assign, InitialPartition.cutOf(g, whereConn),
+      imbalanceOf(pwgt, tgt, tv0), nLevels)
   }
 
   /** Serial refinement of one gathered sub-threshold level (the
     * small-graph dispatch — reference src/eseprefine.c:1060-1097): collect
-    * the level, run the greedy sweep in the driver, re-parallelize.
+    * the level, run the greedy sweep in the driver, re-parallelize, and
+    * sum the cut and part weights over the gathered level (no job).
     * Deterministic: vids sorted, sequential sweep.
     */
   private def serialRefine(spark: SparkSession, lvl: Level,
                            projected: DataFrame, k: Int, ncon: Int,
                            ubFactor: Double,
-                           tgt: Array[Double]): DataFrame = {
+                           tgt: Array[Double]): Refinement.Refined = {
     val (eArr, vArr) = gather(lvl.edges, lvl.vertices)
     val g = InitialPartition.fromEdgesMC(eArr, vArr, ncon)
     val whereMap = projected.collect()
@@ -368,9 +394,22 @@ object Multilevel {
     val where = g.vids.map(whereMap)
     val refined = InitialPartition.refineGreedy(g, k, where, ubFactor,
       targets = tgt)
-    spark.createDataFrame(
-      g.vids.zip(refined).toSeq.map { case (v, p) => (v, p) })
-      .toDF("vid", "part").ckpt()
+    Refinement.Refined(assignOf(spark, g.vids, refined),
+      InitialPartition.cutOf(g, refined), partWeights(g, refined, k))
+  }
+
+  /** A driver-side assignment as a (vid, part) checkpoint. */
+  private def assignOf(spark: SparkSession, vids: Array[Long],
+                       where: Array[Int]): DataFrame =
+    spark.createDataFrame(vids.zip(where).toSeq).toDF("vid", "part").ckpt()
+
+  /** Constraint-0 weight of each of the k parts of a gathered level. */
+  private def partWeights(g: InitialPartition.LocalGraph, where: Array[Int],
+                          k: Int): Array[Long] = {
+    val pw = new Array[Long](k)
+    var v = 0
+    while (v < g.nvtxs) { pw(where(v)) += g.w(v, 0); v += 1 }
+    pw
   }
 
   /** One level in the driver: edges sorted by (src, dst), vertices by vid.
@@ -390,15 +429,13 @@ object Multilevel {
 
   /** max_p pwgt(p) / (targets(p)·tvwgt) — imbalance under target fractions
     * (reference graph_imbalance, src/graph.c:1975-2000, generalized to
-    * tpwgts).
+    * tpwgts) over the driver's constraint-0 part weights; 1.0 for a
+    * weightless graph.
     */
-  private def imbalanceTargets(assign: DataFrame, scalarVerts: DataFrame,
-                               tgt: Array[Double], tv: Long): Double = {
-    val rows = assign.join(scalarVerts, "vid")
-      .groupBy(col("part")).agg(sum(col("vwgt")).as("pw")).collect()
-    rows.map(r => r.getLong(1).toDouble /
-      (tgt(r.get(0).toString.toInt) * tv)).max
-  }
+  private def imbalanceOf(pw: Array[Long], tgt: Array[Double],
+                          tv0: Long): Double =
+    if (tv0 == 0) 1.0
+    else pw.indices.map(p => pw(p).toDouble / (tgt(p) * tv0)).max
 
   /** The island-placement rule shared by both F4 restores: cumulative
     * island-weight bounds that cut the vid-ordered islands into k
@@ -415,15 +452,38 @@ object Multilevel {
       .map(f => math.ceil(f * totalIsland).toLong).toArray
   }
 
-  /** Deficit-proportional island placement: islands (vid-ordered, exact
-    * bucketed cumulative weight) are cut by [[islandBounds]]. Returns a
-    * checkpoint (`coreAssign` itself when there are no islands).
+  /** F4 restore in the driver: the islands `isl` ((vid, weight), vid
+    * order) are cut into k contiguous runs by [[islandBounds]] over the
+    * core part weights `pw`. Returns each island's part and adds the
+    * islands' weights into `pw`.
     */
-  private def restoreIslands(spark: SparkSession, coreAssign: DataFrame,
-                             connected: DataFrame, islands: DataFrame,
-                             k: Int, tgt: Array[Double],
-                             tv: Array[Long]): DataFrame = {
-    // `islands` is an anti-join against the edge table: scan it once
+  private[partitioner] def placeIslands(pw: Array[Long],
+                                        isl: Array[(Long, Long)],
+                                        tgt: Array[Double],
+                                        tv0: Long): Array[Int] = {
+    val cumBounds = islandBounds(pw, tgt, tv0, isl.iterator.map(_._2).sum)
+    var cum = 0L
+    isl.map { case (_, w) =>
+      cum += w
+      var p = 0
+      while (p < pw.length - 1 && cum > cumBounds(p)) p += 1
+      pw(p) += w
+      p
+    }
+  }
+
+  /** [[placeIslands]] for more islands than pass through the driver
+    * ([[GraphOps.broadcastable]]): the same rule over the bucketed
+    * cumulative weight ([[GraphOps.cumDegByVid]]). `islands(vid, vwgts)`;
+    * adds the islands' weights into `pw` and returns the core assignment
+    * with the islands as one checkpoint (`coreAssign` itself when there
+    * are none).
+    */
+  private[partitioner] def restoreIslands(spark: SparkSession,
+                                          coreAssign: DataFrame,
+                                          islands: DataFrame, pw: Array[Long],
+                                          tgt: Array[Double],
+                                          tv0: Long): DataFrame = {
     val iw = islands.select(col("vid"),
       element_at(col("vwgts"), 1).as("deg")).ckpt()
     val agg = iw.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L))).head()
@@ -431,24 +491,19 @@ object Multilevel {
       graft.plans.Plans.unpersist(iw)
       return coreAssign
     }
-    val totalIsland = agg.getLong(1)
-    // per-part weight of the core assignment
-    val pw = new Array[Long](k)
-    coreAssign
-      .join(connected.select(col("vid"),
-        element_at(col("vwgts"), 1).as("w")), "vid")
-      .groupBy(col("part")).agg(sum(col("w")).as("pw")).collect()
-      .foreach(r => pw(r.get(0).toString.toInt) = r.getLong(1))
-    val cumBounds = islandBounds(pw, tgt, tv(0), totalIsland)
+    val cumBounds = islandBounds(pw, tgt, tv0, agg.getLong(1))
     // FULL cumBounds (cum ≤ cumBounds.last == ceil(totalIsland) always
     // holds): passing .init made rangeIdFor's fallback index k-2, so part
     // k-1 never received islands (for k=2, part 1 got none)
     val islandAssign = GraphOps.cumDegByVid(iw)
-      .select(col("vid"),
+      .select(col("vid"), col("deg"),
         GraphOps.rangeIdFor(col("cum"), cumBounds).cast("int").as("part"))
+      .ckpt()
+    islandAssign.groupBy(col("part")).agg(sum(col("deg"))).collect()
+      .foreach(r => pw(r.getInt(0)) += r.getLong(1))
     val full = coreAssign.select(col("vid"), col("part").cast("int").as("part"))
-      .unionByName(islandAssign).ckpt()
-    graft.plans.Plans.unpersist(iw)
+      .unionByName(islandAssign.select(col("vid"), col("part"))).ckpt()
+    graft.plans.Plans.unpersist(iw); graft.plans.Plans.unpersist(islandAssign)
     full
   }
 }

@@ -33,7 +33,8 @@ import graft.operators.GraphOps
   *      always jointly feasible;
   *   6. pwgts re-synced from scratch per pass (S_par_sync_pwgts,
   *      kwayrefine.c:774-807) — consistent by construction in BSP;
-  *   7. keep the best assignment seen (mincut tracking, kwayrefine.c:1186).
+  *   7. keep the best assignment seen (mincut tracking, kwayrefine.c:1186)
+  *      and return it with the cut and part weights its pass measured.
   *
   * Hill-scanning (R2) is not run here: it runs once per V-cycle, on the
   * gathered coarsest graph ([[InitialPartition.hillSweepK]] inside
@@ -45,6 +46,13 @@ import graft.operators.GraphOps
   * default.
   */
 object Refinement {
+
+  /** A refined level: its assignment (a checkpoint), the edge cut of that
+    * assignment over the level's edges and its constraint-0 part weights
+    * (`pwgts(p)`, k exact longs). The V-cycle reports the finest level's
+    * cut and imbalance from these, with no rescan of the graph.
+    */
+  case class Refined(assign: DataFrame, cut: Long, pwgts: Array[Long])
 
   // reference nrefpass (src/ctrl.c:39) and the relative improvement a pass
   // must beat for another pass to run
@@ -68,13 +76,16 @@ object Refinement {
   def refineMC(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                assign0: DataFrame, k: Int, ubFactor: Double = 1.03,
                ncon: Int = 1, targets: Array[Double] = null,
-               nVerts: Long = -1L): DataFrame = {
+               nVerts: Long = -1L): Refined = {
     val tgt = if (targets != null) targets else Array.fill(k)(1.0 / k)
     require(tgt.length == k, s"targets length ${tgt.length} != k=$k")
-    if (vertices.isEmpty) return assign0
-    val sym = GraphOps.symmetrize(edges).repartition(col("src")).persist()
     val vw = vertices.select(col("vid"), col("vwgts")).persist()
     val nV = if (nVerts >= 0) nVerts else vw.count()
+    if (nV == 0) {
+      vw.unpersist()
+      return Refined(assign0, 0L, new Array[Long](k))
+    }
+    val sym = GraphOps.symmetrize(edges).repartition(col("src")).persist()
     def dim(df: DataFrame): DataFrame = GraphOps.dimSide(df, nV)
     def wc(c: Int) = element_at(col("vwgts"), c + 1)
     val tvCols = (0 until ncon).map(c => sum(wc(c)).as(s"t$c"))
@@ -99,7 +110,7 @@ object Refinement {
     // ONE action per pass for both outputs (edge-cut and imbalance under
     // targets): the aggregates ride a tagged union — per-pass driver job
     // count is the BSP loop's fixed cost, so metrics are batched
-    def cutAndImbalance(a: DataFrame): (Long, Double) = {
+    def cutAndImbalance(a: DataFrame): (Long, Array[Long], Double) = {
       val cutDf = edges
         .join(dim(a.select(col("vid").as("src"), col("part").as("sp"))), "src")
         .join(dim(a.select(col("vid").as("dst"), col("part").as("dp"))), "dst")
@@ -113,18 +124,21 @@ object Refinement {
         .map(r => r.getLong(0) -> r.getLong(1))
       val cut = rows.collectFirst { case (-1L, v) => v }.getOrElse(0L)
       val pws = rows.filter(_._1 >= 0)
+      val pw = new Array[Long](k)
+      pws.foreach { case (p, v) => pw(p.toInt) = v }
       val imb = if (pws.isEmpty) 1.0
         else pws.map { case (p, v) => v.toDouble / (tgt(p.toInt) * tv(0)) }.max
-      (cut, imb)
+      (cut, pw, imb)
     }
 
     var best = assign0.select(col("vid"), col("part")).ckpt()
     // a level can arrive over ub: the serial levels above it admit up to
     // ceil(tgt·tv·ub). The floored admit never adds to a part at or over
     // maxW, so a pass stays within max(ub, the arriving imbalance)
-    val (cut0, imb0) = cutAndImbalance(best)
+    val (cut0, pw0, imb0) = cutAndImbalance(best)
     val imbCap = math.max(ubFactor, imb0) + 1e-9
     var bestCut = cut0
+    var bestPw = pw0
 
     // one greedy pass = the reference's two S_right_side phases.
     // Phase-0's checkpoint is folded into phase-1's and released — leaked
@@ -228,7 +242,7 @@ object Refinement {
       val in = cur
       cur = onePass(in)
       if (in ne best) graft.plans.Plans.unpersist(in)
-      val (cut, imb) = cutAndImbalance(cur)
+      val (cut, pw, imb) = cutAndImbalance(cur)
       val better = cut < bestCut && imb <= imbCap
       // convergence stop: keep ANY improvement, but only spend another
       // full-edge-scan pass when this one beat the relative floor
@@ -238,7 +252,7 @@ object Refinement {
       improved = better && cut + (bestCut * MinImpFrac).toLong < bestCut
       if (better) {
         val oldBest = best
-        bestCut = cut; best = cur
+        bestCut = cut; bestPw = pw; best = cur
         if (oldBest ne cur) graft.plans.Plans.unpersist(oldBest)
       }
       Metrics.log("refine_pass", "pass" -> pass, "nvtxs" -> nV, "cut" -> cut,
@@ -247,6 +261,6 @@ object Refinement {
     }
     if (cur ne best) graft.plans.Plans.unpersist(cur)
     sym.unpersist(); vw.unpersist()
-    best
+    Refined(best, bestCut, bestPw)
   }
 }

@@ -119,16 +119,20 @@ object SeparatorRefine {
     // adjacency rows behind a small vertex count), then the ring
     val (gAdj, nAdjE) = ckptCounted(sym.join(
       movableIds.withColumnRenamed("vid", "src"), Seq("src"), "left_semi"))
-    val universe = movableIds
-      .unionByName(gAdj.select(col("dst").as("vid"))).distinct()
     val overE = nAdjE > edgeBound(mg)
-    val nGather = if (overE) 0L else universe.count()
+    // the universe (movable set plus ring) is counted as it materializes
+    // and collected from that checkpoint, not recomputed
+    val univ = if (overE) None else Some(ckptCounted(movableIds
+      .unionByName(gAdj.select(col("dst").as("vid"))).distinct()))
+    val nGather = univ.fold(0L)(_._2)
+    val held = Seq(movableIds, gAdj) ++ univ.map(_._1)
     if (overE || nGather > mg) {
-      Plans.unpersist(movableIds); Plans.unpersist(gAdj)
+      held.foreach(Plans.unpersist)
       return Left(s"separator region $nMovable vtxs / $nAdjE adj rows" +
         (if (overE) "" else s" ($nGather vtxs with its ring)") +
         s" > maxGather $mg")
     }
+    val universe = univ.get._1
     val sideW = sideWeights(w, vwgt)
     val gathered = universe.join(w, "vid").join(vwgt, "vid")
       .select(col("vid"), col("side"), col("vwgt")).collect()
@@ -152,7 +156,7 @@ object SeparatorRefine {
       adjSets(a) += b; adjSets(b) += a
     }
     val adj = adjSets.map(_.toArray.sorted)
-    Plans.unpersist(movableIds); Plans.unpersist(gAdj)
+    held.foreach(Plans.unpersist)
     val before = side.clone()
     sfm1s(side, vw, adj, canMove, sideW, maxSide(sideW.sum))
     if (side.sameElements(before)) return Right(w)

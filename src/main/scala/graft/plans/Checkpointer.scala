@@ -86,7 +86,9 @@ final class Checkpointer(spark: SparkSession, root: String,
         spark.table(t).filter(col("_iter") === iter).drop("_iter")
       } else {
         df.write.mode("overwrite").parquet(dir(step, iter))
-        spark.read.parquet(dir(step, iter))
+        // the frame's own schema: inferring it would read a footer in a
+        // Spark job of its own, once per snapshot
+        spark.read.schema(df.schema).parquet(dir(step, iter))
       }
     // one job: the row count is the sum of the per-partition lineage
     val parts = partitionCounts(back)

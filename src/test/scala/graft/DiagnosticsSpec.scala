@@ -47,11 +47,18 @@ class DiagnosticsSpec extends SparkSpec {
       n
     }
     val kinds = events.map(_.get("event").asText).toSet
-    Seq("coarsen_level", "uncoarsen_level", "refine_pass", "fallback",
-      "memo_derived").foreach(k => assert(kinds(k), s"no $k event in $kinds"))
+    Seq("vcycle_inputs", "coarsen_level", "uncoarsen_level", "refine_pass",
+      "vcycle_result", "fallback", "memo_derived")
+      .foreach(k => assert(kinds(k), s"no $k event in $kinds"))
     val level = events.find(_.get("event").asText == "coarsen_level").get
     assert(level.get("nvtxs").isIntegralNumber &&
       level.get("match_s").isNumber, s"untyped level fields: $level")
+    val inputs = events.find(_.get("event").asText == "vcycle_inputs").get
+    assert(inputs.get("islands").isIntegralNumber &&
+      inputs.get("wall_s").isNumber, s"untyped input fields: $inputs")
+    val result = events.find(_.get("event").asText == "vcycle_result").get
+    assert(Seq("serial_s", "cut_s", "islands_s", "imbalance_s")
+      .forall(f => result.get(f).isNumber), s"untyped result walls: $result")
     val nan = events.find(_.get("event").asText == "diagnostics_spec_nan").get
     assert(nan.get("v").isNull && nan.get("w").isNull)
     assert(events.exists(n => n.get("event").asText == "fallback" &&

@@ -80,20 +80,29 @@ class PartitionerExtSpec extends SparkSpec {
 
   test("distributed result path: reported cut and imbalance recompute (F4)") {
     // serialGraphVertices = 0 skips the whole-graph serial dispatch, so
-    // the islands go through restoreIslands and the finest-level cut is
-    // reported as the final cut
+    // the islands are restored after the V-cycle and the finest level's
+    // cut is reported as the final cut. The finest level refines serially
+    // (4096) or through Refinement.refineMC (0), whose best pass supplies
+    // the cut and the core part weights the islands are placed against
     val (e, vids) = Fixtures.withIslands(120)
     val k = 4
     val v = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
-    val r = Multilevel.partitionMC(spark, edgesDf(e), v, k, ncon = 1,
-      coarsenTo0 = 40, serialGraphVertices = 0L)
-    val parts = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
-    assert(parts.keySet == vids.toSet, "islands must be assigned too")
-    assert(r.cut == GraphOps.edgeCut(edgesDf(e), r.assign))
-    assert(r.cut == Oracles.cut(e, parts))
-    val imb = Oracles.imbalance(parts, vids.map(_ -> 1L).toMap, k)
-    assert(math.abs(r.imbalance - imb) < 1e-12,
-      s"reported ${r.imbalance}, recomputed $imb")
+    for (threshold <- Seq(4096L, 0L)) {
+      val r = Multilevel.partitionMC(spark, edgesDf(e), v, k, ncon = 1,
+        coarsenTo0 = 40, serialRefineThreshold = threshold,
+        serialGraphVertices = 0L)
+      val parts = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
+      assert(parts.keySet == vids.toSet, "islands must be assigned too")
+      assert(r.cut == GraphOps.edgeCut(edgesDf(e), r.assign))
+      assert(r.cut == Oracles.cut(e, parts))
+      val imb = Oracles.imbalance(parts, vids.map(_ -> 1L).toMap, k)
+      assert(math.abs(r.imbalance - imb) < 1e-12,
+        s"threshold $threshold: reported ${r.imbalance}, recomputed $imb")
+      val pw = r.assign.groupBy(col("part")).agg(count(lit(1)).as("pw"))
+        .collect().map(x => x.getLong(1))
+      assert(math.abs(r.imbalance - pw.max.toDouble * k / vids.size) < 1e-12,
+        s"threshold $threshold: part weights ${pw.mkString(",")}")
+    }
   }
 
   test("refinement respects the min-weight floor") {
@@ -101,7 +110,7 @@ class PartitionerExtSpec extends SparkSpec {
     val vids = Fixtures.vertsOf(e)
     val vw = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
     val bad = assignDf(vids.map(v => v -> (v % 2).toInt).toMap)
-    val refined = Refinement.refineMC(spark, edgesDf(e), vw, bad, k = 2)
+    val refined = Refinement.refineMC(spark, edgesDf(e), vw, bad, k = 2).assign
     val pw = refined.groupBy(col("part")).count().collect()
       .map(r => r.getLong(1))
     // target 8, ub 1.03: floor(8/1.03)=7, ceil(8*1.03)=9 (the admit cap
@@ -127,12 +136,14 @@ class PartitionerExtSpec extends SparkSpec {
     val vw = vertsDf(vids).select(col("vid"), array(lit(1L)).as("vwgts"))
     val a0 = assignDf(vids.map(v => v -> (if (v < 49L) 0 else 1)).toMap)
     assert(Oracles.cut(e, vids.map(v => v -> (if (v < 49L) 0 else 1)).toMap) == 6)
-    val out = Refinement.refineMC(spark, edgesDf(e), vw, a0, k = 2)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val r = Refinement.refineMC(spark, edgesDf(e), vw, a0, k = 2)
+    val out = r.assign.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     assert(out.keySet == vids.toSet, "totality")
     val imb = Oracles.imbalance(out, vids.map(_ -> 1L).toMap, 2)
     assert(imb <= 1.03 + 1e-9, s"imbalance $imb over ub")
     assert(Oracles.cut(e, out) == 4, s"the pass must be kept: cut ${Oracles.cut(e, out)}")
+    assert(r.cut == 4 && r.pwgts.toSeq == Seq(51L, 49L),
+      s"reported cut ${r.cut}, part weights ${r.pwgts.mkString(",")}")
   }
 
   test("refineMC keeps a pass on a level that arrives over ub") {
@@ -151,7 +162,7 @@ class PartitionerExtSpec extends SparkSpec {
     val a0 = vids.map(v => v -> start(v)).toMap
     assert(Oracles.cut(e, a0) == 2)
     val out = Refinement.refineMC(spark, edgesDf(e), vw, assignDf(a0), k = 4)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      .assign.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val imb = Oracles.imbalance(out, vids.map(_ -> 1L).toMap, 4)
     assert(imb <= 1.04 + 1e-9, s"imbalance $imb over the arriving 1.04")
     assert(Oracles.cut(e, out) == 1, s"the pass must be kept: cut ${Oracles.cut(e, out)}")

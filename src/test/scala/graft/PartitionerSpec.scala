@@ -205,10 +205,12 @@ class PartitionerSpec extends SparkSpec {
     // deliberately bad but balanced start: odd/even interleave, cut = 18
     val bad = assignDf(vids.map(v => v -> (v % 2).toInt).toMap)
     val cut0 = GraphOps.edgeCut(edgesDf(e), bad)
-    val refined = Refinement.refineMC(spark, edgesDf(e),
+    val r = Refinement.refineMC(spark, edgesDf(e),
       vw.select(col("vid"), array(col("vwgt")).as("vwgts")), bad, k = 2)
+    val refined = r.assign
     val cut1 = GraphOps.edgeCut(edgesDf(e), refined)
     assert(cut1 <= cut0, s"refinement must not worsen the cut ($cut0 -> $cut1)")
+    assert(r.cut == cut1, s"reported cut ${r.cut}, recomputed $cut1")
     assert(GraphOps.imbalance(refined, vw, 2) <= 1.03 + 2.0 / 16 + 1e-9)
     assert(refined.count() == 16, "assignment stays total")
   }
