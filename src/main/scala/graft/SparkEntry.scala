@@ -74,7 +74,7 @@ object SparkEntry {
     val dir = "/root/testdata/sf0.001"
     val edges = EventsGraph.edges(spark, dir)
     val verts = EventsGraph.vertices(spark, dir)
-    PageRank.fixedIterations(edges, verts, 0.85, 5)
+    PageRank.run(spark, edges, verts, 0.85, maxIter = 5, tol = 0.0).ranks
       .orderBy(col("rank").desc).limit(10)
   }
 
@@ -158,8 +158,8 @@ object SparkEntry {
     },
     // ---- analytics (north rule item 2) ----
     "q_pagerank" -> ((s, d) =>
-      PageRank.fixedIterations(EventsGraph.edges(s, d),
-          EventsGraph.vertices(s, d), 0.85, 5)
+      PageRank.run(s, EventsGraph.edges(s, d), EventsGraph.vertices(s, d),
+          0.85, maxIter = 5, tol = 0.0).ranks
         .select(col("vid"), round(col("rank"), 9).as("rank"))),
     "q_pagerank_direct" -> { (s, d) =>
       // single-exchange block loop (CsrDirect) over edge-granular balanced
@@ -410,9 +410,8 @@ object SparkEntry {
       GraphOps.intExtCounts(e, a)
     },
     // J7+R3: boundary-subgraph extraction + serial FM on a bisection.
-    // Gate: totality + the FM invariant cut_after <= cut_before (computed
-    // by Spark over its own assignments; the oracle predicts totality and
-    // TRUE)
+    // Gate: totality, the cut of the pmod(vid, 2) start (recomputed by the
+    // oracle) and the FM invariant cut_after <= cut_before against it
     "q_boundary_fm" -> { (s, d) =>
       val e = EventsGraph.edges(s, d)
       val v = EventsGraph.vertices(s, d).withColumn("vwgt", lit(1L))
@@ -424,6 +423,7 @@ object SparkEntry {
       val c1 = GraphOps.edgeCut(e, a1)
       a1.agg(count(lit(1)).as("n_assigned"),
           countDistinct(col("vid")).as("n_distinct"))
+        .withColumn("cut_before", lit(c0))
         .withColumn("cut_not_worse", lit(c1 <= c0))
     },
     "q_partition_quality" -> { (s, d) =>
@@ -722,8 +722,12 @@ object SparkEntry {
          |FROM v LEFT JOIN ext ON v.vid = ext.vid
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q_boundary_fm" ->
-      s"""$NCte
-        |SELECT n AS n_assigned, n AS n_distinct, TRUE AS cut_not_worse FROM n""".stripMargin,
+      s"""$NCte,
+        |e_canon AS ($EC),
+        |cut AS (SELECT CAST(COALESCE(SUM(wgt), 0) AS BIGINT) AS cut_before
+        |        FROM e_canon WHERE src % 2 <> dst % 2)
+        |SELECT n AS n_assigned, n AS n_distinct, cut.cut_before,
+        |       TRUE AS cut_not_worse FROM n, cut""".stripMargin,
     "q_embed_neardup" -> {
       val bucketExpr = (0 until 8).map(j =>
         s"(CASE WHEN embedding[tno*8+${j + 1}] > 0 THEN ${1L << j} ELSE 0 END)")

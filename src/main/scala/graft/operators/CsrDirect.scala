@@ -14,10 +14,13 @@ import org.apache.spark.sql.functions._
   *
   *   kernel+update (one stage): merge incoming contribution arrays
   *   (producer-block order — deterministic double sums), apply the damping
-  *   update rank = (1-d)/n + d·contrib IN PLACE, divide by the global
+  *   update rank = r_t + d·contrib IN PLACE, divide by the global
   *   weighted degree, scatter-add through the destination-tiled edge
   *   arrays, and emit one dense double[] per consumer block via
-  *   precomputed index routing.
+  *   precomputed index routing. r_t, iteration t's damping base, carries
+  *   the dangling mass of the isolated vertices: the driver computes it
+  *   ([[PageRank.isolatedRanks]], the same recurrence [[PageRank.run]]
+  *   uses), and the kernel closes over the `iters` values.
   *
   * A row/column decomposition (ranks in hash partitions) pays TWO
   * exchanges per iteration — rank shares to the blocks, contributions
@@ -30,9 +33,10 @@ import org.apache.spark.sql.functions._
   * owning block, and each owner merges the identical sorted stream, so
   * split copies agree bit-for-bit.
   *
-  * PageRankSpec gates this kernel against the dense in-JVM oracle and
-  * [[PageRank.fixedIterations]]; q_pagerank_direct gates it against the
-  * DuckDB oracle.
+  * The two engines compute the same function on every input, isolated
+  * vertices included. PageRankSpec gates this kernel against the dense
+  * in-JVM oracle and [[PageRank.run]]; q_pagerank_direct gates it against
+  * the DuckDB oracle.
   */
 object CsrDirect {
 
@@ -65,9 +69,17 @@ object CsrDirect {
                                recvBlocks: Array[Int], recvIdx: Array[Array[Int]],
                                primary: Array[Int])
 
-  final case class DirectState(blockStates: RDD[DirectBlock], n: Long, nBlocks: Int) {
+  /** `n` counts every vertex, `nIso` those that own no block slot. */
+  final case class DirectState(blockStates: RDD[DirectBlock], n: Long, nBlocks: Int,
+                               nIso: Long) {
     def unpersistAll(): Unit = GraftSqlInternals.releaseCheckpoint(blockStates)
   }
+
+  /** The connected vertices of checkpointed `blockStates`, one primary slot
+    * each; the job also materializes the checkpoint.
+    */
+  private def connected(blockStates: RDD[DirectBlock]): Long =
+    blockStates.map(_.primary.length.toLong).fold(0L)(_ + _)
 
   // ---- state spill/restore (raw big-endian array dump — ByteBuffer's
   // default order; self-consistent round-trip only, LOCAL-mode scaling
@@ -184,8 +196,7 @@ object CsrDirect {
         }
       }
       .localCheckpoint()
-    rdd.count()
-    DirectState(rdd, n, nBlocks)
+    DirectState(rdd, n, nBlocks, n - connected(rdd))
   }
 
   /** Large-graph entry point: edge-balanced blocks ([[Csr.buildBalanced]])
@@ -197,8 +208,8 @@ object CsrDirect {
 
   /** Routing state over `blocks` as [[Csr.build]]/[[Csr.buildBalanced]]
     * return them (one partition per block id). `vertices` supplies the
-    * FULL vertex set (isolated vertices included): the damping base
-    * (1-d)/n counts them.
+    * FULL vertex set (isolated vertices included): n and the dangling mass
+    * count them.
     */
   def prepare(blocks: RDD[(Int, Csr.Block)], vertices: DataFrame): DirectState = {
     val nBlocks = blocks.getNumPartitions
@@ -290,10 +301,10 @@ object CsrDirect {
         Iterator(db.copy(primary = prim))
       }
     }.localCheckpoint()
-    blockStates.count()
+    val nIso = nTotal - connected(blockStates)
     GraftSqlInternals.releaseCheckpoint(bRdd)
     GraftSqlInternals.releaseCheckpoint(routes)
-    DirectState(blockStates, nTotal, nBlocks)
+    DirectState(blockStates, nTotal, nBlocks, nIso)
   }
 
   /** The per-block state threaded between iterations: the contribution
@@ -309,10 +320,11 @@ object CsrDirect {
   def iterate(st: DirectState, damping: Double, iters: Int): RDD[(Int, Array[Double])] = {
     val idB = new IdPartitioner(st.nBlocks)
     val n = st.n
-    val base = (1.0 - damping) / n
+    // r_0..r_iters: iteration t's damping base, with the dangling mass
+    val base = PageRank.isolatedRanks(n, st.nIso, damping).take(iters + 1).toArray
 
     // contrib merged in producer-blockId order → deterministic double sums
-    def mergedRanks(db: DirectBlock, mIt: Iterator[Msg]): Array[Double] = {
+    def mergedRanks(db: DirectBlock, mIt: Iterator[Msg], bt: Double): Array[Double] = {
       val contrib = new Array[Double](db.block.nvtxs)
       val rows = mIt.toArray.sortBy(_._2._1)
       val rpos = new java.util.HashMap[Integer, Integer]()
@@ -327,7 +339,7 @@ object CsrDirect {
       }
       val rk = new Array[Double](db.block.nvtxs)
       var i = 0
-      while (i < rk.length) { rk(i) = base + damping * contrib(i); i += 1 }
+      while (i < rk.length) { rk(i) = bt + damping * contrib(i); i += 1 }
       rk
     }
 
@@ -370,21 +382,23 @@ object CsrDirect {
         kernelOut(db, Array.fill(db.block.nvtxs)(1.0 / n))
       }
     }.partitionBy(idB)
-    for (_ <- 2 to iters) {
+    for (t <- 1 until iters) {
+      val bt = base(t)
       msgs = st.blockStates.zipPartitions(msgs) { (bIt, mIt) =>
         if (!bIt.hasNext) { mIt.foreach(_ => ()); Iterator.empty }
         else {
           val db = bIt.next()
-          kernelOut(db, mergedRanks(db, mIt))
+          kernelOut(db, mergedRanks(db, mIt, bt))
         }
       }.partitionBy(idB)
     }
     // final damping update, no further push
+    val bLast = base(iters)
     st.blockStates.zipPartitions(msgs) { (bIt, mIt) =>
       if (!bIt.hasNext) { mIt.foreach(_ => ()); Iterator.empty }
       else {
         val db = bIt.next()
-        Iterator((db.block.blockId, mergedRanks(db, mIt)))
+        Iterator((db.block.blockId, mergedRanks(db, mIt, bLast)))
       }
     }
   }
@@ -403,18 +417,17 @@ object CsrDirect {
         }
     }
 
-  /** (vid, rank) DataFrame over ALL vertices: isolated vertices get the
-    * damping base.
+  /** (vid, rank) DataFrame over ALL vertices after `iters` iterations:
+    * isolated vertices get r_iters ([[PageRank.isolatedRanks]]).
     */
   def toRanksDf(spark: SparkSession, st: DirectState, damping: Double,
-                blockRanks: RDD[(Int, Array[Double])],
-                vertices: DataFrame): DataFrame = {
+                iters: Int, vertices: DataFrame): DataFrame = {
     import spark.implicits._
-    val connected = ranks(st, blockRanks).toDF("vid", "rank")
+    val connected = ranks(st, iterate(st, damping, iters)).toDF("vid", "rank")
+    val rIso = PageRank.isolatedRanks(st.n, st.nIso, damping)(iters)
     vertices.select(col("vid")).distinct()
       .join(connected, Seq("vid"), "left")
-      .select(col("vid"),
-        coalesce(col("rank"), lit((1.0 - damping) / st.n)).as("rank"))
+      .select(col("vid"), coalesce(col("rank"), lit(rIso)).as("rank"))
   }
 
   /** End-to-end wrapper: blocks → `iters` iterations → (vid, rank) rows
@@ -425,8 +438,7 @@ object CsrDirect {
                iters: Int = 10): DataFrame = {
     import graft.plans.Plans.CheckpointOps
     val st = prepare(blocks, vertices)
-    val out = toRanksDf(spark, st, damping, iterate(st, damping, iters),
-      vertices).ckpt()
+    val out = toRanksDf(spark, st, damping, iters, vertices).ckpt()
     st.unpersistAll()
     out
   }

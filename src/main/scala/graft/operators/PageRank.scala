@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Plans
 import graft.plans.Plans.CheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,6 +11,9 @@ import graft.plans.Checkpointer
   *   contrib(v) = Σ_{(u,v) ∈ E} rank(u) · w(u,v) / wdeg(u)
   *   rank'(v)   = (1-d)/N + d · (contrib(v) + danglingMass/N)
   *
+  * The dangling mass is the rank the isolated vertices hold (no out-edges
+  * in an undirected graph); [[isolatedRanks]] gives it without a Spark job.
+  *
   * Scale design (SURVEY §4): the big side (symmetrized edges ⋈ wdeg) is
   * hash-partitioned on `src` ONCE and cached; each iteration only shuffles
   * the small rank table to meet it, then shuffles contributions by `dst`
@@ -21,6 +23,19 @@ import graft.plans.Checkpointer
 object PageRank {
 
   case class Result(ranks: DataFrame, iterations: Int, residual: Double)
+
+  /** r_t, the rank each of the `nIso` isolated vertices of an `n`-vertex
+    * graph holds after t iterations. They all hold the same rank, so the
+    * dangling mass of iteration t is nIso·r_t and
+    *
+    *   r_0 = 1/n,  r_{t+1} = (1-d)/n + d·nIso·r_t/n.
+    *
+    * r_t is also the damping base of iteration t: rank_t(v) = r_t +
+    * d·contrib_t(v). Both engines, this loop and [[CsrDirect]], take it from
+    * here. With no isolated vertex every r_t (t ≥ 1) is exactly (1-d)/n.
+    */
+  def isolatedRanks(n: Long, nIso: Long, damping: Double): LazyList[Double] =
+    LazyList.iterate(1.0 / n)(r => (1 - damping) / n + damping * nIso * r / n)
 
   /** Power iteration until the L1 residual is `<= tol` or `maxIter`
     * iterations have run (`tol = 0` runs all of them). With `ckpt`, every
@@ -37,35 +52,33 @@ object PageRank {
       .repartition(numParts, col("vid")).persist()
     val n = verts.count()
     // out-weighted adjacency, partitioned once on the join key and cached
-    val wdeg = GraphOps.symmetrize(edges)
-      .groupBy(col("src")).agg(sum(col("wgt")).as("wdeg"))
-    val adj = GraphOps.symmetrize(edges).join(wdeg, "src")
+    val sym = GraphOps.symmetrize(edges)
+    val wdeg = sym.groupBy(col("src")).agg(sum(col("wgt")).as("wdeg"))
+    val adj = sym.join(wdeg, "src")
       .select(col("src"), col("dst"), (col("wgt").cast("double") / col("wdeg")).as("share"))
       .repartition(numParts, col("src"))
       .persist()
-    adj.count() // materialize
+    // the vertices with no out-edge; the anti join reads every partition
+    // of adj, so this count also materializes it
+    val nIso = verts.join(adj.select(col("src").as("vid")), Seq("vid"), "left_anti")
+      .count()
+    // recomputed from r_0 on resume: no snapshot is read for it
+    val iso = isolatedRanks(n, nIso, damping)
 
     val init = verts.withColumn("rank", lit(1.0 / n))
       .repartition(numParts, col("vid")).ckpt()
     val (ranks, iters, residual) =
-      Checkpointer.iterate(ckpt, "pagerank", init, maxIter, tol) { (ranks, _) =>
+      Checkpointer.iterate(ckpt, "pagerank", init, maxIter, tol) { (ranks, i) =>
         val contribs = adj
           .join(ranks.withColumnRenamed("vid", "src"), "src")
           .groupBy(col("dst").as("vid"))
           .agg(sum(col("rank") * col("share")).as("contrib"))
-        // dangling mass: vertices with no out-edges (isolated in an
-        // undirected graph) redistribute uniformly
-        val dangling = ranks.join(wdeg.withColumnRenamed("src", "vid"),
-            Seq("vid"), "left_anti")
-          .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
         // checkpointed: left lazy, the plan grows one join layer per
         // iteration and AQE re-renders the whole stack on every replan
         val next = verts
           .join(contribs, Seq("vid"), "left")
           .select(col("vid"),
-            (lit((1 - damping) / n) +
-              lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dangling / n))
-            ).as("rank"))
+            (lit(iso(i)) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
           .repartition(numParts, col("vid")).ckpt()
         (next, next.join(ranks.withColumnRenamed("rank", "prev"), "vid")
           .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0))
@@ -74,44 +87,11 @@ object PageRank {
     Result(ranks.select(col("vid"), col("rank")), iters, residual)
   }
 
-  /** Fixed-iteration PR used for the DuckDB-oracle parity queries: exactly
-    * `iters` iterations, no early stop, no dangling handling when the graph
-    * has no isolated vertices in `vertices`.
-    */
-  def fixedIterations(edges: DataFrame, vertices: DataFrame,
-                      damping: Double, iters: Int): DataFrame = {
-    // materialized once (joined into every iteration — see run())
-    val verts = vertices.select(col("vid")).distinct().ckpt()
-    val n = verts.count()
-    val wdeg = GraphOps.symmetrize(edges)
-      .groupBy(col("src")).agg(sum(col("wgt")).as("wdeg"))
-    val adj = GraphOps.symmetrize(edges).join(wdeg, "src")
-      .select(col("src"), col("dst"),
-        (col("wgt").cast("double") / col("wdeg")).as("share"))
-      .persist()
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iters) {
-      val contribs = adj
-        .join(ranks.withColumnRenamed("vid", "src"), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(sum(col("rank") * col("share")).as("contrib"))
-      val next = verts.join(contribs, Seq("vid"), "left")
-        .select(col("vid"),
-          (lit((1 - damping) / n) +
-            lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .ckpt()
-      Plans.unpersist(ranks) // superseded round (a no-op on the initial frame)
-      ranks = next
-    }
-    adj.unpersist()
-    // zero iterations return the initial frame, which reads verts lazily
-    if (iters > 0) Plans.unpersist(verts)
-    ranks
-  }
-
-  /** DuckDB SQL for [[fixedIterations]]: iterations unrolled as chained
-    * CTEs over an edge-table CTE `edges(src,dst,wgt)` and vertex CTE
-    * `verts(vid)` that the caller supplies as SQL text.
+  /** DuckDB SQL for [[run]] with `tol = 0` over a graph with no isolated
+    * vertex (the gate graphs have none, so it has no dangling term):
+    * iterations unrolled as chained CTEs over an edge-table CTE
+    * `edges(src,dst,wgt)` and vertex CTE `verts(vid)` that the caller
+    * supplies as SQL text.
     */
   def oracleSql(edgesCte: String, vertsCte: String, damping: Double,
                 iters: Int, roundTo: Int): String = {

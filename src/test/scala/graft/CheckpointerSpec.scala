@@ -136,8 +136,6 @@ class CheckpointerSpec extends SparkSpec {
       "hashMinIterations")
     assert(iters.map(i => leftPersisted(LabelPropagation.run(edgesDf(e),
       vertsDf(verts), i))) == Seq(1, 1), "LabelPropagation")
-    assert(iters.map(i => leftPersisted(PageRank.fixedIterations(edgesDf(e),
-      vertsDf(verts), 0.85, i))) == Seq(1, 1), "fixedIterations")
   }
 
   test("Iceberg backend selection: catalog-configured gates writeTo path") {

@@ -25,14 +25,22 @@ class PageRankSpec extends SparkSpec {
     "star17" -> Fixtures.star17, "twoCliques" -> Fixtures.twoCliques,
     "grid4x4" -> Fixtures.grid4x4, "zipf200" -> Fixtures.zipf(200))
 
-  test("fixedIterations matches dense oracle to 1e-6 on all fixtures") {
-    for ((name, e) <- cases) {
-      val verts = Fixtures.vertsOf(e)
-      val got = collectRanks(
-        PageRank.fixedIterations(edgesDf(e), vertsDf(verts), 0.85, 8))
-      val want = Oracles.pageRank(e, verts, 0.85, 8)
-      assertClose(got, want)
-      assert(math.abs(got.values.sum - 1.0) < 1e-6, s"$name ranks must sum to 1")
+  /** `iters` fixed iterations of the DataFrame loop, no checkpointer. */
+  private def runRanks(e: Seq[(Long, Long, Long)], verts: Seq[Long],
+                       iters: Int): Map[Long, Double] =
+    collectRanks(PageRank.run(spark, edgesDf(e), vertsDf(verts), 0.85,
+      maxIter = iters, tol = 0.0, numParts = 4).ranks)
+
+  private def assertSumsToOne(ranks: Map[Long, Double], what: String): Unit =
+    assert(math.abs(ranks.values.sum - 1.0) <= 1e-9,
+      s"$what: ranks sum to ${ranks.values.sum}")
+
+  test("run(tol = 0) matches the dense oracle on all fixtures, plus one isolated vertex") {
+    for ((name, e) <- cases; verts <- Seq(Fixtures.vertsOf(e), Fixtures.vertsOf(e) :+ 9999L)) {
+      val what = s"$name (${verts.size} vertices)"
+      val got = runRanks(e, verts, 8)
+      withClue(s"$what: ")(assertClose(got, Oracles.pageRank(e, verts, 0.85, 8)))
+      assertSumsToOne(got, what)
     }
   }
 
@@ -41,7 +49,7 @@ class PageRankSpec extends SparkSpec {
     val res = PageRank.run(spark, edgesDf(e), vertsDf(verts),
       damping = 0.85, maxIter = 12, tol = 0.0)
     val got = collectRanks(res.ranks)
-    val want = Oracles.pageRank(e, verts, 0.85, 12, dangling = true)
+    val want = Oracles.pageRank(e, verts, 0.85, 12)
     assertClose(got, want)
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
     assert(res.iterations == 12)
@@ -74,32 +82,31 @@ class PageRankSpec extends SparkSpec {
     for ((name, e) <- cases) {
       val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
       val want = Oracles.pageRank(e, verts, 0.85, 8)
+      val df = runRanks(e, verts, 8)
       val bounds = GraphOps.edgeBalancedRanges(edgesDf(e), 4)
-      withClue(s"$name vid ranges: ")(assertClose(collectRanks(
-        CsrDirect.pageRank(spark, Csr.build(edgesDf(e), bounds),
-          vertsDf(verts), 0.85, 8)), want))
       // edge-granular layout splits hubs but must compute the same function
-      withClue(s"$name balanced: ")(assertClose(collectRanks(
-        CsrDirect.pageRank(spark, Csr.buildBalanced(edgesDf(e), 4),
-          vertsDf(verts), 0.85, 8)), want))
+      for ((layout, blocks) <- Seq(
+          "vid ranges" -> Csr.build(edgesDf(e), bounds),
+          "balanced" -> Csr.buildBalanced(edgesDf(e), 4))) {
+        val got = collectRanks(CsrDirect.pageRank(spark, blocks, vertsDf(verts), 0.85, 8))
+        withClue(s"$name $layout: ")(assertClose(got, want))
+        // the DataFrame loop spreads the isolated vertex's mass the same way
+        withClue(s"$name $layout vs run: ")(assertClose(got, df, tol = 1e-9))
+        assertSumsToOne(got, s"$name $layout")
+      }
     }
   }
 
   test("single-exchange path (CsrDirect) computes the same ranks") {
-    for ((name, e) <- cases) {
-      val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-      // the large-graph entry point (prepareRows → iterate → toRanksDf)
-      val st = CsrDirect.prepareRows(spark, edgesDf(e),
-        vertsDf(verts), numBlocks = 4)
-      val got = collectRanks(
-        CsrDirect.toRanksDf(spark, st, 0.85,
-          CsrDirect.iterate(st, 0.85, 8), vertsDf(verts)))
-      st.unpersistAll()
-      // the DataFrame semantic reference: no dangling redistribution, so an
-      // isolated vertex holds the damping base in both engines
-      withClue(s"$name vs fixedIterations: ")(assertClose(got, collectRanks(
-        PageRank.fixedIterations(edgesDf(e), vertsDf(verts), 0.85, 8))))
-    }
+    // 5 isolated vertices: the dangling mass is a share of every update
+    val (e, verts) = Fixtures.withIslands(100)
+    // the large-graph entry point (prepareRows → iterate → toRanksDf)
+    val st = CsrDirect.prepareRows(spark, edgesDf(e), vertsDf(verts), numBlocks = 4)
+    assert(st.nIso == 5)
+    val got = collectRanks(CsrDirect.toRanksDf(spark, st, 0.85, 8, vertsDf(verts)))
+    st.unpersistAll()
+    assertClose(got, runRanks(e, verts, 8), tol = 1e-9)
+    assertSumsToOne(got, "withIslands")
   }
 
   test("a block whose dictionary spans 2 tiles: srcT ascends per tile, ranks match the oracle") {
@@ -128,22 +135,21 @@ class PageRankSpec extends SparkSpec {
 
   test("CsrDirect state save/load round-trip is bit-exact") {
     val e = Fixtures.zipf(300)
-    val verts = Fixtures.vertsOf(e)
+    val verts = Fixtures.vertsOf(e) ++ Seq(9997L, 9998L, 9999L) // 3 isolated
     val st = CsrDirect.prepareRows(spark, edgesDf(e),
       vertsDf(verts), numBlocks = 4)
-    val want = collectRanks(
-      CsrDirect.toRanksDf(spark, st, 0.85,
-        CsrDirect.iterate(st, 0.85, 6), vertsDf(verts)))
+    val want = collectRanks(CsrDirect.toRanksDf(spark, st, 0.85, 6, vertsDf(verts)))
     val dir = java.nio.file.Files.createTempDirectory("graft-dstate")
       .toString
     CsrDirect.saveState(st, dir)
     st.unpersistAll()
     val st2 = CsrDirect.loadState(spark, dir)
-    assert(st2.n == st.n && st2.nBlocks == st.nBlocks)
-    val got = collectRanks(
-      CsrDirect.toRanksDf(spark, st2, 0.85,
-        CsrDirect.iterate(st2, 0.85, 6), vertsDf(verts)))
+    // the isolated count comes back from the blocks, not the meta line
+    assert(st2.n == st.n && st2.nBlocks == st.nBlocks && st2.nIso == 3)
+    val got = collectRanks(CsrDirect.toRanksDf(spark, st2, 0.85, 6, vertsDf(verts)))
     st2.unpersistAll()
     assert(got == want, "loaded state must reproduce ranks bit-exactly")
+    assertClose(got, runRanks(e, verts, 6), tol = 1e-9)
+    assertSumsToOne(got, "loaded state")
   }
 }

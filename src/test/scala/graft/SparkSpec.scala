@@ -113,12 +113,12 @@ object Oracles {
       edges.map(e => (e._2, (e._1, e._3))))
       .groupBy(_._1).map { case (v, g) => v -> g.map(_._2) }
 
-  /** Power-iteration PageRank, same recurrence as PageRank.fixedIterations:
-    * rank'(v) = (1-d)/N + d·Σ share; optional dangling redistribution
-    * (isolated vertices) matching PageRank.run.
+  /** Power-iteration PageRank, the function PageRank.run and CsrDirect
+    * compute: rank'(v) = (1-d)/N + d·(Σ share + dmass/N), where the
+    * dangling mass dmass is the rank the isolated vertices hold.
     */
-  def pageRank(edges: Edges, verts: Seq[Long], damping: Double, iters: Int,
-               dangling: Boolean = false): Map[Long, Double] = {
+  def pageRank(edges: Edges, verts: Seq[Long], damping: Double,
+               iters: Int): Map[Long, Double] = {
     val a = adj(edges)
     val wdeg = a.map { case (v, ns) => v -> ns.map(_._2).sum.toDouble }
     val n = verts.size
@@ -128,8 +128,7 @@ object Oracles {
         .withDefaultValue(0.0)
       for ((u, ns) <- a; (v, w) <- ns)
         contrib(v) += rank(u) * w / wdeg(u)
-      val dmass =
-        if (dangling) verts.filterNot(a.contains).map(rank).sum else 0.0
+      val dmass = verts.filterNot(a.contains).map(rank).sum
       rank = verts.map(v => v ->
         ((1 - damping) / n + damping * (contrib(v) + dmass / n))).toMap
     }
