@@ -74,8 +74,8 @@ object SparkEntry {
     val dir = "/root/testdata/sf0.001"
     val edges = EventsGraph.edges(spark, dir)
     val verts = EventsGraph.vertices(spark, dir)
-    PageRank.run(spark, edges, verts, 0.85, maxIter = 5, tol = 0.0).ranks
-      .orderBy(col("rank").desc).limit(10)
+    PageRank.run(spark, edges, verts, 0.85, maxIter = 5, tol = 0.0,
+      numParts = spark.sparkContext.defaultParallelism).ranks.orderBy(col("rank").desc).limit(10)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -158,8 +158,9 @@ object SparkEntry {
     },
     // ---- analytics (north rule item 2) ----
     "q_pagerank" -> ((s, d) =>
-      PageRank.run(s, EventsGraph.edges(s, d), EventsGraph.vertices(s, d),
-          0.85, maxIter = 5, tol = 0.0).ranks
+      // one partition per core: the default 32 doubles this gate's wall
+      PageRank.run(s, EventsGraph.edges(s, d), EventsGraph.vertices(s, d), 0.85,
+          maxIter = 5, tol = 0.0, numParts = s.sparkContext.defaultParallelism).ranks
         .select(col("vid"), round(col("rank"), 9).as("rank"))),
     "q_pagerank_direct" -> { (s, d) =>
       // single-exchange block loop (CsrDirect) over edge-granular balanced

@@ -98,13 +98,23 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("single-exchange path (CsrDirect) computes the same ranks") {
+    // the large-graph entry point (prepareRows → iterate → toRanksDf)
+    def direct(e: Seq[(Long, Long, Long)], verts: Seq[Long], nIso: Long): Map[Long, Double] = {
+      val st = CsrDirect.prepareRows(spark, edgesDf(e), vertsDf(verts), numBlocks = 4)
+      assert(st.nIso == nIso)
+      val got = collectRanks(CsrDirect.toRanksDf(spark, st, 0.85, 8, vertsDf(verts)))
+      st.unpersistAll()
+      got
+    }
+    for ((name, e) <- cases) {
+      val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
+      val got = direct(e, verts, nIso = 1)
+      withClue(s"$name: ")(assertClose(got, Oracles.pageRank(e, verts, 0.85, 8)))
+      assertSumsToOne(got, name)
+    }
     // 5 isolated vertices: the dangling mass is a share of every update
     val (e, verts) = Fixtures.withIslands(100)
-    // the large-graph entry point (prepareRows → iterate → toRanksDf)
-    val st = CsrDirect.prepareRows(spark, edgesDf(e), vertsDf(verts), numBlocks = 4)
-    assert(st.nIso == 5)
-    val got = collectRanks(CsrDirect.toRanksDf(spark, st, 0.85, 8, vertsDf(verts)))
-    st.unpersistAll()
+    val got = direct(e, verts, nIso = 5)
     assertClose(got, runRanks(e, verts, 8), tol = 1e-9)
     assertSumsToOne(got, "withIslands")
   }
